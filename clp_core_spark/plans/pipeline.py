@@ -27,6 +27,8 @@ deltas, wall time, turns/sec — CLP's archive metadata rows
 from __future__ import annotations
 
 import json
+import os
+import threading
 import time
 
 import pyspark.sql.functions as F
@@ -47,6 +49,32 @@ LEDGER_SCHEMA = (
 
 
 class IngestPipeline:
+    """Ingest into, and search, one archive under ``work_root``.
+
+    Archive open: the read paths (``epochs_for_range``, ``read_sink``,
+    ``search``, ``count_by_time``, ``decompress_to_text``) open the
+    archive once per pipeline object, as CLP opens an archive once per
+    search session (its DictionaryReader keeps both dictionaries in
+    memory, Grep.cpp:477-495). Each piece of open state is built on first
+    use and kept: the committed epoch spans, the sink DataFrame per
+    (kind, epochs), the dictionary DataFrames and the var-dict size.
+    Because every request gets the same dictionary DataFrame objects,
+    the driver copy of the logtype dict and the var-dict broadcast
+    (cached on those objects by the search and decode operators) are
+    reused across requests.
+
+    Version: the open state belongs to one archive version, the sorted
+    file names under ``{work_root}/ledger``, read without a Spark job.
+    The ledger append is the commit point and comes after the dictionary
+    swap, the ts_index append and the sink writes, so an unchanged
+    version means nothing has committed since the state was built; any
+    other version (another pipeline committed an epoch, or the root was
+    removed and re-ingested) drops all of it. Global dictionaries are
+    swapped before the commit, so their file names are part of the
+    version too: an ingest that crashed after the swap must not leave an
+    open dictionary pointing at deleted files. Ingest always reads the
+    dictionaries it grows afresh."""
+
     def __init__(
         self,
         spark: SparkSession,
@@ -110,8 +138,6 @@ class IngestPipeline:
         # analog of `clp ... --tags` archive tagging; search prunes by
         # them BEFORE dispatch (scheduler/query/query_scheduler.py:381-386)
         self.tags = list(tags) if tags else []
-        import threading
-
         self._meta_lock = threading.Lock()  # serializes ledger/ts_index appends
         self.ledger_path = f"{work_root}/ledger"
         self.tags_path = f"{work_root}/tags"
@@ -120,6 +146,53 @@ class IngestPipeline:
         self.sinks_root = f"{work_root}/sinks"
         self.glt_root = f"{work_root}/glt"
         self.store = TableStore(spark, self.sinks_root, mode=table_mode)
+        # archive-open state of one version (see the class docstring);
+        # epoch-scope search fills it from driver threads
+        self._open_lock = threading.Lock()
+        self._open_version: tuple | None = None
+        self._open: dict = {}
+
+    # -- archive open --------------------------------------------------------
+
+    def _version(self) -> tuple:
+        """The archive version: file names of the ledger (and of the
+        global dictionaries), listed without a Spark job."""
+        dirs = [self.ledger_path]
+        if self.dict_scope == "global":
+            dirs += [f"{self.dicts_path}/logtype", f"{self.dicts_path}/var"]
+        out = []
+        for d in dirs:
+            try:
+                out.append(tuple(sorted(os.listdir(d))))
+            except FileNotFoundError:  # nothing committed / mid-swap
+                out.append(())
+        return tuple(out)
+
+    def _opened(self, key: tuple, build):
+        """The open state under ``key`` for the current version, built by
+        ``build()`` on first use. Builds run outside the lock (a build may
+        launch Spark jobs); a concurrent duplicate build loses to the
+        first one stored, so every caller sees one object per key."""
+        version = self._version()
+        with self._open_lock:
+            if version != self._open_version:
+                self._open_version, self._open = version, {}
+            memo = self._open
+            if key in memo:
+                return memo[key]
+        value = build()
+        with self._open_lock:
+            return memo.setdefault(key, value)
+
+    def _dict(self, name: str, epoch_part: int | None = None) -> DataFrame | None:
+        return self._opened(
+            ("dict", name, epoch_part), lambda: self._load_dict(name, epoch_part)
+        )
+
+    def _var_dict_count(self, epoch_part: int | None = None) -> int:
+        return self._opened(
+            ("var_count", epoch_part), lambda: self._dict("var", epoch_part).count()
+        )
 
     # -- ledger ------------------------------------------------------------
 
@@ -281,13 +354,6 @@ class IngestPipeline:
         self.spark.sparkContext.setLocalProperty(
             "spark.scheduler.pool", f"epoch-{partition_id}"
         )
-        if self.dict_scope == "epoch":
-            # archive-local dictionaries: nothing carries across epochs
-            lt_existing = var_existing = None
-        else:
-            lt_existing = self._load_dict("logtype")
-            var_existing = self._load_dict("var")
-
         n_subs = 1
         done_subs: set[int] = set()
         parsed = None
@@ -302,6 +368,11 @@ class IngestPipeline:
                 # dictionary delta (see committed_sub_epochs docstring)
                 n_subs = committed_n_subs
             else:
+                # epoch scope: archive-local dictionaries, nothing carries
+                lt_existing = var_existing = None
+                if self.dict_scope == "global":
+                    lt_existing = self._load_dict("logtype")
+                    var_existing = self._load_dict("var")
                 delta = self._dict_delta(parsed, lt_existing, var_existing)
                 n_subs = max(1, -(-delta // self.dict_budget))  # ceil
         try:
@@ -476,13 +547,27 @@ class IngestPipeline:
         (clp_s/TimestampEntry.hpp:58-95). Falls back to the ledger's
         epoch-level span for legacy work dirs; CLP's scheduler analog:
         job_orchestration/.../query_scheduler.py:369-397."""
+        out = []
+        for ep, mn, mx in self._opened(("epoch_spans",), self._epoch_spans):
+            # an epoch survives if ANY of its pattern spans overlaps
+            if ts_end_ms is not None and mn is not None and mn > ts_end_ms:
+                continue
+            if ts_begin_ms is not None and mx is not None and mx < ts_begin_ms:
+                continue
+            out.append(ep)
+        return sorted(set(out))
+
+    def _epoch_spans(self) -> list[tuple[int, int | None, int | None]]:
+        """(epoch_part, min ms, max ms) per timestamp pattern of every
+        committed epoch — what ``epochs_for_range`` filters."""
+        ledger_rows = self.ledger().select(
+            "partition_id", "sub_epoch",
+            F.unix_millis(F.col("input_min_ts").cast("timestamp")).alias("mn"),
+            F.unix_millis(F.col("input_max_ts").cast("timestamp")).alias("mx"),
+        ).collect()
         idx = self.ts_index()
+        rows = ledger_rows
         if idx is not None:
-            ledger_rows = self.ledger().select(
-                "partition_id", "sub_epoch",
-                F.unix_millis(F.col("input_min_ts").cast("timestamp")).alias("mn"),
-                F.unix_millis(F.col("input_max_ts").cast("timestamp")).alias("mx"),
-            ).collect()
             # only COMMITTED sub-epochs count: a crash between the index
             # append and the ledger commit leaves orphan index rows whose
             # sink directories don't exist (the re-run rewrites both)
@@ -504,21 +589,10 @@ class IngestPipeline:
                 r for r in ledger_rows
                 if (r["partition_id"], r["sub_epoch"]) not in indexed
             )
-        else:
-            rows = self.ledger().select(
-                "partition_id", "sub_epoch",
-                F.unix_millis(F.col("input_min_ts").cast("timestamp")).alias("mn"),
-                F.unix_millis(F.col("input_max_ts").cast("timestamp")).alias("mx"),
-            ).collect()
-        out = []
-        for r in rows:
-            # an epoch survives if ANY of its pattern spans overlaps
-            if ts_end_ms is not None and r["mn"] is not None and r["mn"] > ts_end_ms:
-                continue
-            if ts_begin_ms is not None and r["mx"] is not None and r["mx"] < ts_begin_ms:
-                continue
-            out.append(r["partition_id"] + r["sub_epoch"] * self.num_partitions)
-        return sorted(set(out))
+        return [
+            (r["partition_id"] + r["sub_epoch"] * self.num_partitions, r["mn"], r["mx"])
+            for r in rows
+        ]
 
     def read_sink(
         self, kind: str = "role", epochs: list[int] | None = None
@@ -526,9 +600,14 @@ class IngestPipeline:
         """Read a sink table; with ``epochs``, only those epoch_part
         partitions are scanned (parquet: the directories are never even
         LISTED; Iceberg: manifest pruning) — unselected epochs are never
-        dispatched, like the reference scheduler skipping archives."""
+        dispatched, like the reference scheduler skipping archives. Part
+        of the archive-open state: the same DataFrame until the version
+        changes."""
         pf = {"epoch_part": epochs} if epochs is not None else None
-        return self.store.read(f"by_{kind}", partition_filter=pf)
+        return self._opened(
+            ("sink", kind, None if epochs is None else tuple(epochs)),
+            lambda: self.store.read(f"by_{kind}", partition_filter=pf),
+        )
 
     def search(
         self,
@@ -567,14 +646,14 @@ class IngestPipeline:
                 self.spark.sparkContext.setLocalProperty(
                     "spark.scheduler.pool", f"search-epoch-{e}"
                 )
-                lt = self._load_dict("logtype", epoch_part=e)
-                vd = self._load_dict("var", epoch_part=e)
+                lt, vd = self._dict("logtype", e), self._dict("var", e)
                 if lt is None or vd is None:
                     return None
                 return search_op.search_text(
                     self.read_sink(kind, epochs=[e]), lt, vd, query,
                     ["conv_id", "turn_idx"], ignore_case=ignore_case,
-                    ts_begin_ms=ts_begin_ms, ts_end_ms=ts_end_ms, **kw,
+                    ts_begin_ms=ts_begin_ms, ts_end_ms=ts_end_ms,
+                    var_dict_count=self._var_dict_count(e), **kw,
                 )
 
             if self.max_concurrent > 1:
@@ -594,12 +673,12 @@ class IngestPipeline:
             for o in outs[1:]:
                 df = df.unionByName(o, allowMissingColumns=True)
             return df
-        df = self.read_sink(kind, epochs=epochs)
-        lt, vd = self._load_dict("logtype"), self._load_dict("var")
         return search_op.search_text(
-            df, lt, vd, query, ["conv_id", "turn_idx"],
-            ignore_case=ignore_case,
-            ts_begin_ms=ts_begin_ms, ts_end_ms=ts_end_ms, **kw,
+            self.read_sink(kind, epochs=epochs),
+            self._dict("logtype"), self._dict("var"), query,
+            ["conv_id", "turn_idx"], ignore_case=ignore_case,
+            ts_begin_ms=ts_begin_ms, ts_end_ms=ts_end_ms,
+            var_dict_count=self._var_dict_count(), **kw,
         )
 
     def count_by_time(
@@ -632,34 +711,30 @@ class IngestPipeline:
         pipeline's own sinks (clp/clp/decompression.cpp). Epoch-scoped
         archives decode each epoch with ITS dictionaries and the ordered
         write interleaves them globally (range partitioning on the keys,
-        not on epochs)."""
+        not on epochs); global dictionaries decode the whole archive as
+        its one epoch."""
         from clp_core_spark.operators import sinks as sink_ops
 
         keys = ["conv_id", "turn_idx"]
-        if self.dict_scope == "epoch":
-            parts = []
-            for e in self.epochs_for_range():
-                lt = self._load_dict("logtype", epoch_part=e)
-                vd = self._load_dict("var", epoch_part=e)
-                if lt is None or vd is None:
-                    continue
-                parts.append(
-                    encode_pipeline.decode(
-                        self.read_sink(kind, epochs=[e]), lt, vd, keys
-                    ).select(*keys, "decoded_text")
-                )
-            if not parts:
-                raise ValueError("nothing ingested: no epoch dictionaries found")
-            dec = parts[0]
-            for p in parts[1:]:
-                dec = dec.unionByName(p)
-            sink_ops.write_ordered_text(dec, out_path, keys, partitions=partitions)
-            return
-        lt, vd = self._load_dict("logtype"), self._load_dict("var")
-        sink_ops.decompress_to_text(
-            self.read_sink(kind), lt, vd, out_path,
-            key_cols=keys, partitions=partitions,
-        )
+        # None: the global dictionary pair, over every epoch's rows
+        units = self.epochs_for_range() if self.dict_scope == "epoch" else [None]
+        parts = []
+        for e in units:
+            lt, vd = self._dict("logtype", e), self._dict("var", e)
+            if lt is None or vd is None:
+                continue
+            parts.append(
+                encode_pipeline.decode(
+                    self.read_sink(kind, epochs=None if e is None else [e]),
+                    lt, vd, keys, var_dict_count=self._var_dict_count(e),
+                ).select(*keys, "decoded_text")
+            )
+        if not parts:
+            raise ValueError("nothing ingested: no dictionaries found")
+        dec = parts[0]
+        for p in parts[1:]:
+            dec = dec.unionByName(p)
+        sink_ops.write_ordered_text(dec, out_path, keys, partitions=partitions)
 
     # -- metrics -------------------------------------------------------------
 

@@ -429,3 +429,83 @@ def test_pipeline_count_by_time(spark, input_df, work_root):
         .collect()
     }
     assert got == want and got
+
+
+def test_open_archive_follows_commits_on_the_root(spark, input_df, work_root, tmp_path):
+    """A pipeline opens the archive once per ledger version: a commit by
+    another pipeline on the same root, or the root removed and
+    re-ingested, drops what it opened instead of serving stale state."""
+    import glob
+    import shutil
+
+    from clp_core_spark.functions.wildcard import wildcard_to_regex
+
+    a = IngestPipeline(spark, work_root, num_partitions=2)
+    a.run(input_df, partitions=[0])
+    assert a.epochs_for_range() == [0]
+    assert a.search("heartbeat").count() > 0
+
+    IngestPipeline(spark, work_root, num_partitions=2).run(input_df, partitions=[1])
+    assert a.epochs_for_range() == [0, 1]
+    got = {(r["conv_id"], r["turn_idx"]) for r in a.search("heartbeat").collect()}
+    assert got == {
+        (r["conv_id"], r["turn_idx"])
+        for r in input_df.filter(F.col("text").rlike(wildcard_to_regex("*heartbeat*")))
+        .select("conv_id", "turn_idx").collect()
+    }
+
+    # a fresh job on the same root: removed, then ingested again
+    a.read_sink("role")  # opens the sink a decompress reads
+    shutil.rmtree(work_root)
+    IngestPipeline(spark, work_root, num_partitions=2).run(input_df)
+    out = str(tmp_path / "xtext")
+    a.decompress_to_text(out, partitions=4)
+    back: list[str] = []
+    for f in sorted(glob.glob(out + "/part-*")):
+        with open(f) as fh:
+            back.extend(fh.read().splitlines())
+    want = input_df.orderBy("conv_id", "turn_idx").select("text").collect()
+    assert "\n".join(back) == "\n".join(r["text"] for r in want)
+
+
+def test_search_on_unchanged_archive_reuses_the_open(spark, input_df, work_root):
+    """Once a search has opened the archive, building the same search
+    again reads no ledger, index, sink schema or dictionary: zero Spark
+    jobs."""
+    pipe = IngestPipeline(spark, work_root, num_partitions=2)
+    pipe.run(input_df)
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    pipe.search("heartbeat")
+    before = int(scheduler.nextJobId())
+    pipe.search("heartbeat")
+    assert int(scheduler.nextJobId()) == before
+
+
+def test_open_state_one_object_per_key_under_threads(spark, work_root):
+    """Epoch-scope search opens archives from driver threads: racing
+    first uses of one key must all get the one object that was stored."""
+    import sys
+    import threading
+    import time
+    from concurrent.futures import ThreadPoolExecutor
+
+    pipe = IngestPipeline(spark, work_root, num_partitions=4, dict_scope="epoch")
+    barrier = threading.Barrier(16, timeout=30)
+
+    def build():
+        time.sleep(0.01)  # a build launches Spark jobs: racers overlap
+        return object()
+
+    def use(i):
+        barrier.wait()
+        return i % 4, pipe._opened(("k", i % 4), build)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(16) as pool:
+            got = list(pool.map(use, range(64), timeout=60))
+    finally:
+        sys.setswitchinterval(old)
+    for k in range(4):
+        assert len({id(v) for key, v in got if key == k}) == 1
