@@ -307,11 +307,7 @@ def warm_archives(spark: SparkSession, sf_dir: str) -> None:
     timings measure the search path itself; ingest cost is the e2e
     pipeline metric. Queries are unaffected when this is not called:
     the first query of each family just pays the encode lazily."""
-    from clp_core_spark.operators.encode_pipeline import (
-        BROADCAST_VAR_DICT_MAX,
-        _var_dict_broadcast,
-    )
-    from clp_core_spark.operators.search import _lt_rows_cached
+    from clp_core_spark.operators.dictionaries import driver_copy
 
     for corpus in ("documents", "events", "floats"):
         enc, lt, vd, keys = _encoded(spark, sf_dir, corpus)
@@ -320,12 +316,11 @@ def warm_archives(spark: SparkSession, sf_dir: str) -> None:
         # reads the logtype/variable dictionaries into memory when an
         # archive is attached and reuses them across every search/decode
         # (clp/DictionaryReader.hpp; bench.at_rest_bench mirrors this by
-        # compiling probes before its timed scans). Materialize the
-        # driver copies + decode broadcast here so per-query timings
-        # measure the query, not the dictionary open.
-        _lt_rows_cached(lt)
-        if _vdc(spark, sf_dir, corpus) <= BROADCAST_VAR_DICT_MAX:
-            _var_dict_broadcast(vd)
+        # compiling probes before its timed scans). Take the driver copies
+        # here so per-query timings measure the query, not the dictionary
+        # open.
+        driver_copy(lt)
+        driver_copy(vd)
     enc, _, _ = _semistructured(spark, sf_dir)
     enc.count()
     enc2, _ = _clps_encoded2(spark, sf_dir)
@@ -343,21 +338,8 @@ def warm_archives(spark: SparkSession, sf_dir: str) -> None:
     _q_schema_search(spark, sf_dir)
     s_enc, s_lt, s_vd = _CACHE[(id(spark), sf_dir, "_schema_tagged")]
     s_enc.count()
-    _lt_rows_cached(s_lt)
-    if s_vd.count() <= BROADCAST_VAR_DICT_MAX:
-        _var_dict_broadcast(s_vd)
-
-
-# var-dict sizes, counted once per corpus and threaded into decode/search so
-# repeated queries skip decode's strategy-selection count job.
-_VDC: dict = {}
-
-
-def _vdc(spark: SparkSession, sf_dir: str, corpus: str) -> int:
-    key = (id(spark), sf_dir, corpus)
-    if key not in _VDC:
-        _VDC[key] = _encoded(spark, sf_dir, corpus)[2].count()
-    return _VDC[key]
+    driver_copy(s_lt)
+    driver_copy(s_vd)
 
 
 # ---------------------------------------------------------------------------
@@ -366,9 +348,7 @@ def _vdc(spark: SparkSession, sf_dir: str, corpus: str) -> int:
 
 def _q_roundtrip_docs(spark, sf_dir):
     enc, lt, vd, keys = _encoded(spark, sf_dir, "documents")
-    dec = encode_pipeline.decode(
-        enc, lt, vd, keys, var_dict_count=_vdc(spark, sf_dir, "documents")
-    )
+    dec = encode_pipeline.decode(enc, lt, vd, keys)
     return dec.select("doc_id", F.col("decoded_text").alias("text"))
 
 
@@ -399,18 +379,13 @@ def _q_roundtrip_text(spark, sf_dir):
 
 def _q_roundtrip_events(spark, sf_dir):
     enc, lt, vd, keys = _encoded(spark, sf_dir, "events")
-    dec = encode_pipeline.decode(
-        enc, lt, vd, keys, var_dict_count=_vdc(spark, sf_dir, "events")
-    )
+    dec = encode_pipeline.decode(enc, lt, vd, keys)
     return dec.select("event_id", F.col("decoded_text").alias("text"))
 
 
 def _search(spark, sf_dir, corpus, query, **kw):
     enc, lt, vd, keys = _encoded(spark, sf_dir, corpus)
-    return search.search_text(
-        enc, lt, vd, query, keys,
-        var_dict_count=_vdc(spark, sf_dir, corpus), **kw,
-    )
+    return search.search_text(enc, lt, vd, query, keys, **kw)
 
 
 def _q_search_token(spark, sf_dir):
@@ -436,8 +411,7 @@ def _q_search_regex(spark, sf_dir):
     search; the '?' takes the replace-then-verify path."""
     enc, lt, vd, keys = _encoded(spark, sf_dir, "events")
     return search.search_regex(
-        enc, lt, vd, "evt sig.up .*", keys,
-        var_dict_count=_vdc(spark, sf_dir, "events"),
+        enc, lt, vd, "evt sig.up .*", keys
     ).select("event_id")
 
 
@@ -452,9 +426,7 @@ def _q_search_broad_dictvar(spark, sf_dir):
 
 def _q_roundtrip_floats(spark, sf_dir):
     enc, lt, vd, keys = _encoded(spark, sf_dir, "floats")
-    dec = encode_pipeline.decode(
-        enc, lt, vd, keys, var_dict_count=_vdc(spark, sf_dir, "floats")
-    )
+    dec = encode_pipeline.decode(enc, lt, vd, keys)
     return dec.select("event_id", F.col("decoded_text").alias("text"))
 
 

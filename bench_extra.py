@@ -84,7 +84,6 @@ def at_rest_registry(spark, sf_dir: str) -> dict:
         spark.catalog.clearCache()
         lt2 = dictstore.load_dict(spark, croot, "logtype")
         vd2 = dictstore.load_dict(spark, croot, "var")
-        vdc = vd2.count()
         stats: dict = {}
         for cname, qname, pattern, kw in registry:
             if cname != corpus:
@@ -97,10 +96,7 @@ def at_rest_registry(spark, sf_dir: str) -> dict:
             rec: dict = {}
             for layout, path in (("glt", glt_path), ("flat", flat_path)):
                 df = spark.read.parquet(path)
-                hits = search_op.search(
-                    df, lt2, vd2, compiled, keys,
-                    var_dict_count=vdc, **skw,
-                )
+                hits = search_op.search(df, lt2, vd2, compiled, keys, **skw)
                 best, nh = None, 0
                 for _ in range(2):
                     t0 = time.time()
@@ -115,7 +111,7 @@ def at_rest_registry(spark, sf_dir: str) -> dict:
                 rec[f"{layout}_files_hit"] = (
                     search_op.search(
                         with_f, lt2, vd2, compiled, keys, select_cols=["_f"],
-                        var_dict_count=vdc, **skw,
+                        **skw,
                     ).select("_f").distinct().count()
                 )
             g, f = rec["glt_sec"], rec["flat_sec"]

@@ -16,6 +16,8 @@ Scales to variable dictionaries far larger than driver memory.
 
 from __future__ import annotations
 
+import threading
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
@@ -114,3 +116,69 @@ def build_var_dict(
     new = vals.select("var_str").distinct().join(existing, "var_str", "left_anti")
     start = (existing.agg(F.max("var_id")).collect()[0][0] or -1) + 1
     return existing.unionByName(assign_dense_ids(new, "var_str", "var_id", start_id=start))
+
+
+
+# Driver-copy bounds, one per dictionary kind (see driver_copy). A logtype
+# dictionary within its bound is matched in memory at query compile (zero
+# Spark jobs) and drives search's JVM template decode; logtype dicts are
+# templates, tiny by CLP's core premise. A var dictionary within its bound
+# is broadcast as a map into decode and dense-ID resolve, one pickle load
+# per Python worker, which anti-scales with executor count for large
+# dictionaries; beyond it both take the JVM explode -> join -> regroup.
+LOGTYPE_DRIVER_MAX = 100_000
+BROADCAST_VAR_DICT_MAX = 200_000
+
+
+class DriverCopy:
+    """A dictionary held in driver memory: its rows as a pandas ``frame``,
+    and the broadcast ``{key: value}`` maps built from it on first use,
+    one per lookup direction (decode reads id -> string, dense encode
+    string -> id)."""
+
+    def __init__(self, spark, frame):
+        self.frame = frame
+        self._spark = spark
+        self._maps: dict = {}
+        self._lock = threading.Lock()
+
+    def broadcast_map(self, key_col: str, value_col: str):
+        with self._lock:
+            bc = self._maps.get((key_col, value_col))
+            if bc is None:
+                bc = self._spark.sparkContext.broadcast(
+                    dict(zip(self.frame[key_col].tolist(), self.frame[value_col].tolist()))
+                )
+                self._maps[(key_col, value_col)] = bc
+            return bc
+
+
+_COPY_LOCK = threading.Lock()
+
+
+def driver_copy(dict_df: DataFrame) -> DriverCopy | None:
+    """The dictionary's driver copy, or None when it holds more entries
+    than its kind's bound (``LOGTYPE_DRIVER_MAX`` for a logtype dict,
+    ``BROADCAST_VAR_DICT_MAX`` for a var dict). One
+    ``limit(bound + 1)`` collect is both the size test and the copy, so
+    no caller counts a dictionary to choose a path. The result is kept on
+    the DataFrame object: CLP loads each archive dictionary into memory
+    once and decodes every message from that copy (Grep.cpp:477-495),
+    and a dictionary DataFrame is an immutable plan, so the copy cannot
+    go stale. Racing first calls may each collect; all of them get the
+    copy stored first."""
+    copy = getattr(dict_df, "_clp_driver_copy", None)
+    if copy is None:
+        bound = (
+            LOGTYPE_DRIVER_MAX
+            if "logtype_id" in dict_df.columns
+            else BROADCAST_VAR_DICT_MAX
+        )
+        # through Arrow: no per-row Python objects for a 10^5-entry dict
+        frame = dict_df.limit(bound + 1).toPandas()
+        built = DriverCopy(dict_df.sparkSession, frame) if len(frame) <= bound else False
+        with _COPY_LOCK:
+            copy = getattr(dict_df, "_clp_driver_copy", None)
+            if copy is None:
+                dict_df._clp_driver_copy = copy = built
+    return copy or None

@@ -4,20 +4,24 @@ Spark-first layout of CLP's ``Archive::write_msg`` path
 (clp/streaming_archive/writer/Archive.cpp:299-316 +
 clp/EncodedVariableInterpreter.cpp:206-225):
 
-1. A vectorized Arrow pandas UDF (tokenizer.tokenize_frame) extracts the
-   logtype template + typed variables per turn.
+1. An Arrow batch kernel (tokenizer.tokenize_arrow_arrays, run through
+   ``mapInArrow``) extracts the logtype template + typed variables per
+   turn.
 2. The logtype dictionary is built by distributed distinct + dense-ID
    assignment and broadcast back (CLP's premise: templates << data).
-3. Dictionary variables are resolved to IDs either by broadcasting the
-   var dict into the Arrow batch (small dicts — no shuffle) or by
-   explode -> shuffle join -> regroup (dicts beyond driver/executor
-   memory). Auto-selected by dict size, like AQE picks join strategies.
+3. Dictionary variables get their IDs inline (``xxhash64``, the default)
+   or, in dense mode, through the var dictionary.
+
+Every var-dictionary lookup (dense resolve here, :func:`decode`) follows
+one rule: a dictionary with a driver copy (dictionaries.driver_copy,
+within ``BROADCAST_VAR_DICT_MAX`` entries) is broadcast as a map into the
+Arrow batches; any other is looked up in the JVM by explode -> join ->
+regroup.
 
 The encoded row keeps CLP's exact representation: ``encoded_vars[i]`` is
 the int value, the 64-bit float packing, or the var-dict ID, disambiguated
 by the placeholder sequence in the logtype (equivalently ``var_types``).
 """
-
 from __future__ import annotations
 
 import pandas as pd
@@ -52,23 +56,10 @@ PARSED_SCHEMA_SLIM = StructType(
     [f for f in PARSED_SCHEMA.fields if f.name != "var_strs"]
 )
 
-# Above this many distinct dictionary variables, resolve IDs via shuffle
-# join instead of broadcasting the dict into the Arrow batches. The
-# broadcast path costs one driver collect + a per-Python-worker pickle
-# load, so it anti-scales with executor count for large dicts — keep it
-# for genuinely small dictionaries only.
-BROADCAST_VAR_DICT_MAX = 200_000
-
-# Middle tier for the join-based resolve: up to this many entries the dict
-# rides a JVM-side broadcast hash join (~tens of MB serialized), so the
-# exploded corpus-vars relation never shuffles — the shuffle-everything
-# path is only for dictionaries too big to broadcast at all.
+# The JVM lookup join broadcasts the dictionary side up to this many
+# entries (~tens of MB serialized), so the exploded corpus-vars relation
+# never shuffles for the join; only bigger dictionaries shuffle both sides.
 BROADCAST_JOIN_DICT_MAX = 5_000_000
-
-# One-shot decodes of a dictionary NOT already broadcast-cached take the
-# join path above this size — collecting+pickling a big map that will
-# never be reused costs more than the join (see decode()).
-UNCACHED_BROADCAST_MAX = 25_000
 
 
 @pandas_udf(PARSED_SCHEMA)
@@ -146,12 +137,45 @@ def parse(
     return parsed.select("*", "_parsed.*").drop("_parsed")
 
 
+def _lookup_join(
+    df: DataFrame,
+    key_cols: list[str],
+    var_dict: DataFrame,
+    in_col: str,
+    out_col: str,
+    on: str,
+) -> DataFrame:
+    """Map every element of the array column ``in_col`` through
+    ``var_dict`` in the JVM, into ``out_col`` (same order): explode with
+    position, equi-join the dictionary on its column ``on``, regroup by
+    row key ordered by position. Serves both directions: ids -> strings
+    (decode, ``on="var_id"``) and strings -> ids (dense resolve,
+    ``on="var_str"``). Up to ``BROADCAST_JOIN_DICT_MAX`` entries the
+    dictionary side is broadcast, so only the regroup shuffles (on keys);
+    the size is counted here, once the driver copy has overflowed."""
+    value = "var_str" if on == "var_id" else "var_id"
+    ex = df.select(*key_cols, F.posexplode(in_col).alias("_pos", on))
+    dict_side = (
+        F.broadcast(var_dict)
+        if var_dict.count() <= BROADCAST_JOIN_DICT_MAX
+        else var_dict
+    )
+    regrouped = ex.join(dict_side, on, "left").groupBy(*key_cols).agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("_pos", value))),
+            lambda s: s[value],
+        ).alias(out_col)
+    )
+    empty = F.array().cast(ArrayType(var_dict.schema[value].dataType))
+    return df.join(regrouped, key_cols, "left").withColumn(
+        out_col, F.coalesce(out_col, empty)
+    )
+
+
 def resolve_dict_ids(
     parsed: DataFrame,
     var_dict: DataFrame,
     key_cols: list[str],
-    broadcast_threshold: int = BROADCAST_VAR_DICT_MAX,
-    var_dict_count: int | None = None,
 ) -> DataFrame:
     """Replace each dict-var slot of ``encoded`` (which holds the row-local
     dict ordinal after parse) with the global var-dict ID.
@@ -159,15 +183,11 @@ def resolve_dict_ids(
     Returns ``parsed`` with ``encoded`` finalized and a ``dict_ids``
     array column (the row's var-dict IDs in order of appearance).
     """
-    if var_dict_count is None:
-        var_dict_count = var_dict.count()
-
-    if var_dict_count <= broadcast_threshold:
-        # Broadcast strategy: ship {var_str -> id} into the Arrow batches;
-        # a single vectorized pd.Series.map per batch, zero shuffle.
-        spark = parsed.sparkSession
-        mapping = {r["var_str"]: r["var_id"] for r in var_dict.collect()}
-        bc = spark.sparkContext.broadcast(mapping)
+    copy = dictionaries.driver_copy(var_dict)
+    if copy is not None:
+        # ship {var_str -> id} into the Arrow batches: a single
+        # vectorized pd.Series.map per batch, zero shuffle
+        bc = copy.broadcast_map("var_str", "var_id")
 
         @pandas_udf(ArrayType(LongType()))
         def _lookup(dict_strs: pd.Series) -> pd.Series:
@@ -189,28 +209,8 @@ def resolve_dict_ids(
 
         resolved = parsed.withColumn("dict_ids", _lookup(F.col("dict_strs")))
     else:
-        # Join strategy: explode dict vars with position, equi-join the
-        # dict table on the string, regroup ordered by position. Up to
-        # BROADCAST_JOIN_DICT_MAX entries the dict side is broadcast
-        # (JVM-side, no Python pickling) so the huge exploded relation
-        # never shuffles for the join; only the regroup shuffles, on keys.
-        ex = parsed.select(
-            *key_cols, F.posexplode("dict_strs").alias("_pos", "var_str")
-        )
-        dict_side = (
-            F.broadcast(var_dict)
-            if var_dict_count <= BROADCAST_JOIN_DICT_MAX
-            else var_dict
-        )
-        joined = ex.join(dict_side, "var_str", "left")
-        regrouped = joined.groupBy(*key_cols).agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("_pos", "var_id"))),
-                lambda s: s["var_id"],
-            ).alias("dict_ids")
-        )
-        resolved = parsed.join(regrouped, key_cols, "left").withColumn(
-            "dict_ids", F.coalesce("dict_ids", F.array().cast("array<long>"))
+        resolved = _lookup_join(
+            parsed, key_cols, var_dict, "dict_strs", "dict_ids", on="var_str"
         )
 
     # Merge: dict slots in `encoded` hold the row-local ordinal; swap in the
@@ -313,112 +313,61 @@ def encode(
     return encoded, logtype_dict, var_dict
 
 
-def _var_dict_broadcast(var_dict: DataFrame):
-    """Collect {var_id -> var_str} ONCE per var-dict DataFrame and cache
-    the broadcast (plus the fused decode UDF bound to it) on the DataFrame
-    object itself. CLP loads each archive's dictionaries into memory once
-    and reuses them across every query (clp/DictionaryReader.hpp) — the
-    per-decode-call collect+pickle of a 10^5-entry dict was pure repeated
-    work (~0.5s/call on the bench corpus). DataFrames are immutable plans
-    over deterministic dictionaries, so the cached mapping cannot go
-    stale; lifetime is tied to the DF object."""
-    cached = getattr(var_dict, "_clp_decode_bc", None)
-    if cached is not None:
-        return cached
-    spark = var_dict.sparkSession
-    mapping = {r["var_id"]: r["var_str"] for r in var_dict.collect()}
-    bc = spark.sparkContext.broadcast(mapping)
-
-    @pandas_udf(StringType())
-    def _decode_map_udf(
-        logtype: pd.Series, encoded_vars: pd.Series
-    ) -> pd.Series:
-        from clp_core_spark.functions.tokenizer import decode_frame_with_map
-
-        return decode_frame_with_map(logtype, encoded_vars, bc.value).astype(
-            str
-        )
-
-    var_dict._clp_decode_bc = (bc, _decode_map_udf)
-    return var_dict._clp_decode_bc
-
-
 def decode(
     encoded: DataFrame,
     logtype_dict: DataFrame,
     var_dict: DataFrame,
     key_cols: list[str],
     out_col: str = "decoded_text",
-    broadcast_threshold: int = BROADCAST_VAR_DICT_MAX,
-    var_dict_count: int | None = None,
     slim_to_needed: bool = False,
 ) -> DataFrame:
     """Inverse of :func:`encode` — reconstruct the original message
     (clp/EncodedVariableInterpreter.cpp:298-367). Used by the roundtrip
-    equality gate and the decompress-to-text sink. Pass ``var_dict_count``
-    when known to skip the strategy-selection count job.
+    equality gate and the decompress-to-text sink.
+
+    One rule picks the path: a var dictionary with a driver copy
+    (dictionaries.driver_copy) decodes through its broadcast map, fused
+    into the decode kernel — one Python stage, no dictionary strings
+    crossing the Arrow boundary; any other resolves its IDs in the JVM
+    (explode -> join -> regroup) before the kernel. The copy is kept on
+    the var-dict DataFrame, so repeated decodes against it collect and
+    broadcast once.
 
     ``slim_to_needed``: when the rows to decode are a SMALL residue of
-    the corpus (search's wildcard-verify stage) but the dictionary is
-    big, first semi-join the dictionary down to the var IDs those rows
-    actually reference — the residue references few distinct vars, so
-    decode then takes the zero-shuffle broadcast-map path instead of
-    shipping the full dictionary (a 1.16M-entry dict costs a ~25 MB
-    broadcast + explode/regroup per query without this). Leave False
-    for full-corpus decodes, where "needed" IS the whole dictionary and
-    the slimming pass would just add work."""
+    the corpus (search's wildcard-verify stage) but the dictionary has no
+    driver copy, first semi-join the dictionary down to the var IDs those
+    rows actually reference — the residue references few distinct vars,
+    so the slimmed dictionary usually gets a copy and the map path
+    instead of shipping the full dictionary. Leave False for full-corpus
+    decodes, where "needed" IS the whole dictionary and the slimming pass
+    would just add work."""
     df = encoded.join(F.broadcast(logtype_dict), "logtype_id")
-
-    var_count = var_dict.count() if var_dict_count is None else var_dict_count
-    if slim_to_needed and var_count > broadcast_threshold:
-        pairs = F.filter(
-            F.arrays_zip("encoded_vars", "var_types"),
-            lambda s: s["var_types"] == VT_DICT,
-        )
-        dict_ids = F.transform(pairs, lambda s: s["encoded_vars"])
-        needed = df.select(F.explode(dict_ids).alias("var_id")).distinct()
-        var_dict = var_dict.join(F.broadcast(needed), "var_id", "leftsemi")
-        var_count = var_dict.count()
-    # A dictionary worth collecting once: either its broadcast is already
-    # cached on the DF (warm archive — reused across every query), or it
-    # is small enough that the one-off collect is trivial. A LARGE dict
-    # seen for the first time decodes through the JVM join path instead:
-    # the collect + pickle-broadcast of a 10^5-entry map costs ~2x the
-    # whole join-path decode when it cannot be amortized (measured 1.4s
-    # vs 0.7s per 100k-row one-shot decode at sf0.1).
-    has_bc = getattr(var_dict, "_clp_decode_bc", None) is not None
-    if var_count <= broadcast_threshold and (
-        has_bc or var_count <= UNCACHED_BROADCAST_MAX
-    ):
-        # Fused fast path: dictionary-ID resolution happens INSIDE the
-        # decode kernel via the cached broadcast mapping — one Python
-        # stage, no intermediate dict_strs arrays over the Arrow
-        # boundary, no per-call dictionary collect (guide §4).
-        _, decode_udf = _var_dict_broadcast(var_dict)
-        return df.withColumn(
-            out_col, decode_udf(F.col("logtype"), F.col("encoded_vars"))
-        )
-
-    # Resolve dict-var IDs back to strings, in order of appearance.
     pairs = F.filter(
         F.arrays_zip("encoded_vars", "var_types"), lambda s: s["var_types"] == VT_DICT
     )
-    df = df.withColumn("_dict_ids", F.transform(pairs, lambda s: s["encoded_vars"]))
-    ex = df.select(*key_cols, F.posexplode("_dict_ids").alias("_pos", "var_id"))
-    dict_side = (
-        F.broadcast(var_dict)
-        if var_count <= BROADCAST_JOIN_DICT_MAX
-        else var_dict
-    )
-    joined = ex.join(dict_side, "var_id", "left")
-    regrouped = joined.groupBy(*key_cols).agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("_pos", "var_str"))),
-            lambda s: s["var_str"],
-        ).alias("dict_strs")
-    )
-    df = df.join(regrouped, key_cols, "left").withColumn(
-        "dict_strs", F.coalesce("dict_strs", F.array().cast("array<string>"))
+    dict_ids = F.transform(pairs, lambda s: s["encoded_vars"])
+
+    copy = dictionaries.driver_copy(var_dict)
+    if copy is None and slim_to_needed:
+        needed = df.select(F.explode(dict_ids).alias("var_id")).distinct()
+        var_dict = var_dict.join(F.broadcast(needed), "var_id", "leftsemi")
+        copy = dictionaries.driver_copy(var_dict)
+    if copy is not None:
+        bc = copy.broadcast_map("var_id", "var_str")
+
+        @pandas_udf(StringType())
+        def _decode_map_udf(logtype: pd.Series, encoded_vars: pd.Series) -> pd.Series:
+            from clp_core_spark.functions.tokenizer import decode_frame_with_map
+
+            return decode_frame_with_map(logtype, encoded_vars, bc.value).astype(str)
+
+        return df.withColumn(
+            out_col, _decode_map_udf(F.col("logtype"), F.col("encoded_vars"))
+        )
+
+    df = _lookup_join(
+        df.withColumn("_dict_ids", dict_ids), key_cols, var_dict,
+        "_dict_ids", "dict_strs", on="var_id",
     )
 
     @pandas_udf(StringType())

@@ -45,6 +45,7 @@ from clp_core_spark.functions.wildcard import (
     regex_to_wildcard,
     wildcard_to_regex,
 )
+from clp_core_spark.operators import dictionaries
 
 _PLACEHOLDERS = (PLACEHOLDER_INT, PLACEHOLDER_DICT, PLACEHOLDER_FLOAT)
 _TOKEN_CHARS = set("+-.0123456789ABCDEFGHIJKLMNOPQRSTUVWXYZ\\_abcdefghijklmnopqrstuvwxyz")
@@ -403,14 +404,6 @@ class DictProbes:
     consumes via broadcast semi-join — driver memory and plan size stay
     O(cutoff) regardless of dictionary size."""
 
-    # A logtype dictionary at or below this size is pulled to the driver
-    # ONCE and every logtype probe runs as an in-memory regex match (zero
-    # Spark jobs) — CLP holds the whole logtype dict in memory during
-    # query compilation (Grep.cpp:477-495). Logtype dicts are templates
-    # (tiny by CLP's core premise); var dicts can be huge and always
-    # probe distributed.
-    LOGTYPE_DRIVER_MAX = 100_000
-
     def __init__(self, logtype_dict: DataFrame, var_dict: DataFrame,
                  ignore_case: bool, max_literal_ids: int = ISIN_MAX_IDS):
         self.logtype_dict = logtype_dict
@@ -418,18 +411,6 @@ class DictProbes:
         self.ignore_case = ignore_case
         self.max_literal_ids = max_literal_ids
         self._cache: dict = {}
-        self._lt_rows: list | None | bool = None  # lazy driver copy
-
-    def _logtype_rows(self):
-        """Driver copy of the logtype dict, or False if it exceeds the
-        in-memory bound (fall back to distributed probes). Delegates to
-        the per-DataFrame cache so repeated query compiles against the
-        same dictionary share ONE collect job (CLP keeps logtype dicts
-        in memory for the session; warm_archives pre-warms this)."""
-        if self._lt_rows is None:
-            rows = _lt_rows_cached(self.logtype_dict)
-            self._lt_rows = rows if rows is not None else False
-        return self._lt_rows
 
     def _probe(self, df: DataFrame, value_col: str, id_col: str, pattern: str,
                exact: bool) -> ProbeResult:
@@ -455,8 +436,13 @@ class DictProbes:
         return res
 
     def logtypes(self, pattern: str) -> ProbeResult:
-        rows = self._logtype_rows()
-        if rows is False:
+        """A logtype dictionary with a driver copy is matched in memory
+        (zero Spark jobs), as CLP holds the whole logtype dictionary in
+        memory during query compilation (Grep.cpp:477-495); a larger one
+        is probed distributed. Var dictionaries can be huge and always
+        probe distributed."""
+        copy = dictionaries.driver_copy(self.logtype_dict)
+        if copy is None:
             return self._probe(
                 self.logtype_dict, "logtype", "logtype_id", pattern, exact=False
             )
@@ -465,9 +451,10 @@ class DictProbes:
             return self._cache[key]
         from clp_core_spark.functions.wildcard import wildcard_match
 
+        lt = copy.frame
         ids = [
-            lid
-            for val, lid in rows
+            int(lid)
+            for val, lid in zip(lt["logtype"], lt["logtype_id"])
             if wildcard_match(val, pattern, case_sensitive=not self.ignore_case)
         ]
         if len(ids) > self.max_literal_ids:
@@ -667,25 +654,6 @@ def compile_query(
 # --- execution ---------------------------------------------------------------
 
 
-def _lt_rows_cached(logtype_dict: DataFrame):
-    """Driver copy of a (small) logtype dictionary, cached on the
-    DataFrame object — CLP keeps the logtype dictionary in memory for
-    the whole query session (Grep.cpp:477-495). Returns None when the
-    dict exceeds the driver bound."""
-    cached = getattr(logtype_dict, "_clp_lt_rows", None)
-    if cached is not None:
-        return cached if cached is not False else None
-    head = logtype_dict.select("logtype", "logtype_id").limit(
-        DictProbes.LOGTYPE_DRIVER_MAX + 1
-    ).collect()
-    if len(head) > DictProbes.LOGTYPE_DRIVER_MAX:
-        logtype_dict._clp_lt_rows = False
-        return None
-    rows = [(r["logtype"], int(r["logtype_id"])) for r in head]
-    logtype_dict._clp_lt_rows = rows
-    return rows
-
-
 # JVM template-decode bound: above this many templates the CASE chain
 # stops paying for itself (codegen size); fall back to the Python kernel.
 _JVM_DECODE_MAX_LOGTYPES = 64
@@ -696,7 +664,6 @@ def _decode_for_verify(
     logtype_dict: DataFrame,
     var_dict: DataFrame,
     key_cols: list[str],
-    var_dict_count: int | None,
     slim_to_needed: bool = False,
 ) -> DataFrame:
     """Attach ``decoded_text`` for the wildcard-verify stage. When every
@@ -713,16 +680,16 @@ def _decode_for_verify(
         PLACEHOLDER_INT,
     )
 
-    rows = _lt_rows_cached(logtype_dict)
-    if rows is not None and 0 < len(rows) <= _JVM_DECODE_MAX_LOGTYPES:
+    copy = dictionaries.driver_copy(logtype_dict)
+    if copy is not None and 0 < len(copy.frame) <= _JVM_DECODE_MAX_LOGTYPES:
         templates = []
         int_only = True
-        for lt, lid in rows:
+        for lt, lid in zip(copy.frame["logtype"], copy.frame["logtype_id"]):
             consts, phs = _parse_logtype_template(lt)
             if any(p != PLACEHOLDER_INT for p in phs):
                 int_only = False
                 break
-            templates.append((lid, consts, phs))
+            templates.append((int(lid), consts, phs))
         if int_only:
             expr = None
             for lid, consts, phs in templates:
@@ -748,8 +715,7 @@ def _decode_for_verify(
     from clp_core_spark.operators import encode_pipeline
 
     return encode_pipeline.decode(
-        df, logtype_dict, var_dict, key_cols,
-        var_dict_count=var_dict_count, slim_to_needed=slim_to_needed,
+        df, logtype_dict, var_dict, key_cols, slim_to_needed=slim_to_needed
     )
 
 
@@ -820,11 +786,9 @@ def search(
     ts_begin_ms: int | None = None,
     ts_end_ms: int | None = None,
     select_cols: list[str] | None = None,
-    var_dict_count: int | None = None,
 ) -> DataFrame:
     """Execute a compiled query over the encoded table. Returns matching
-    rows (key_cols + select_cols). ``var_dict_count``, when known, skips
-    decode's dict-size strategy count job."""
+    rows (key_cols + select_cols)."""
     select_cols = select_cols or []
     out_cols = key_cols + select_cols
     df = encoded
@@ -844,9 +808,7 @@ def search(
         # `!contains_sub_queries && !search_string_matches_all`).
         if compiled.search_string in ("", "*"):
             return df.select(*out_cols)
-        decoded = _decode_for_verify(
-            df, logtype_dict, var_dict, key_cols, var_dict_count
-        )
+        decoded = _decode_for_verify(df, logtype_dict, var_dict, key_cols)
         pat = compiled.search_string
         col = F.col("decoded_text")
         if compiled.ignore_case:
@@ -895,8 +857,7 @@ def search(
         # dictionary slims to the residue's own var IDs first, so big
         # dicts never shuffle/broadcast whole for a verify.
         decoded = _decode_for_verify(
-            candidates, logtype_dict, var_dict, key_cols,
-            var_dict_count, slim_to_needed=True,
+            candidates, logtype_dict, var_dict, key_cols, slim_to_needed=True
         )
         pat = compiled.search_string
         col = F.col("decoded_text")

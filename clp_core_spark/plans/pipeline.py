@@ -57,11 +57,10 @@ class IngestPipeline:
     search session (its DictionaryReader keeps both dictionaries in
     memory, Grep.cpp:477-495). Each piece of open state is built on first
     use and kept: the committed epoch spans, the sink DataFrame per
-    (kind, epochs), the dictionary DataFrames and the var-dict size.
-    Because every request gets the same dictionary DataFrame objects,
-    the driver copy of the logtype dict and the var-dict broadcast
-    (cached on those objects by the search and decode operators) are
-    reused across requests.
+    (kind, epochs) and the dictionary DataFrames. Because every request
+    gets the same dictionary DataFrame objects, their driver copies
+    (operators.dictionaries.driver_copy, kept on those objects) are
+    collected and broadcast once and reused across requests.
 
     Version: the open state belongs to one archive version, the sorted
     file names under ``{work_root}/ledger``, read without a Spark job.
@@ -189,17 +188,15 @@ class IngestPipeline:
             ("dict", name, epoch_part), lambda: self._load_dict(name, epoch_part)
         )
 
-    def _var_dict_count(self, epoch_part: int | None = None) -> int:
-        return self._opened(
-            ("var_count", epoch_part), lambda: self._dict("var", epoch_part).count()
-        )
-
     # -- ledger ------------------------------------------------------------
 
     def ledger(self) -> DataFrame:
         try:
             return self.spark.read.parquet(self.ledger_path)
-        except Exception:  # noqa: BLE001 — first run: empty ledger
+        except AnalysisException:  # first run (path missing): empty ledger;
+            # a real read error (corrupt file) propagates — taken as "nothing
+            # committed" it would re-ingest every partition and turn every
+            # search into zero hits
             return self.spark.createDataFrame([], LEDGER_SCHEMA)
 
     def done_partitions(self) -> set[int]:
@@ -533,7 +530,7 @@ class IngestPipeline:
         work dirs written before the index existed."""
         try:
             return self.spark.read.parquet(self.ts_index_path)
-        except Exception:  # noqa: BLE001 — legacy work dir / nothing ingested
+        except AnalysisException:  # legacy work dir / nothing ingested
             return None
 
     def epochs_for_range(
@@ -652,8 +649,7 @@ class IngestPipeline:
                 return search_op.search_text(
                     self.read_sink(kind, epochs=[e]), lt, vd, query,
                     ["conv_id", "turn_idx"], ignore_case=ignore_case,
-                    ts_begin_ms=ts_begin_ms, ts_end_ms=ts_end_ms,
-                    var_dict_count=self._var_dict_count(e), **kw,
+                    ts_begin_ms=ts_begin_ms, ts_end_ms=ts_end_ms, **kw,
                 )
 
             if self.max_concurrent > 1:
@@ -677,8 +673,7 @@ class IngestPipeline:
             self.read_sink(kind, epochs=epochs),
             self._dict("logtype"), self._dict("var"), query,
             ["conv_id", "turn_idx"], ignore_case=ignore_case,
-            ts_begin_ms=ts_begin_ms, ts_end_ms=ts_end_ms,
-            var_dict_count=self._var_dict_count(), **kw,
+            ts_begin_ms=ts_begin_ms, ts_end_ms=ts_end_ms, **kw,
         )
 
     def count_by_time(
@@ -726,7 +721,7 @@ class IngestPipeline:
             parts.append(
                 encode_pipeline.decode(
                     self.read_sink(kind, epochs=None if e is None else [e]),
-                    lt, vd, keys, var_dict_count=self._var_dict_count(e),
+                    lt, vd, keys,
                 ).select(*keys, "decoded_text")
             )
         if not parts:

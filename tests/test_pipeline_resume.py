@@ -509,3 +509,25 @@ def test_open_state_one_object_per_key_under_threads(spark, work_root):
         sys.setswitchinterval(old)
     for k in range(4):
         assert len({id(v) for key, v in got if key == k}) == 1
+
+
+def test_corrupt_ledger_raises_instead_of_reading_as_empty(spark, input_df, work_root):
+    """Only a missing ledger means "nothing committed": a ledger that
+    cannot be read must fail ledger() and search, not re-ingest every
+    partition and answer every search with zero hits."""
+    import os
+    import shutil
+
+    from pyspark.errors import AnalysisException
+
+    pipe = IngestPipeline(spark, work_root, num_partitions=2)
+    pipe.run(input_df)
+    assert pipe.search("heartbeat").count() > 0
+    shutil.rmtree(pipe.ledger_path)
+    os.makedirs(pipe.ledger_path)
+    with open(f"{pipe.ledger_path}/part-00000.parquet", "w") as f:
+        f.write("not parquet")
+    for call in (lambda: pipe.ledger().collect(), lambda: pipe.search("heartbeat")):
+        with pytest.raises(Exception) as err:
+            call()
+        assert not isinstance(err.value, AnalysisException)

@@ -4,12 +4,16 @@ extract, byte-compare under stable (conv_id, turn_idx) ordering."""
 
 import pyspark.sql.functions as F
 
-from clp_core_spark.operators import encode_pipeline
+from clp_core_spark.operators import dictionaries, encode_pipeline
 
 KEYS = ["conv_id", "turn_idx"]
 
 
-def test_encode_decode_roundtrip(spark, transcripts):
+def _plan(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_encode_decode_roundtrip(spark, transcripts, monkeypatch):
     encoded, logtype_dict, var_dict = encode_pipeline.encode(
         transcripts, key_cols=KEYS, keep_text=True
     )
@@ -18,9 +22,42 @@ def test_encode_decode_roundtrip(spark, transcripts):
     rows = mismatches.select(*KEYS, "text", "decoded_text").limit(5).collect()
     assert rows == [], f"roundtrip mismatches: {rows}"
     assert decoded.count() == transcripts.count()
+    assert "posexplode" not in _plan(decoded)
+
+    # a var dict over the driver-copy bound decodes through the JVM join,
+    # byte-equal to the map path (a fresh DataFrame: no copy taken yet)
+    monkeypatch.setattr(dictionaries, "BROADCAST_VAR_DICT_MAX", 0)
+    joined = encode_pipeline.decode(
+        encoded, logtype_dict, var_dict.select("*"), key_cols=KEYS
+    )
+    assert "posexplode" in _plan(joined)
+    diff = decoded.select(*KEYS, "decoded_text").exceptAll(
+        joined.select(*KEYS, "decoded_text")
+    )
+    assert diff.limit(5).collect() == []
+    assert joined.count() == transcripts.count()
 
 
-def test_dictionary_consistency(spark, transcripts):
+def test_decode_opens_a_var_dict_with_one_job(spark, tmp_path):
+    """The driver copy is the size test: the first decode build against
+    a freshly loaded one-file var dict launches one Spark job (the
+    bounded collect), a second build none."""
+    from clp_core_spark.plans import dictstore
+    from clp_core_spark.sources.transcripts import generate_transcripts
+
+    t = generate_transcripts(spark, num_turns=200, seed=3)
+    enc, lt, vd = encode_pipeline.encode(t, key_cols=KEYS)
+    dictstore.save_dict(str(tmp_path), "var", vd.coalesce(1))
+    vd = dictstore.load_dict(spark, str(tmp_path), "var")
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    before = int(scheduler.nextJobId())
+    encode_pipeline.decode(enc, lt, vd, KEYS)
+    assert int(scheduler.nextJobId()) == before + 1
+    encode_pipeline.decode(enc, lt, vd, KEYS)
+    assert int(scheduler.nextJobId()) == before + 1
+
+
+def test_dictionary_consistency(spark, transcripts, monkeypatch):
     encoded, logtype_dict, var_dict = encode_pipeline.encode(transcripts, key_cols=KEYS)
     lt = logtype_dict.collect()
     n = len(lt)
@@ -39,6 +76,21 @@ def test_dictionary_consistency(spark, transcripts):
     )
     dense_ids = sorted(r["var_id"] for r in vd_dense.collect())
     assert dense_ids == list(range(len(dense_ids))), "dense var IDs from 0"
+
+    # dense-ID resolve through the JVM join (var dict over the driver-copy
+    # bound) stores exactly what the broadcast-map resolve stores
+    enc_map, _, _ = encode_pipeline.encode(
+        transcripts, key_cols=KEYS, var_id_mode="dense"
+    )
+    monkeypatch.setattr(dictionaries, "BROADCAST_VAR_DICT_MAX", 0)
+    enc_join, _, _ = encode_pipeline.encode(
+        transcripts, key_cols=KEYS, var_id_mode="dense"
+    )
+    assert "posexplode" not in _plan(enc_map)
+    assert "posexplode" in _plan(enc_join)
+    cols = [*KEYS, "logtype_id", "encoded_vars"]
+    assert enc_map.select(*cols).exceptAll(enc_join.select(*cols)).count() == 0
+    assert enc_join.count() == enc_map.count()
 
 
 def test_dictionary_determinism_across_parallelism(spark, transcripts):

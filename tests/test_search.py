@@ -106,6 +106,22 @@ def test_search_forced_join_path(corpus, query):
     )
 
 
+def test_verify_decode_join_path_equals_map_path(corpus, monkeypatch):
+    """A var dict over the driver-copy bound (its verify residue's slimmed
+    dictionary too) decodes the verify residue through the JVM join and
+    returns exactly the map path's hits."""
+    from clp_core_spark.operators import dictionaries
+
+    transcripts, encoded, lt, vd = corpus
+    query = "session token *ab* refreshed"  # mid-star: verified on decode
+    expected = naive(transcripts, query)
+    assert run(corpus, query) == expected
+    monkeypatch.setattr(dictionaries, "BROADCAST_VAR_DICT_MAX", 0)
+    got = search.search_text(encoded, lt, vd.select("*"), query, KEYS)
+    assert "posexplode" in got._jdf.queryExecution().optimizedPlan().toString()
+    assert {(r["conv_id"], r["turn_idx"]) for r in got.collect()} == expected
+
+
 def test_forced_join_compile_uses_dataframes(corpus):
     _, encoded, lt, vd = corpus
     compiled = search.compile_query("container_1*", lt, vd, max_literal_ids=0)

@@ -144,13 +144,14 @@ def test_clean_up_wildcard_search_string_golden(raw, want):
     assert clean_up_wildcard_search_string(raw) == want
 
 
-def test_inmemory_probe_equals_distributed_probe(spark):
+def test_inmemory_probe_equals_distributed_probe(spark, monkeypatch):
     """The driver-memory logtype probe must return exactly the IDs the
     distributed rlike probe returns, for wildcard patterns over a
     deliberately nasty dictionary (placeholder bytes, escapes, regex
     metachars, unicode)."""
     import random
 
+    from clp_core_spark.operators import dictionaries
     from clp_core_spark.operators.search import DictProbes
 
     rng = random.Random(7)
@@ -159,9 +160,8 @@ def test_inmemory_probe_equals_distributed_probe(spark):
         "".join(rng.choice(alphabet) for _ in range(rng.randint(1, 12)))
         for _ in range(160)
     })
-    lt = spark.createDataFrame(
-        [(v, i) for i, v in enumerate(values)], "logtype string, logtype_id long"
-    ).persist()
+    rows = [(v, i) for i, v in enumerate(values)]
+    schema = "logtype string, logtype_id long"
     empty_vars = spark.createDataFrame([], "var_str string, var_id long")
 
     pattern_bits = ["*", "?", "a", "b*", "*x", "\\*", "\\?", "x\x11", "*a?b*"]
@@ -170,9 +170,22 @@ def test_inmemory_probe_equals_distributed_probe(spark):
         for _ in range(30)
     }
     for ignore_case in (False, True):
-        mem = DictProbes(lt, empty_vars, ignore_case)
-        dist = DictProbes(lt, empty_vars, ignore_case)
-        dist.LOGTYPE_DRIVER_MAX = 0  # force the distributed path
+        # a fresh, unopened dictionary per side: the driver copy is kept
+        # on the DataFrame, and the bound only applies when it is taken
+        mem = DictProbes(spark.createDataFrame(rows, schema), empty_vars, ignore_case)
+        dist = DictProbes(spark.createDataFrame(rows, schema), empty_vars, ignore_case)
+        assert dictionaries.driver_copy(mem.logtype_dict) is not None
+        with monkeypatch.context() as m:
+            m.setattr(dictionaries, "LOGTYPE_DRIVER_MAX", 0)  # distributed path
+            assert dictionaries.driver_copy(dist.logtype_dict) is None
+        probed = []
+        real_probe = dist._probe
+
+        def spy(df, value_col, id_col, pattern, exact):
+            probed.append(pattern)
+            return real_probe(df, value_col, id_col, pattern, exact)
+
+        monkeypatch.setattr(dist, "_probe", spy)
         for pat in patterns:
             a = mem.logtypes(pat)
             b = dist.logtypes(pat)
@@ -181,4 +194,5 @@ def test_inmemory_probe_equals_distributed_probe(spark):
             ids_b = set(b.ids if b.ids is not None
                         else [r["logtype_id"] for r in b.df.collect()])
             assert ids_a == ids_b, (pat, ignore_case, ids_a ^ ids_b)
-    lt.unpersist()
+        # every pattern went through the distributed rlike probe
+        assert sorted(probed) == sorted(patterns)
