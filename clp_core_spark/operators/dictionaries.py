@@ -4,49 +4,91 @@ CLP's dictionaries assign sequential insertion-order IDs with exact-string
 dedup (clp/VariableDictionaryWriter.cpp:7-37, clp/DictionaryWriter.hpp:105-106).
 Insertion order is meaningless in a distributed engine, so we keep the two
 properties the rest of the system relies on — *dense* IDs starting at 0 and
-*deterministic* string->ID mapping for a given corpus — by ordering
-lexicographically. Incremental builds (checkpoint resume) append new
+*deterministic* string->ID mapping for a given corpus — by ordering on
+(hash bucket, value). Incremental builds (checkpoint resume) append new
 entries at max_id+1, mirroring the writer's monotone ID counter.
 
-ID assignment is fully parallel (no single-partition window): strings are
-hash-bucketed, per-bucket counts produce bucket offsets on the driver
-(#buckets is small), and a per-bucket window assigns within-bucket ranks.
-Scales to variable dictionaries far larger than driver memory.
+ID assignment follows the driver-copy rule (:func:`driver_copy`): one
+``limit(bound + 1)`` collect of the distinct (value, hash bucket) pairs is
+both the size test and the data. Within the dictionary kind's bound the
+IDs are assigned on the driver and the dictionary comes back as a local
+relation that already holds its driver copy: no persist or count job
+pins it, downstream broadcasts read it without recomputing anything, and
+it is saved as one file. CLP keeps the logtype dictionary in memory for
+the same reason (templates << data, Grep.cpp:477-495). Above
+the bound the assignment is distributed, with no single-partition
+window: per-bucket counts give bucket offsets on the driver (#buckets is
+small) and a per-bucket window ranks values within their bucket. Both
+paths order new values by (bucket, UTF-8 bytes), so they assign the same
+IDs; the distributed one scales to variable dictionaries far larger than
+driver memory.
 """
 
 from __future__ import annotations
 
 import threading
 
+import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
+from clp_core_spark.session import local_table
+
 DEFAULT_ID_BUCKETS = 64
+
+
+def _next_id(top) -> int:
+    """The first ID after an existing dictionary's max ID ``top`` (None or
+    NaN for an empty dictionary)."""
+    return 0 if pd.isna(top) else int(top) + 1
 
 
 def assign_dense_ids(
     values: DataFrame,
     value_col: str,
     id_col: str,
-    start_id: int = 0,
+    existing: DataFrame | None = None,
     num_buckets: int = DEFAULT_ID_BUCKETS,
 ) -> DataFrame:
-    """Assign deterministic dense IDs ``start_id..start_id+n-1`` to the
-    distinct values of ``value_col``.
+    """``DataFrame[value_col, id_col]``: deterministic dense IDs for the
+    distinct non-null strings of ``value_col``. With ``existing`` (a
+    dictionary with the same two columns) its entries keep their IDs and
+    the values it lacks get IDs from its max ID + 1.
 
-    Global ID order is (hash-bucket, value) — deterministic and dense but
-    not globally lexicographic, which is all CLP's semantics require
+    New IDs follow (hash bucket, value) order — deterministic and dense
+    but not globally lexicographic, which is all CLP's semantics require
     (IDs are opaque handles; only dedup + stability matter).
     """
-    distinct = values.select(F.col(value_col)).where(F.col(value_col).isNotNull()).distinct()
-    bucketed = distinct.withColumn(
-        "_bucket", F.pmod(F.xxhash64(F.col(value_col)), F.lit(num_buckets)).cast("int")
+    bucketed = (
+        values.select(value_col)
+        .where(F.col(value_col).isNotNull())
+        .distinct()
+        .withColumn(
+            "_bucket", F.pmod(F.xxhash64(F.col(value_col)), F.lit(num_buckets)).cast("int")
+        )
     )
+    old = None  # the existing dictionary's driver copy, as a pandas frame
+    if existing is not None:
+        copy = driver_copy(existing)
+        old = None if copy is None else copy.frame[[value_col, id_col]]
+    if existing is None or old is not None:
+        local = _assign_on_driver(bucketed, value_col, id_col, old)
+        if local is not None:
+            return local
+
+    start = 0
+    if existing is not None:
+        bucketed = bucketed.join(existing.select(value_col), value_col, "left_anti")
+        start = _next_id(
+            old[id_col].max()
+            if old is not None
+            else existing.agg(F.max(id_col)).collect()[0][0]
+        )
     counts = {
         r["_bucket"]: r["cnt"]
         for r in bucketed.groupBy("_bucket").agg(F.count("*").alias("cnt")).collect()
     }
-    offsets, acc = {}, start_id
+    offsets, acc = {}, start
     for b in range(num_buckets):
         offsets[b] = acc
         acc += counts.get(b, 0)
@@ -54,11 +96,43 @@ def assign_dense_ids(
         *[x for b in range(num_buckets) for x in (F.lit(b), F.lit(offsets[b]))]
     )
     w = Window.partitionBy("_bucket").orderBy(value_col)
-    return (
+    ranked = (
         bucketed.withColumn("_rn", F.row_number().over(w) - 1)
         .withColumn(id_col, (offset_map[F.col("_bucket")] + F.col("_rn")).cast("long"))
         .select(value_col, id_col)
     )
+    return ranked if existing is None else existing.unionByName(ranked)
+
+
+def _assign_on_driver(
+    bucketed: DataFrame, value_col: str, id_col: str, old: pd.DataFrame | None
+) -> DataFrame | None:
+    """The driver rule of :func:`assign_dense_ids`: the whole dictionary
+    (``old`` entries plus the new values) as a local relation carrying its
+    driver copy, or None when it would exceed its kind's bound."""
+    bound = _driver_bound([id_col])
+    pairs = bucketed.limit(bound + 1).toPandas()
+    if len(pairs) > bound:
+        return None
+    if old is not None:
+        pairs = pairs[~pairs[value_col].isin(old[value_col])]
+        if len(old) + len(pairs) > bound:
+            return None
+    # the window's order: bucket, then Spark's binary string order
+    new = sorted(zip(pairs["_bucket"], pairs[value_col]), key=lambda p: (p[0], p[1].encode()))
+    start = 0 if old is None else _next_id(old[id_col].max())
+    frame = pd.DataFrame(
+        {
+            value_col: pd.Series([v for _, v in new], dtype=object),
+            id_col: pd.Series(range(start, start + len(new)), dtype="int64"),
+        }
+    )
+    if old is not None:
+        frame = pd.concat([old, frame], ignore_index=True)
+    spark = bucketed.sparkSession
+    out = local_table(spark, frame, f"{value_col} string, {id_col} long")
+    out._clp_driver_copy = DriverCopy(spark, frame)
+    return out
 
 
 def build_logtype_dict(
@@ -72,11 +146,7 @@ def build_logtype_dict(
     new IDs at max_id+1 — deterministic across resumed runs (SURVEY §7
     "hard parts"; mirrors clp/VariableDictionaryWriter.cpp:16-23).
     """
-    if existing is None:
-        return assign_dense_ids(parsed, logtype_col, "logtype_id")
-    new = parsed.select(logtype_col).distinct().join(existing, logtype_col, "left_anti")
-    start = (existing.agg(F.max("logtype_id")).collect()[0][0] or -1) + 1
-    return existing.unionByName(assign_dense_ids(new, logtype_col, "logtype_id", start_id=start))
+    return assign_dense_ids(parsed, logtype_col, "logtype_id", existing=existing)
 
 
 def build_var_dict_hash(
@@ -111,12 +181,7 @@ def build_var_dict(
     """``DataFrame[var_str: string, var_id: long]`` over all dictionary
     variables appearing in ``parsed[dict_strs_col]`` (array<string>)."""
     vals = parsed.select(F.explode(dict_strs_col).alias("var_str"))
-    if existing is None:
-        return assign_dense_ids(vals, "var_str", "var_id")
-    new = vals.select("var_str").distinct().join(existing, "var_str", "left_anti")
-    start = (existing.agg(F.max("var_id")).collect()[0][0] or -1) + 1
-    return existing.unionByName(assign_dense_ids(new, "var_str", "var_id", start_id=start))
-
+    return assign_dense_ids(vals, "var_str", "var_id", existing=existing)
 
 
 # Driver-copy bounds, one per dictionary kind (see driver_copy). A logtype
@@ -128,6 +193,11 @@ def build_var_dict(
 # dictionaries; beyond it both take the JVM explode -> join -> regroup.
 LOGTYPE_DRIVER_MAX = 100_000
 BROADCAST_VAR_DICT_MAX = 200_000
+
+
+def _driver_bound(columns: list[str]) -> int:
+    """The driver-copy bound of the dictionary kind with these columns."""
+    return LOGTYPE_DRIVER_MAX if "logtype_id" in columns else BROADCAST_VAR_DICT_MAX
 
 
 class DriverCopy:
@@ -169,11 +239,7 @@ def driver_copy(dict_df: DataFrame) -> DriverCopy | None:
     copy stored first."""
     copy = getattr(dict_df, "_clp_driver_copy", None)
     if copy is None:
-        bound = (
-            LOGTYPE_DRIVER_MAX
-            if "logtype_id" in dict_df.columns
-            else BROADCAST_VAR_DICT_MAX
-        )
+        bound = _driver_bound(dict_df.columns)
         # through Arrow: no per-row Python objects for a 10^5-entry dict
         frame = dict_df.limit(bound + 1).toPandas()
         built = DriverCopy(dict_df.sparkSession, frame) if len(frame) <= bound else False
@@ -182,3 +248,9 @@ def driver_copy(dict_df: DataFrame) -> DriverCopy | None:
             if copy is None:
                 dict_df._clp_driver_copy = copy = built
     return copy or None
+
+
+def has_driver_copy(dict_df: DataFrame) -> bool:
+    """Whether the dictionary already holds its driver copy (a driver-built
+    dictionary always does), without collecting one."""
+    return bool(getattr(dict_df, "_clp_driver_copy", None))

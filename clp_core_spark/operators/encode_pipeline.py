@@ -7,8 +7,10 @@ clp/EncodedVariableInterpreter.cpp:206-225):
 1. An Arrow batch kernel (tokenizer.tokenize_arrow_arrays, run through
    ``mapInArrow``) extracts the logtype template + typed variables per
    turn.
-2. The logtype dictionary is built by distributed distinct + dense-ID
-   assignment and broadcast back (CLP's premise: templates << data).
+2. The logtype dictionary gets dense IDs on the driver from one bounded
+   collect of its distinct templates (CLP's premise: templates << data;
+   dictionaries.assign_dense_ids falls back to a distributed assignment
+   above ``LOGTYPE_DRIVER_MAX``) and is broadcast back.
 3. Dictionary variables get their IDs inline (``xxhash64``, the default)
    or, in dense mode, through the var dictionary.
 
@@ -258,7 +260,7 @@ def encode(
       deterministic 1:1 string<->ID mapping matters for semantics.
     - ``"dense"``: CLP-exact dense sequential IDs
       (clp/VariableDictionaryWriter.cpp:16-23 analog) via
-      dictionaries.assign_dense_ids + broadcast/shuffle resolve — the
+      dictionaries.assign_dense_ids + broadcast-map/join resolve — the
       faithful-storage mode; costs a resolve join at scale.
     """
     if pre_parsed is not None:
@@ -274,16 +276,18 @@ def encode(
         # Parse once, feed the dict builds and the encode join.
         parsed = parsed.persist()
 
-    logtype_dict = dictionaries.build_logtype_dict(
-        parsed, existing_logtype_dict
-    ).persist()
-    # Materialize the (tiny) logtype dict NOW: it is broadcast at least
-    # twice downstream (the encode join + any logtype-class routing), and
-    # concurrent broadcast builds in one job each re-ran the full
-    # distinct+rank subtree over the parsed corpus before the cache had
-    # materialized (REST stage audit: two 32-task/19-CPU-s stages for a
-    # 24-row dictionary). One bounded count pins the cache first.
-    logtype_dict.count()
+    logtype_dict = dictionaries.build_logtype_dict(parsed, existing_logtype_dict)
+    # Within LOGTYPE_DRIVER_MAX (CLP's premise: templates << data) the
+    # dictionary comes back built on the driver, a local relation that
+    # every downstream broadcast reads without recomputing anything.
+    # Only a distributed build is materialized here: it is broadcast at
+    # least twice downstream (the encode join + any logtype-class
+    # routing), and concurrent broadcast builds in one job each re-ran the
+    # full distinct+rank subtree over the parsed corpus before a cache
+    # had materialized. One count pins the cache first.
+    if not dictionaries.has_driver_copy(logtype_dict):
+        logtype_dict = logtype_dict.persist()
+        logtype_dict.count()
 
     if var_id_mode == "hash":
         var_dict = dictionaries.build_var_dict_hash(parsed, existing_var_dict)
@@ -299,7 +303,9 @@ def encode(
             ),
         ).drop("encoded")
     else:
-        var_dict = dictionaries.build_var_dict(parsed, existing_var_dict).persist()
+        var_dict = dictionaries.build_var_dict(parsed, existing_var_dict)
+        if not dictionaries.has_driver_copy(var_dict):
+            var_dict = var_dict.persist()
         with_ids = resolve_dict_ids(parsed, var_dict, key_cols)
 
     encoded = with_ids.join(F.broadcast(logtype_dict), "logtype")

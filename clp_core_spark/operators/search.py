@@ -366,6 +366,16 @@ class SubQueryPlan:
             v.values_df is None for v in self.vars
         )
 
+    def literal_key(self) -> tuple | None:
+        """What a literal subquery matches, for dedup; None otherwise."""
+        if not self.is_literal():
+            return None
+        return (
+            frozenset(self.logtype_ids),
+            tuple(frozenset(v.values) for v in self.vars),
+            self.wildcard_match_required,
+        )
+
 
 @dataclass
 class CompiledQuery:
@@ -602,6 +612,9 @@ def compile_query(
     out = CompiledQuery(search_string=processed, ignore_case=ignore_case)
     probes = DictProbes(logtype_dict, var_dict, ignore_case, max_literal_ids)
     _prefetch_var_probes(tokens, probes)
+    # the ambiguous-token odometer can interpret a query several ways that
+    # probe to the same IDs; a literal subquery is kept once
+    seen: set[tuple] = set()
 
     changed = True
     while changed:
@@ -640,7 +653,10 @@ def compile_query(
             if not res.empty:
                 sub.logtype_ids = res.ids
                 sub.logtype_df = res.df
-                out.sub_queries.append(sub)
+                key = sub.literal_key()
+                if key is None or key not in seen:
+                    out.sub_queries.append(sub)
+                    seen.add(key)
 
         changed = False
         for tok in ambiguous:

@@ -37,6 +37,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from clp_core_spark.session import local_table
+
 # clp_s NodeType names (clp_s/SchemaTree.hpp:27-40)
 T_INTEGER = "Integer"
 T_FLOAT = "Float"
@@ -281,8 +283,8 @@ def encode_semistructured(
                         int(child_stats[f"ch_{name}__{f.name}"] or 0),
                     )
                 )
-    schema_tree = spark.createDataFrame(
-        tree_rows, "path string, node_type string, n_present long"
+    schema_tree = local_table(
+        spark, tree_rows, "path string, node_type string, n_present long"
     )
 
     # Schema ID: dense ID per distinct present-leaf set.

@@ -75,6 +75,7 @@ from pyspark.errors import AnalysisException
 
 from clp_core_spark.functions import textstats
 from clp_core_spark.operators import dedup, packing, sampling
+from clp_core_spark.session import local_table
 
 
 @dataclass
@@ -88,8 +89,8 @@ class CurationResult:
 
     def ledger(self) -> DataFrame:
         """The stage ledger as a DataFrame (mirrors pipeline.ledger())."""
-        spark = self.df.sparkSession
-        return spark.createDataFrame(
+        return local_table(
+            self.df.sparkSession,
             [
                 (
                     s["stage"],
@@ -249,7 +250,8 @@ def curate(
         out = build()
         out.write.mode("overwrite").parquet(path)
         out = spark.read.parquet(path)  # downstream reads the committed file
-        spark.createDataFrame(
+        local_table(
+            spark,
             [(name, out.count(), round(time.monotonic() - t0, 3), params_fp)],
             _CKPT_LEDGER_SCHEMA,
         ).write.mode("append").parquet(ledger_path)

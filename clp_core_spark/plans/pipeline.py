@@ -30,14 +30,16 @@ import json
 import os
 import threading
 import time
+from datetime import datetime, timedelta, timezone
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.errors import AnalysisException
 
-from clp_core_spark.operators import dictionaries, encode_pipeline, enrich, route
+from clp_core_spark.operators import encode_pipeline, enrich, route
 from clp_core_spark.plans import dictstore
 from clp_core_spark.plans.tablestore import TableStore
+from clp_core_spark.session import local_table
 from clp_core_spark.sources import transcripts
 
 LEDGER_SCHEMA = (
@@ -46,6 +48,17 @@ LEDGER_SCHEMA = (
     " var_dict_size long, wall_sec double, turns_per_sec double,"
     " input_min_ts timestamp, input_max_ts timestamp, finished_at double"
 )
+TS_INDEX_SCHEMA = (
+    "partition_id int, sub_epoch int, pattern_id int,"
+    " min_ts timestamp, max_ts timestamp"
+)
+_UNIX_EPOCH = datetime(1970, 1, 1, tzinfo=timezone.utc)
+
+
+def _utc(micros: int | None) -> datetime | None:
+    """An aggregated ``unix_micros`` as an exact UTC datetime, the form
+    local_table takes timestamps in."""
+    return None if micros is None else _UNIX_EPOCH + timedelta(microseconds=micros)
 
 
 class IngestPipeline:
@@ -72,7 +85,18 @@ class IngestPipeline:
     swapped before the commit, so their file names are part of the
     version too: an ingest that crashed after the swap must not leave an
     open dictionary pointing at deleted files. Ingest always reads the
-    dictionaries it grows afresh."""
+    dictionaries it grows afresh.
+
+    Jobs per epoch: a fresh single-epoch ingest launches 22 Spark jobs
+    (23 as a session's first; measured on 2k- and 10k-turn inputs): the
+    logtype dictionary's bounded collect, one aggregation for the
+    ledger row count and the per-pattern ts_index spans, the broadcasts
+    of the role/tool dimensions and the logtype dictionary, the count
+    that pins the enriched rows, the three sink writes, the two
+    dictionary saves, and the ts_index and ledger appends. Every table
+    built on the driver is an Arrow local relation
+    (session.local_table), so none of them starts a Python worker, and
+    a missing ledger or ts_index is read without a job."""
 
     def __init__(
         self,
@@ -191,13 +215,14 @@ class IngestPipeline:
     # -- ledger ------------------------------------------------------------
 
     def ledger(self) -> DataFrame:
-        try:
-            return self.spark.read.parquet(self.ledger_path)
-        except AnalysisException:  # first run (path missing): empty ledger;
-            # a real read error (corrupt file) propagates — taken as "nothing
-            # committed" it would re-ingest every partition and turn every
-            # search into zero hits
-            return self.spark.createDataFrame([], LEDGER_SCHEMA)
+        # a missing ledger is "nothing committed", an empty local relation
+        # that aggregates without a job (the store is local-fs, as for
+        # dictstore and _version); a real read error (corrupt file)
+        # propagates — taken as "nothing committed" it would re-ingest
+        # every partition and turn every search into zero hits
+        if not os.path.exists(self.ledger_path):
+            return local_table(self.spark, [], LEDGER_SCHEMA)
+        return self.spark.read.schema(LEDGER_SCHEMA).parquet(self.ledger_path)
 
     def done_partitions(self) -> set[int]:
         """Partitions whose EVERY sub-epoch committed: a partition split
@@ -239,12 +264,12 @@ class IngestPipeline:
                 # LACKS its tags, silently excluding its data from
                 # every tagged search.
                 ep = row["partition_id"] + row["sub_epoch"] * self.num_partitions
-                self.spark.createDataFrame(
-                    [(ep, t) for t in self.tags], "epoch_part int, tag string"
+                local_table(
+                    self.spark, [(ep, t) for t in self.tags], "epoch_part int, tag string"
                 ).write.mode("append").parquet(self.tags_path)
-            self.spark.createDataFrame(
-                [row], LEDGER_SCHEMA
-            ).write.mode("append").parquet(self.ledger_path)
+            local_table(self.spark, [row], LEDGER_SCHEMA).write.mode("append").parquet(
+                self.ledger_path
+            )
 
     def tagged_epochs(self, tags: list[str]) -> set[int]:
         """Epoch ids carrying ANY of ``tags`` — the schedule-time tag
@@ -277,13 +302,13 @@ class IngestPipeline:
         )
         return dictstore.load_dict(self.spark, root, name)
 
-    def _save_dict(self, name: str, df: DataFrame, epoch_part: int | None = None) -> None:
+    def _save_dict(self, name: str, df: DataFrame, epoch_part: int | None = None) -> int:
         root = (
             f"{self.dicts_path}/epoch_part={epoch_part}"
             if epoch_part is not None
             else self.dicts_path
         )
-        dictstore.save_dict(root, name, df)
+        return dictstore.save_dict(root, name, df)
 
     # -- the per-partition unit of work -------------------------------------
 
@@ -426,14 +451,13 @@ class IngestPipeline:
         ).drop("logtype")
         enriched = enriched.withColumn("epoch_part", F.lit(epoch_part)).persist()
 
-        stats = part_df.agg(
-            F.count("*").alias("n"), F.min("ts").alias("mn"), F.max("ts").alias("mx")
-        ).collect()[0]
-
         # per-pattern timestamp index (clp_s timestamp dictionary:
         # TimestampEntry.hpp:58-95 keeps min/max PER PATTERN; queries are
         # proven false pattern-by-pattern, EvaluateTimestampIndex.cpp).
         # Inputs without a pattern_id column index as one pattern (-1).
+        # The same one aggregation gives the ledger's row count and span.
+        # Timestamps leave Spark as unix_micros, so the driver-built rows
+        # carry them exactly whatever the Python process's time zone.
         pat_col = (
             F.col("pattern_id").cast("int")
             if "pattern_id" in part_df.columns
@@ -441,17 +465,24 @@ class IngestPipeline:
         )
         pat_rows = (
             part_df.groupBy(pat_col.alias("pattern_id"))
-            .agg(F.min("ts").alias("min_ts"), F.max("ts").alias("max_ts"))
+            .agg(
+                F.count("*").alias("n"),
+                F.unix_micros(F.min("ts")).alias("mn"),
+                F.unix_micros(F.max("ts")).alias("mx"),
+            )
             .collect()
         )
+        n_input = sum(r["n"] for r in pat_rows)
+        mins = [r["mn"] for r in pat_rows if r["mn"] is not None]
+        maxs = [r["mx"] for r in pat_rows if r["mx"] is not None]
         with self._meta_lock:
-            self.spark.createDataFrame(
+            local_table(
+                self.spark,
                 [
-                    (partition_id, sub_epoch, r["pattern_id"], r["min_ts"], r["max_ts"])
+                    (partition_id, sub_epoch, r["pattern_id"], _utc(r["mn"]), _utc(r["mx"]))
                     for r in pat_rows
                 ],
-                "partition_id int, sub_epoch int, pattern_id int,"
-                " min_ts timestamp, max_ts timestamp",
+                TS_INDEX_SCHEMA,
             ).write.mode("append").parquet(self.ts_index_path)
 
         def _write_sink(kind: str) -> None:
@@ -498,10 +529,8 @@ class IngestPipeline:
             )
 
         ep = epoch_part if self.dict_scope == "epoch" else None
-        self._save_dict("logtype", lt_dict, epoch_part=ep)
-        self._save_dict("var", var_dict, epoch_part=ep)
-        lt_n = self._load_dict("logtype", epoch_part=ep).count()
-        var_n = self._load_dict("var", epoch_part=ep).count()
+        lt_n = self._save_dict("logtype", lt_dict, epoch_part=ep)
+        var_n = self._save_dict("var", var_dict, epoch_part=ep)
         enriched.unpersist()
 
         wall = time.time() - t0
@@ -510,14 +539,14 @@ class IngestPipeline:
                 "partition_id": partition_id,
                 "sub_epoch": sub_epoch,
                 "n_subs": n_subs,
-                "n_rows": stats["n"],
+                "n_rows": n_input,
                 "n_routed": n_routed,
                 "lt_dict_size": lt_n,
                 "var_dict_size": var_n,
                 "wall_sec": round(wall, 3),
-                "turns_per_sec": round(stats["n"] / wall, 1) if wall > 0 else 0.0,
-                "input_min_ts": stats["mn"],
-                "input_max_ts": stats["mx"],
+                "turns_per_sec": round(n_input / wall, 1) if wall > 0 else 0.0,
+                "input_min_ts": _utc(min(mins, default=None)),
+                "input_max_ts": _utc(max(maxs, default=None)),
                 "finished_at": time.time(),
             }
         )
@@ -528,10 +557,9 @@ class IngestPipeline:
         """(partition_id, sub_epoch, pattern_id, min_ts, max_ts) — the
         timestamp dictionary (one span per pattern per epoch), None for
         work dirs written before the index existed."""
-        try:
-            return self.spark.read.parquet(self.ts_index_path)
-        except AnalysisException:  # legacy work dir / nothing ingested
+        if not os.path.exists(self.ts_index_path):  # legacy work dir / nothing ingested
             return None
+        return self.spark.read.schema(TS_INDEX_SCHEMA).parquet(self.ts_index_path)
 
     def epochs_for_range(
         self, ts_begin_ms: int | None = None, ts_end_ms: int | None = None

@@ -9,13 +9,18 @@ share the same tuning:
 * Arrow on — every CLP-specific kernel is an Arrow-batched pandas UDF.
 * Parquet zstd — mirrors CLP's zstd segment compression
   (components/core/src/clp/streaming_compression/zstd/).
+
+:func:`local_table` is the one way product code turns driver-held rows
+into a DataFrame.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+import pandas as pd
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType, TimestampType
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
@@ -78,3 +83,35 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_table(spark: SparkSession, data, schema: str | StructType) -> DataFrame:
+    """A small driver-built table as an Arrow local relation: its plan is
+    a ``LocalTableScan``, so reading it needs no Python worker and no
+    Spark job of its own. (``createDataFrame`` of a Python list plans a
+    ``Scan ExistingRDD`` instead: a Python-worker job every time it is
+    read.) ``data`` is a pandas DataFrame holding ``schema``'s columns,
+    or a list of rows: tuples in ``schema``'s column order, or dicts.
+
+    Timestamp values must be timezone-aware: Arrow reads a naive
+    datetime as a wall-clock time in the session zone, while ``collect``
+    returns naive datetimes in the Python process's zone, so a collected
+    timestamp passed back here unconverted would shift by the difference
+    between the two."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    if isinstance(data, pd.DataFrame):
+        table = pa.Table.from_pandas(
+            data[schema.names], schema=arrow_schema, preserve_index=False
+        )
+    else:
+        rows = [r if isinstance(r, dict) else dict(zip(schema.names, r)) for r in data]
+        ts_cols = [f.name for f in schema.fields if isinstance(f.dataType, TimestampType)]
+        if any(r[c] is not None and r[c].tzinfo is None for r in rows for c in ts_cols):
+            raise ValueError("local_table: naive datetime in a timestamp column")
+        table = pa.Table.from_pylist(rows, schema=arrow_schema)
+    return spark.createDataFrame(table, schema)

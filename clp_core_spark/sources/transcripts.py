@@ -24,6 +24,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from clp_core_spark.session import local_table
+
 BASE_EPOCH_MS = 1462692845251  # 2016-05-08T07:34:05.251Z (log.txt:1)
 
 ROLES = ["user", "assistant", "system", "tool"]
@@ -151,7 +153,7 @@ def role_dim(spark: SparkSession) -> DataFrame:
         ("system", "control", False, 3),
         ("tool", "tool", False, 4),
     ]
-    return spark.createDataFrame(rows, "role string, role_class string, is_human boolean, priority int")
+    return local_table(spark, rows, "role string, role_class string, is_human boolean, priority int")
 
 
 def tool_dim(spark: SparkSession) -> DataFrame:
@@ -163,4 +165,4 @@ def tool_dim(spark: SparkSession) -> DataFrame:
         "downloader": "infra", "indexer": "infra", "notebook": "ide",
     }
     rows = [(t, fam[t], t not in ("browser", "uploader")) for t in TOOLS]
-    return spark.createDataFrame(rows, "tool string, tool_family string, is_sandboxed boolean")
+    return local_table(spark, rows, "tool string, tool_family string, is_sandboxed boolean")

@@ -531,3 +531,113 @@ def test_corrupt_ledger_raises_instead_of_reading_as_empty(spark, input_df, work
         with pytest.raises(Exception) as err:
             call()
         assert not isinstance(err.value, AnalysisException)
+
+
+@pytest.fixture(scope="module")
+def small_df(spark):
+    df = generate_transcripts(spark, num_turns=2000, seed=42).persist()
+    df.count()
+    return df
+
+
+def _sql_runs(spark) -> list:
+    """The session's retained SQL executions (id, physical plan)."""
+    runs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return [
+        (runs.apply(i).executionId(), runs.apply(i).physicalPlanDescription())
+        for i in range(runs.size())
+    ]
+
+
+def test_ingest_plans_no_python_rdd_scan(spark, small_df, work_root):
+    """Every table a fresh tagged ingest builds on the driver (ledger,
+    ts_index and tag rows, role/tool dims, logtype dictionary) is an
+    Arrow local relation: none of its SQL executions plans a
+    ``Scan ExistingRDD``, the Python-worker job a list-built DataFrame
+    costs."""
+    last = max((i for i, _ in _sql_runs(spark)), default=-1)
+    IngestPipeline(spark, work_root, num_partitions=1, tags=["t"]).run(small_df)
+    plans = [p for i, p in _sql_runs(spark) if i > last]
+    assert plans
+    assert [p for p in plans if "Scan ExistingRDD" in p] == []
+
+
+def test_driver_built_tables_are_local_relations(spark, small_df, work_root):
+    from datetime import datetime, timezone
+
+    from clp_core_spark.operators import dictionaries, encode_pipeline
+    from clp_core_spark.session import local_table
+    from clp_core_spark.sources import transcripts
+
+    parsed = encode_pipeline.parse(small_df, slim=True)
+    lt = dictionaries.build_logtype_dict(parsed)
+    tables = [
+        transcripts.role_dim(spark),
+        transcripts.tool_dim(spark),
+        lt,
+        dictionaries.build_logtype_dict(parsed, existing=lt),
+        IngestPipeline(spark, work_root).ledger(),  # nothing committed yet
+        local_table(
+            spark, [(1, datetime(2020, 1, 1, tzinfo=timezone.utc))], "a int, t timestamp"
+        ),
+    ]
+    for t in tables:
+        plan = t._jdf.queryExecution().executedPlan().toString()
+        assert plan.startswith("LocalTableScan"), plan
+    assert dictionaries.has_driver_copy(lt)
+    # a naive datetime would be read in the session zone: refused
+    with pytest.raises(ValueError, match="naive"):
+        local_table(spark, [(datetime(2020, 1, 1),)], "t timestamp")
+
+
+def test_timestamps_round_trip_in_a_non_utc_process_zone(
+    spark, small_df, work_root, monkeypatch
+):
+    """The ledger span and the per-pattern ts_index rows are built on the
+    driver; they must hold the input's exact instants when the Python
+    process runs in another zone than the session (UTC)."""
+    import time
+
+    monkeypatch.setenv("TZ", "IST-05:30")
+    time.tzset()
+    try:
+        pipe = IngestPipeline(spark, work_root, num_partitions=2)
+        pipe.run(small_df)
+        part = F.pmod(F.xxhash64("conv_id"), F.lit(2)).alias("p")
+        want = {
+            tuple(r)
+            for r in small_df.groupBy(part).agg(
+                F.unix_micros(F.min("ts")), F.unix_micros(F.max("ts"))
+            ).collect()
+        }
+        ledger = {
+            tuple(r)
+            for r in pipe.ledger().select(
+                "partition_id",
+                F.unix_micros("input_min_ts"),
+                F.unix_micros("input_max_ts"),
+            ).collect()
+        }
+        index = {
+            tuple(r)
+            for r in pipe.ts_index().select(
+                "partition_id", F.unix_micros("min_ts"), F.unix_micros("max_ts")
+            ).collect()
+        }
+        assert ledger == want
+        assert index == want
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+
+
+def test_fresh_ingest_spark_jobs(spark, small_df, work_root):
+    """A fresh single-epoch ingest of 2000 turns launches at most 23
+    Spark jobs. With every driver-held table built from a Python list and
+    the logtype dictionary ranked through a bucket-count collect and a
+    window, the same ingest took 35 (39 as the session's first ingest);
+    23 is two-thirds of 35."""
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    before = int(scheduler.nextJobId())
+    IngestPipeline(spark, work_root, num_partitions=1).run(small_df)
+    assert int(scheduler.nextJobId()) - before <= 23

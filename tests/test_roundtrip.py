@@ -3,6 +3,7 @@ gate (components/core/tests/test-clp_s-end_to_end.cpp:98-140): compress,
 extract, byte-compare under stable (conv_id, turn_idx) ordering."""
 
 import pyspark.sql.functions as F
+import pytest
 
 from clp_core_spark.operators import dictionaries, encode_pipeline
 
@@ -118,3 +119,65 @@ def test_incremental_dictionary_ids_are_stable(spark, transcripts):
         assert m12[k] == v, "existing entries must keep their IDs on resume"
     ids = sorted(m12.values())
     assert ids == list(range(len(ids))), "incremental IDs stay dense"
+
+
+BOUNDS = {"logtype": "LOGTYPE_DRIVER_MAX", "var": "BROADCAST_VAR_DICT_MAX"}
+DICT_COLS = {"logtype": ["logtype", "logtype_id"], "var": ["var_str", "var_id"]}
+
+
+def _build(kind, parsed, existing=None):
+    if kind == "logtype":
+        return dictionaries.build_logtype_dict(parsed, existing)
+    return dictionaries.build_var_dict(parsed, existing)
+
+
+def _ids(kind, df) -> dict:
+    return {r[0]: r[1] for r in df.select(*DICT_COLS[kind]).collect()}
+
+
+@pytest.mark.parametrize("driver", [True, False], ids=["driver", "distributed"])
+@pytest.mark.parametrize("kind", ["logtype", "var"])
+def test_next_id_after_a_one_entry_dictionary(spark, monkeypatch, kind, driver):
+    """An existing dictionary whose max ID is 0 gives the next new entry
+    ID 1, not a second 0."""
+    if not driver:
+        monkeypatch.setattr(dictionaries, BOUNDS[kind], 0)
+    if kind == "logtype":
+        existing = spark.createDataFrame(
+            [("only \x11 one", 0)], "logtype string, logtype_id long"
+        )
+        parsed = spark.createDataFrame(
+            [("only \x11 one",), ("new \x11 template",)], "logtype string"
+        )
+    else:
+        existing = spark.createDataFrame([("only", 0)], "var_str string, var_id long")
+        parsed = spark.createDataFrame([(["only", "new"],)], "dict_strs array<string>")
+    got = _build(kind, parsed, existing)
+    assert dictionaries.has_driver_copy(got) == driver
+    assert sorted(_ids(kind, got).values()) == [0, 1]
+
+
+@pytest.mark.parametrize("kind", ["logtype", "var"])
+def test_driver_ids_equal_distributed_ids(spark, transcripts, monkeypatch, kind):
+    """The driver rule assigns exactly the IDs of the distributed
+    bucket-count + window assignment, fresh and incremental."""
+    parsed = encode_pipeline.parse(transcripts, slim=True).persist()
+    # a first epoch lacking some templates and vars: the second adds both
+    first = parsed.where(
+        (F.pmod(F.xxhash64("logtype"), F.lit(3)) != 0) & (F.col("turn_idx") % 2 == 0)
+    )
+
+    def builds():
+        fresh = _build(kind, first)
+        return fresh, _build(kind, parsed, existing=fresh)
+
+    local_fresh, local_grown = builds()
+    monkeypatch.setattr(dictionaries, BOUNDS[kind], 0)
+    dist_fresh, dist_grown = builds()
+    assert dictionaries.has_driver_copy(local_grown)
+    assert not dictionaries.has_driver_copy(dist_grown)
+    assert _ids(kind, local_fresh) == _ids(kind, dist_fresh)
+    grown = _ids(kind, local_grown)
+    assert len(grown) > len(_ids(kind, local_fresh))
+    assert grown == _ids(kind, dist_grown)
+    parsed.unpersist()

@@ -193,3 +193,22 @@ def test_count_aggregations(corpus, spark):
     assert sum(r["count"] for r in buckets) == n
     for r in buckets:
         assert r["bucket_ts"] % 3_600_000 == 0
+
+
+def test_identical_subqueries_compile_once(corpus):
+    """The ambiguous-token odometer interprets a metric query several
+    ways that probe to the same logtype IDs and var values; the compiled
+    query keeps one copy, and its hits still equal a naive scan."""
+    import re
+
+    transcripts, _, lt, vd = corpus
+    text = (
+        transcripts.filter(F.col("text").startswith("metric "))
+        .select("text").orderBy(*KEYS).first()["text"]
+    )
+    m = re.search(r"= (\S+) \((\d+) samples\)", text)
+    query = f"= {m.group(1)} ({m.group(2)} samples)"
+    compiled = search.compile_query(query, lt, vd)
+    keys = [s.literal_key() for s in compiled.sub_queries]
+    assert len(keys) == len(set(keys)) == 1
+    assert run(corpus, query) == naive(transcripts, query)
