@@ -77,7 +77,7 @@ def warmup(spark) -> None:
 def run_pipeline(spark, input_path: str, sinks_root: str) -> dict:
     """The measured job: scan -> parse/encode (vectorized UDF + dict
     builds + broadcast joins) -> enrich (broadcast dims) -> fan-out route
-    (salted repartition, 3 sink families) -> per-sink counts."""
+    (rebalanced writes, 3 sink families) -> per-sink counts."""
     t0 = time.time()
     df = spark.read.parquet(input_path)
     encoded, lt_dict, var_dict = encode_pipeline.encode(

@@ -80,8 +80,6 @@ def build_arg_parser() -> argparse.ArgumentParser:
     p.add_argument("--work-root", default=None, help="ledger/dicts/sinks root")
     p.add_argument("--num-partitions", type=int, default=16,
                    help="checkpoint partitions (pmod(xxhash64(conv_id), N))")
-    p.add_argument("--salt-buckets", type=int, default=16,
-                   help="salt fan-out for skewed conv_id routing")
     p.add_argument("--partitions", type=int, nargs="*", default=None,
                    help="process only these partition ids (default: all pending)")
     p.add_argument("--metrics-out", default=None,
@@ -231,7 +229,6 @@ def main(argv: list[str] | None = None) -> int:
             spark,
             args.work_root,
             num_partitions=args.num_partitions,
-            salt_buckets=args.salt_buckets,
             var_id_mode=args.var_id_mode,
             write_glt=args.write_glt,
             dict_budget=args.dict_budget,

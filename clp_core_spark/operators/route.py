@@ -3,21 +3,30 @@
 GLT's logtype-grouped storage (glt/streaming_archive/writer/LogtypeTable.hpp:13-80,
 docs/src/user-guide/core-unstructured/glt.md:6-7) expressed as table
 partitioning: sinks are partitioned parquet tables (Iceberg-style layout)
-by role, tool, and logtype-class. Writes are salted-repartitioned to
-break conv_id skew (CLP analog: oversized filename groups split across
-archives, scheduler/compress/partition.py:99-138) and sorted within
-partitions by (conv_id, turn_idx) for stable turn ordering (CLP files are
-ordered into segments by (group, end_ts, path),
+by role, tool, and logtype-class. One writer, ``write_sink``, rebalances
+rows on the partition columns, so AQE sizes the files by
+``advisoryPartitionSizeInBytes``, not by the slot count: small values
+merge into one file, hot ones split (CLP's target archive size,
+clp/streaming_archive/writer/Archive.hpp m_target_segment_uncompressed_size;
+oversized groups split across archives, scheduler/compress/partition.py
+:99-138). Each file is sorted by (conv_id, turn_idx) for stable turn
+ordering (CLP orders files into segments by (group, end_ts, path),
 clp/streaming_archive/writer/Archive.hpp:199-226).
 """
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+from concurrent.futures import ThreadPoolExecutor
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from clp_core_spark.plans.tablestore import TableStore
+
 SINK_KINDS = ("role", "tool", "logtype_class")
-DEFAULT_SALT_BUCKETS = 16
+NULL_KEY = "__null__"  # the partition value of rows whose sink key is null
+ORDER_COLS = ("conv_id", "turn_idx")
 
 
 def with_logtype_class(df: DataFrame, logtype_col: str = "logtype") -> DataFrame:
@@ -33,63 +42,87 @@ def with_logtype_class(df: DataFrame, logtype_col: str = "logtype") -> DataFrame
     )
 
 
-def salted(
-    df: DataFrame,
-    partitions: int,
-    *cols: str,
-    salt_buckets: int = DEFAULT_SALT_BUCKETS,
-    salt_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
-):
-    """Repartition by (cols..., salt) — the salt is derived from
-    high-cardinality row identity, so hot partition keys (skewed conv_ids,
-    or the 45%-of-rows 'user' role sink) split across ``salt_buckets``
-    tasks while rows stay co-located per (key, salt)."""
-    salt = F.pmod(F.xxhash64(*[F.col(c) for c in salt_cols]), F.lit(salt_buckets))
+def salted(df: DataFrame, partitions: int, *cols: str, salt_buckets: int = 16):
+    """Repartition by (cols..., pmod(xxhash64(conv_id, turn_idx),
+    salt_buckets)). No sink writes this layout (see ``clustered``); it is
+    kept only because the benchmark's traced walk (perfbench/layers.py)
+    and tests/test_skew.py build it."""
+    salt = F.pmod(F.xxhash64(*[F.col(c) for c in ORDER_COLS]), F.lit(salt_buckets))
     return df.repartition(partitions, *([F.col(c) for c in cols] + [salt]))
 
 
+def clustered(
+    df: DataFrame,
+    partition_cols: Sequence[str] = (),
+    order_cols: Sequence[str] = ORDER_COLS,
+    partitions: int | None = None,
+) -> DataFrame:
+    """Rows distributed for a write, each task sorted by
+    (*partition_cols, *order_cols). With partition columns: a rebalance
+    on them (AQE merges small values, splits hot ones). Without: a range
+    partitioning on ``order_cols``, whose adjacent-only merges keep task i
+    below task i+1. ``partitions``: the initial partition count (default
+    ``spark.sql.shuffle.partitions``); AQE keeps a fixed range count.
+
+    The planned write requires order by the partition columns; this sort
+    has them as prefix, so Spark keeps it instead of adding its own.
+    They must be data columns: Spark drops a literal column from that
+    requirement, and then replaces a sort that leads with it."""
+    n = [partitions] if partitions else []
+    if partition_cols:
+        dist = df.hint("rebalance", *n, *partition_cols)
+    else:
+        dist = df.repartitionByRange(*n, *[F.col(c) for c in order_cols])
+    return dist.sortWithinPartitions(*partition_cols, *order_cols)
+
+
+def write_sink(
+    df: DataFrame,
+    store: TableStore,
+    kind: str,
+    scope: Sequence[str] = (),
+    partitions: int | None = None,
+) -> None:
+    """The one sink writer: table ``by_<kind>`` of ``store``, partitioned
+    by (*scope, kind), laid out by ``clustered``, null keys under
+    ``NULL_KEY``. Only the partition values in ``df`` are replaced, so a
+    scope column such as ``epoch_part`` makes a retry idempotent."""
+    cols = [*scope, kind]
+    out = df.withColumn(kind, F.coalesce(F.col(kind), F.lit(NULL_KEY)))
+    store.overwrite_partitions(clustered(out, cols, partitions=partitions), f"by_{kind}", cols)
+
+
+def write_sinks(
+    df: DataFrame,
+    store: TableStore,
+    scope: Sequence[str] = (),
+    partitions: int | None = None,
+    pool: str = "sink",
+) -> None:
+    """``write_sink`` for every sink family. The three writes are
+    independent jobs over the same (persisted) input, so they submit from
+    driver threads in distinct FAIR scheduler pools ``{pool}-{kind}``:
+    each alternates shuffle-read / encode / commit phases that leave
+    executors idle, and overlapping them fills those gaps (measured
+    10.8s -> 5.5s for the sf0.1 route phase at local[32])."""
+    sc = df.sparkSession.sparkContext
+
+    def _one(kind: str) -> None:
+        sc.setLocalProperty("spark.scheduler.pool", f"{pool}-{kind}")
+        write_sink(df, store, kind, scope, partitions)
+
+    with ThreadPoolExecutor(len(SINK_KINDS)) as ex:
+        list(ex.map(_one, SINK_KINDS))
+
+
 def route(
-    encoded: DataFrame,
-    sinks_root: str,
-    partitions: int = 32,
-    order_cols: tuple[str, str] = ("conv_id", "turn_idx"),
-    concurrent: bool = True,
+    encoded: DataFrame, sinks_root: str, partitions: int | None = None
 ) -> dict[str, str]:
-    """Write the three sink families under ``sinks_root`` and return
-    {sink_kind: path}. Each is a partitioned parquet table; partition
-    overwrite mode is dynamic, so per-partition rewrites are idempotent
-    (retry/resume safe).
-
-    The three families are independent jobs over the same (persisted)
-    input, so by default they submit from driver threads in distinct
-    FAIR scheduler pools: each write alternates shuffle-read / encode /
-    commit-barrier phases that leave executors idle, and overlapping
-    the families fills those gaps (measured 10.8s -> 5.5s for the
-    sf0.1 route phase at local[32]; same idea as the pipeline's
-    concurrent epoch ingest)."""
-
-    def _one(kind: str) -> tuple[str, str]:
-        if concurrent:
-            encoded.sparkSession.sparkContext.setLocalProperty(
-                "spark.scheduler.pool", f"sink-{kind}"
-            )
-        path = f"{sinks_root}/by_{kind}"
-        out = encoded.withColumn(kind, F.coalesce(F.col(kind), F.lit("__null__")))
-        (
-            salted(out, partitions, kind)
-            .sortWithinPartitions(*order_cols)
-            .write.mode("overwrite")
-            .partitionBy(kind)
-            .parquet(path)
-        )
-        return kind, path
-
-    if concurrent:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(len(SINK_KINDS)) as pool:
-            return dict(pool.map(_one, SINK_KINDS))
-    return dict(map(_one, SINK_KINDS))
+    """Write the three sink families under ``sinks_root`` as partitioned
+    parquet tables (``write_sinks``) and return {sink_kind: path}."""
+    store = TableStore(encoded.sparkSession, sinks_root, mode="parquet")
+    write_sinks(encoded, store, partitions=partitions)
+    return {kind: store.table_path(f"by_{kind}") for kind in SINK_KINDS}
 
 
 # Default GLT parquet row-group cap. Clustering confines a hot logtype
@@ -171,7 +204,7 @@ def sink_counts(encoded: DataFrame) -> DataFrame:
     exchange (guide §2.4 — same rows out, one pass)."""
     keyed = encoded.select(
         *[
-            F.coalesce(F.col(kind), F.lit("__null__")).alias(kind)
+            F.coalesce(F.col(kind), F.lit(NULL_KEY)).alias(kind)
             for kind in SINK_KINDS
         ]
     )

@@ -11,7 +11,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from clp_core_spark.operators import encode_pipeline
+from clp_core_spark.operators import encode_pipeline, route
 
 
 def decompress_to_text(
@@ -21,18 +21,13 @@ def decompress_to_text(
     out_path: str,
     key_cols: list[str] | None = None,
     order_cols: list[str] | None = None,
-    partitions: int = 32,
+    partitions: int | None = None,
 ) -> None:
     """Decode every row and write plain text lines in stable global order
-    (the per-turn text-equality surface: reading the part files back in
-    filename order equals the original corpus under (conv_id, turn_idx)
-    ordering).
-
-    Range-partitioned parallel write: partition i holds strictly smaller
-    keys than partition i+1 and output files part-0000i follow partition
-    order, so global order is (file order, line order) — no single-task
-    bottleneck (FileDecompressor writes one file at a time; a distributed
-    sink must not)."""
+    (``write_ordered_text``): the part files read back in filename order
+    equal the original corpus under (conv_id, turn_idx) ordering, with no
+    single-task bottleneck (FileDecompressor writes one file at a time; a
+    distributed sink must not)."""
     key_cols = key_cols or ["conv_id", "turn_idx"]
     order_cols = order_cols or key_cols
     decoded = encode_pipeline.decode(encoded, logtype_dict, var_dict, key_cols)
@@ -44,13 +39,13 @@ def write_ordered_text(
     out_path: str,
     order_cols: list[str],
     text_col: str = "decoded_text",
-    partitions: int = 32,
+    partitions: int | None = None,
 ) -> None:
-    """Range-partitioned parallel text write in stable global order
-    (partition i < partition i+1, filenames follow partition order)."""
+    """Parallel text write in stable global order: range partitions
+    (``route.clustered``; ``partitions`` fixes their count, else AQE sizes
+    them), partition i < partition i+1, filenames in partition order."""
     (
-        decoded.repartitionByRange(partitions, *[F.col(c) for c in order_cols])
-        .sortWithinPartitions(*order_cols)
+        route.clustered(decoded, order_cols=order_cols, partitions=partitions)
         .select(F.col(text_col).alias("value"))
         .write.mode("overwrite")
         .text(out_path)

@@ -92,18 +92,18 @@ class IngestPipeline:
     logtype dictionary's bounded collect, one aggregation for the
     ledger row count and the per-pattern ts_index spans, the broadcasts
     of the role/tool dimensions and the logtype dictionary, the count
-    that pins the enriched rows, the three sink writes, the two
-    dictionary saves, and the ts_index and ledger appends. Every table
-    built on the driver is an Arrow local relation
-    (session.local_table), so none of them starts a Python worker, and
-    a missing ledger or ts_index is read without a job."""
+    that pins the enriched rows, the three sink writes (route.write_sinks:
+    AQE sizes their files, one per partition value on a 10k-turn epoch),
+    the two dictionary saves, and the ts_index and ledger appends. Every
+    table built on the driver is an Arrow local relation
+    (session.local_table), so none of them starts a Python worker, and a
+    missing ledger (``done_partitions``) or ts_index is read without a job."""
 
     def __init__(
         self,
         spark: SparkSession,
         work_root: str,
         num_partitions: int = 16,
-        salt_buckets: int = 16,
         var_id_mode: str = "hash",
         write_glt: bool = False,
         dict_budget: int | None = None,
@@ -151,7 +151,6 @@ class IngestPipeline:
         self.spark = spark
         self.work_root = work_root
         self.num_partitions = num_partitions
-        self.salt_buckets = salt_buckets
         self.var_id_mode = var_id_mode
         self.write_glt = write_glt
         self.dict_budget = dict_budget
@@ -227,6 +226,8 @@ class IngestPipeline:
     def done_partitions(self) -> set[int]:
         """Partitions whose EVERY sub-epoch committed: a partition split
         into n_subs sub-epochs is done iff all n_subs ledger rows exist."""
+        if not os.path.exists(self.ledger_path):  # nothing committed
+            return set()
         rows = self.ledger().groupBy("partition_id").agg(
             F.count("*").alias("n"), F.max("n_subs").alias("want")
         ).collect()
@@ -485,37 +486,13 @@ class IngestPipeline:
                 TS_INDEX_SCHEMA,
             ).write.mode("append").parquet(self.ts_index_path)
 
-        def _write_sink(kind: str) -> None:
-            # distinct pool per sink family: the three writes are
-            # independent jobs over the persisted `enriched`, and
-            # overlapping their shuffle/encode/commit phases halves the
-            # route wall time (measured in operators.route.route)
-            self.spark.sparkContext.setLocalProperty(
-                "spark.scheduler.pool", f"epoch-{partition_id}-sink-{kind}"
-            )
-            out = enriched.withColumn(
-                kind, F.coalesce(F.col(kind), F.lit("__null__"))
-            )
-            clustered = route.salted(
-                out, self.spark.sparkContext.defaultParallelism, kind,
-                salt_buckets=self.salt_buckets,
-            ).sortWithinPartitions("conv_id", "turn_idx")
-            # epoch_part first: overwriting THIS sub-epoch's output is
-            # idempotent under retries and never touches other epochs
-            # (Iceberg overwritePartitions / parquet dynamic overwrite).
-            self.store.overwrite_partitions(
-                clustered, f"by_{kind}", ["epoch_part", kind]
-            )
-
-        from concurrent.futures import ThreadPoolExecutor
-
         # materialize the persist ONCE before fanning out the writers so
-        # the three jobs read the cache instead of racing to build it
+        # the three jobs read the cache instead of racing to build it.
+        # epoch_part scopes each overwrite to THIS sub-epoch, and is a
+        # column of the persisted rows, not a literal (route.clustered).
         n_rows = enriched.count()
-        with ThreadPoolExecutor(len(route.SINK_KINDS)) as sink_pool:
-            list(sink_pool.map(_write_sink, route.SINK_KINDS))
-        self.spark.sparkContext.setLocalProperty(
-            "spark.scheduler.pool", f"epoch-{partition_id}"
+        route.write_sinks(
+            enriched, self.store, ["epoch_part"], pool=f"epoch-{partition_id}-sink"
         )
         n_routed = n_rows * len(route.SINK_KINDS)
 
@@ -727,7 +704,7 @@ class IngestPipeline:
         self,
         out_path: str,
         kind: str = "role",
-        partitions: int = 32,
+        partitions: int | None = None,
     ) -> None:
         """Reconstruct the original turn text from the routed archive in
         stable (conv_id, turn_idx) order — the `clp x` surface over the

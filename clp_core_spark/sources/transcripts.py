@@ -55,8 +55,8 @@ def generate_transcripts(
     """Build the transcripts DataFrame with ~``num_turns`` rows.
 
     Conversation sizes are Zipf-ish skewed: ``hot_convs`` conversations get
-    ``hot_factor``x the median turn count — exercising the salted
-    repartitioning path (CLP analog: oversized filename groups,
+    ``hot_factor``x the median turn count — exercising the sink
+    writer's rebalance (CLP analog: oversized filename groups,
     job_orchestration/scheduler/compress/partition.py:99-138).
     """
     if num_convs is None:

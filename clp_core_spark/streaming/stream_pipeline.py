@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from clp_core_spark.operators import dictionaries, encode_pipeline, enrich, route
+from clp_core_spark.plans.tablestore import TableStore
 from clp_core_spark.sources import transcripts
 
 
@@ -211,12 +212,11 @@ class StreamingEncoder:
     """foreachBatch handler: encode + enrich + route each micro-batch,
     growing the dictionaries across batches (epoch = micro-batch)."""
 
-    def __init__(self, spark: SparkSession, work_root: str, partitions: int = 8):
+    def __init__(self, spark: SparkSession, work_root: str):
         self.spark = spark
         self.work_root = work_root
-        self.partitions = partitions
         self.dicts_path = f"{work_root}/dicts"
-        self.sinks_root = f"{work_root}/sinks"
+        self.store = TableStore(spark, f"{work_root}/sinks", mode="parquet")
 
     def _load_dict(self, name: str) -> DataFrame | None:
         from clp_core_spark.plans import dictstore
@@ -243,15 +243,12 @@ class StreamingEncoder:
         enriched = route.with_logtype_class(
             enriched.join(F.broadcast(lt_dict), "logtype_id")
         ).drop("logtype")
-        enriched = enriched.withColumn("batch_id", F.lit(batch_id))
-        out = enriched.withColumn("role", F.coalesce(F.col("role"), F.lit("__null__")))
-        (
-            route.salted(out, self.partitions, "role")
-            .sortWithinPartitions("conv_id", "turn_idx")
-            .write.mode("overwrite")
-            .partitionBy("batch_id", "role")
-            .parquet(f"{self.sinks_root}/by_role")
-        )
+        # persisted: batch_id must be a column, not a literal (route.clustered)
+        enriched = enriched.withColumn("batch_id", F.lit(batch_id)).persist()
+        try:
+            route.write_sink(enriched, self.store, "role", ["batch_id"])
+        finally:
+            enriched.unpersist()
         self._save_dict("logtype", lt_dict)
         self._save_dict("var", var_dict)
 

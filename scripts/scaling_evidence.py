@@ -55,7 +55,7 @@ def render(legs: list[dict], pair: tuple[dict, dict] | None = None) -> str:
 Pipeline measured: scan -> parse/tokenize (vectorized Arrow pandas UDF)
 -> logtype + variable dictionary build (distributed groupBy-dedup)
 -> dictionary-ID encode -> broadcast enrich (role/tool dims)
--> fan-out route to 3 sink families (salted repartition, partitioned
+-> fan-out route to 3 sink families (rebalanced, partitioned
 parquet-zstd writes) -> per-sink counts. Identical deterministic input
 staged once and reused by every leg (`bench.py --pipeline-only`).
 
