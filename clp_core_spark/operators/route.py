@@ -4,9 +4,9 @@ GLT's logtype-grouped storage (glt/streaming_archive/writer/LogtypeTable.hpp:13-
 docs/src/user-guide/core-unstructured/glt.md:6-7) expressed as table
 partitioning: sinks are partitioned parquet tables (Iceberg-style layout)
 by role, tool, and logtype-class. One writer, ``write_sink``, rebalances
-rows on the partition columns, so AQE sizes the files by
-``advisoryPartitionSizeInBytes``, not by the slot count: small values
-merge into one file, hot ones split (CLP's target archive size,
+rows on the partition columns, so AQE sizes the files by a target size
+(``SINK_TASK_BYTES``), not by the slot count: small values merge into
+one file, hot ones split (CLP's target archive size,
 clp/streaming_archive/writer/Archive.hpp m_target_segment_uncompressed_size;
 oversized groups split across archives, scheduler/compress/partition.py
 :99-138). Each file is sorted by (conv_id, turn_idx) for stable turn
@@ -44,36 +44,35 @@ def with_logtype_class(df: DataFrame, logtype_col: str = "logtype") -> DataFrame
 
 def salted(df: DataFrame, partitions: int, *cols: str, salt_buckets: int = 16):
     """Repartition by (cols..., pmod(xxhash64(conv_id, turn_idx),
-    salt_buckets)). No sink writes this layout (see ``clustered``); it is
+    salt_buckets)). No sink writes this layout (see ``write_sink``); it is
     kept only because the benchmark's traced walk (perfbench/layers.py)
     and tests/test_skew.py build it."""
     salt = F.pmod(F.xxhash64(*[F.col(c) for c in ORDER_COLS]), F.lit(salt_buckets))
     return df.repartition(partitions, *([F.col(c) for c in cols] + [salt]))
 
 
-def clustered(
-    df: DataFrame,
-    partition_cols: Sequence[str] = (),
-    order_cols: Sequence[str] = ORDER_COLS,
-    partitions: int | None = None,
-) -> DataFrame:
-    """Rows distributed for a write, each task sorted by
-    (*partition_cols, *order_cols). With partition columns: a rebalance
-    on them (AQE merges small values, splits hot ones). Without: a range
-    partitioning on ``order_cols``, whose adjacent-only merges keep task i
-    below task i+1. ``partitions``: the initial partition count (default
-    ``spark.sql.shuffle.partitions``); AQE keeps a fixed range count.
+# Shuffle bytes a sink write task aims at: AQE merges partition values
+# below it into one task (one file) and splits a hot value above it. The
+# writer's own constant, so the layout does not follow the session's
+# advisoryPartitionSizeInBytes (bench.py sets 2m for its shuffles).
+SINK_TASK_BYTES = 64 << 20
 
-    The planned write requires order by the partition columns; this sort
-    has them as prefix, so Spark keeps it instead of adding its own.
-    They must be data columns: Spark drops a literal column from that
-    requirement, and then replaces a sort that leads with it."""
-    n = [partitions] if partitions else []
-    if partition_cols:
-        dist = df.hint("rebalance", *n, *partition_cols)
-    else:
-        dist = df.repartitionByRange(*n, *[F.col(c) for c in order_cols])
-    return dist.sortWithinPartitions(*partition_cols, *order_cols)
+
+def _rebalanced(df: DataFrame, cols: Sequence[str]) -> DataFrame:
+    """``df.hint("rebalance", *cols)`` with ``SINK_TASK_BYTES`` as the
+    exchange's advisory size, which the hint cannot set."""
+    spark, jvm = df.sparkSession, df.sparkSession._jvm
+    attr = jvm.org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute.quoted
+    # via OptionalLong: py4j would box a Python int as an Integer, not a Long
+    size = jvm.java.util.OptionalLong.of(SINK_TASK_BYTES)
+    node = jvm.org.apache.spark.sql.catalyst.plans.logical.RebalancePartitions(
+        jvm.PythonUtils.toSeq([attr(c) for c in cols]),
+        df._jdf.queryExecution().analyzed(),
+        jvm.scala.Option.empty(),
+        jvm.scala.jdk.javaapi.OptionConverters.toScala(size),
+    )
+    jdf = jvm.org.apache.spark.sql.classic.Dataset.ofRows(spark._jsparkSession, node)
+    return DataFrame(jdf, spark)
 
 
 def write_sink(
@@ -81,22 +80,26 @@ def write_sink(
     store: TableStore,
     kind: str,
     scope: Sequence[str] = (),
-    partitions: int | None = None,
+    table: str | None = None,
 ) -> None:
-    """The one sink writer: table ``by_<kind>`` of ``store``, partitioned
-    by (*scope, kind), laid out by ``clustered``, null keys under
-    ``NULL_KEY``. Only the partition values in ``df`` are replaced, so a
-    scope column such as ``epoch_part`` makes a retry idempotent."""
+    """The one sink writer: ``table`` (default ``by_<kind>``) of
+    ``store``, partitioned by (*scope, kind), null keys under ``NULL_KEY``;
+    only the partition values in ``df`` are replaced (idempotent retries).
+    Each rebalanced task is sorted by (*scope, kind, conv_id, turn_idx),
+    which has the planned write's required order as prefix, so Spark
+    keeps it. A literal scope column would be dropped from that order and
+    the sort replaced: write a one-value scope as ``table`` instead
+    (``by_role/batch_id=7`` reads back as the column ``batch_id``)."""
     cols = [*scope, kind]
     out = df.withColumn(kind, F.coalesce(F.col(kind), F.lit(NULL_KEY)))
-    store.overwrite_partitions(clustered(out, cols, partitions=partitions), f"by_{kind}", cols)
+    out = _rebalanced(out, cols).sortWithinPartitions(*cols, *ORDER_COLS)
+    store.overwrite_partitions(out, table or f"by_{kind}", cols)
 
 
 def write_sinks(
     df: DataFrame,
     store: TableStore,
     scope: Sequence[str] = (),
-    partitions: int | None = None,
     pool: str = "sink",
 ) -> None:
     """``write_sink`` for every sink family. The three writes are
@@ -109,19 +112,18 @@ def write_sinks(
 
     def _one(kind: str) -> None:
         sc.setLocalProperty("spark.scheduler.pool", f"{pool}-{kind}")
-        write_sink(df, store, kind, scope, partitions)
+        write_sink(df, store, kind, scope)
 
     with ThreadPoolExecutor(len(SINK_KINDS)) as ex:
         list(ex.map(_one, SINK_KINDS))
 
 
-def route(
-    encoded: DataFrame, sinks_root: str, partitions: int | None = None
-) -> dict[str, str]:
+def route(encoded: DataFrame, sinks_root: str, partitions: int | None = None):
     """Write the three sink families under ``sinks_root`` as partitioned
-    parquet tables (``write_sinks``) and return {sink_kind: path}."""
+    parquet tables (``write_sinks``) and return {sink_kind: path};
+    ``partitions`` (bench.py passes it) is ignored: the writer sizes its tasks."""
     store = TableStore(encoded.sparkSession, sinks_root, mode="parquet")
-    write_sinks(encoded, store, partitions=partitions)
+    write_sinks(encoded, store)
     return {kind: store.table_path(f"by_{kind}") for kind in SINK_KINDS}
 
 

@@ -11,7 +11,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from clp_core_spark.operators import encode_pipeline, route
+from clp_core_spark.operators import encode_pipeline
 
 
 def decompress_to_text(
@@ -41,11 +41,14 @@ def write_ordered_text(
     text_col: str = "decoded_text",
     partitions: int | None = None,
 ) -> None:
-    """Parallel text write in stable global order: range partitions
-    (``route.clustered``; ``partitions`` fixes their count, else AQE sizes
-    them), partition i < partition i+1, filenames in partition order."""
+    """Range-partitioned parallel text write in stable global order
+    (partition i < partition i+1, filenames follow partition order).
+    ``partitions`` fixes the range count; without it AQE sizes the
+    ranges and merges only adjacent ones, so the order holds."""
+    n = [partitions] if partitions else []
     (
-        route.clustered(decoded, order_cols=order_cols, partitions=partitions)
+        decoded.repartitionByRange(*n, *[F.col(c) for c in order_cols])
+        .sortWithinPartitions(*order_cols)
         .select(F.col(text_col).alias("value"))
         .write.mode("overwrite")
         .text(out_path)

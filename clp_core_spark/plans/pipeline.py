@@ -489,7 +489,7 @@ class IngestPipeline:
         # materialize the persist ONCE before fanning out the writers so
         # the three jobs read the cache instead of racing to build it.
         # epoch_part scopes each overwrite to THIS sub-epoch, and is a
-        # column of the persisted rows, not a literal (route.clustered).
+        # column of the persisted rows, not a literal (route.write_sink).
         n_rows = enriched.count()
         route.write_sinks(
             enriched, self.store, ["epoch_part"], pool=f"epoch-{partition_id}-sink"

@@ -243,12 +243,8 @@ class StreamingEncoder:
         enriched = route.with_logtype_class(
             enriched.join(F.broadcast(lt_dict), "logtype_id")
         ).drop("logtype")
-        # persisted: batch_id must be a column, not a literal (route.clustered)
-        enriched = enriched.withColumn("batch_id", F.lit(batch_id)).persist()
-        try:
-            route.write_sink(enriched, self.store, "role", ["batch_id"])
-        finally:
-            enriched.unpersist()
+        # a table per micro-batch, read back as by_role's batch_id column
+        route.write_sink(enriched, self.store, "role", table=f"by_role/batch_id={batch_id}")
         self._save_dict("logtype", lt_dict)
         self._save_dict("var", var_dict)
 

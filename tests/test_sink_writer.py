@@ -1,7 +1,8 @@
 """The one sink writer (operators.route.write_sink): every sink file is
 sorted by (conv_id, turn_idx) whatever the input order, each write plans
-one exchange and one sort, and a hot partition value still splits
-across several write tasks."""
+one exchange and one sort, a hot partition value still splits across
+several write tasks, and the layout does not follow the session's
+advisory partition size."""
 
 import glob
 import os
@@ -44,8 +45,8 @@ def test_sink_files_are_sorted_on_shuffled_input(shuffled_ingest):
 
 
 def test_stream_sink_files_are_sorted_on_shuffled_input(spark, transcripts, tmp_path):
-    """The streaming encoder's batch_id is a literal of each micro-batch;
-    its sink files must be sorted all the same."""
+    """The streaming encoder writes each micro-batch as its own table
+    (by_role/batch_id=N); its sink files must be sorted all the same."""
     from clp_core_spark.streaming import stream_pipeline as sp
 
     inp = str(tmp_path / "input")
@@ -92,16 +93,41 @@ def test_each_sink_write_plans_one_exchange_and_one_sort(shuffled_ingest):
         assert keys == ["epoch_part", kind, "conv_id", "turn_idx"], sorts[0]
 
 
-def test_hot_value_splits_across_tasks(spark, tmp_path):
-    """90% of rows share one partition value. With a small advisory
-    partition size the rebalance splits that value across several tasks
-    (files), and no task holds more than ~3x its fair share."""
-    n = 40_000
-    hot = spark.range(n).select(
+@pytest.fixture(scope="module")
+def hot(spark):
+    """40k rows, 90% of them under one partition value (role=user)."""
+    return spark.range(40_000).select(
         F.concat(F.lit("c"), (F.col("id") % 500).cast("string")).alias("conv_id"),
         F.col("id").cast("int").alias("turn_idx"),
         F.when(F.col("id") % 10 == 0, "assistant").otherwise("user").alias("role"),
     ).repartition(16).localCheckpoint()
+
+
+def _rows_per_task_and_files_per_value(root):
+    per_task, files_per_value = Counter(), Counter()
+    for f in glob.glob(f"{root}/by_role/*/*.parquet"):
+        task = os.path.basename(f).split("-")[1]  # part-<task id>-...
+        per_task[task] += pq.read_metadata(f).num_rows
+        files_per_value[os.path.basename(os.path.dirname(f))] += 1
+    return per_task, files_per_value
+
+
+def test_hot_value_splits_across_tasks(spark, hot, tmp_path, monkeypatch):
+    """With a small writer task size the rebalance splits the hot value
+    across several tasks (files), and no task holds more than ~3x its
+    fair share."""
+    monkeypatch.setattr(route, "SINK_TASK_BYTES", 16 << 10)
+    route.write_sink(hot, TableStore(spark, str(tmp_path), mode="parquet"), "role")
+    per_task, files_per_value = _rows_per_task_and_files_per_value(tmp_path)
+    assert sum(per_task.values()) == hot.count()
+    assert files_per_value["role=user"] >= 4, files_per_value
+    fair = hot.count() / len(per_task)
+    assert max(per_task.values()) <= 3 * fair, per_task
+
+
+def test_sink_layout_ignores_the_session_advisory_size(spark, hot, tmp_path):
+    """A session that lowers spark.sql.adaptive.advisoryPartitionSizeInBytes
+    for its own shuffles gets the same sink files: one per value here."""
     key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
     old = spark.conf.get(key)
     spark.conf.set(key, "16k")
@@ -109,15 +135,8 @@ def test_hot_value_splits_across_tasks(spark, tmp_path):
         route.write_sink(hot, TableStore(spark, str(tmp_path), mode="parquet"), "role")
     finally:
         spark.conf.set(key, old)
-    per_task, files_per_value = Counter(), Counter()
-    for f in glob.glob(f"{tmp_path}/by_role/*/*.parquet"):
-        task = os.path.basename(f).split("-")[1]  # part-<task id>-...
-        per_task[task] += pq.read_metadata(f).num_rows
-        files_per_value[os.path.basename(os.path.dirname(f))] += 1
-    assert sum(per_task.values()) == n
-    assert files_per_value["role=user"] >= 4, files_per_value
-    fair = n / len(per_task)
-    assert max(per_task.values()) <= 3 * fair, per_task
+    _, files_per_value = _rows_per_task_and_files_per_value(tmp_path)
+    assert files_per_value == {"role=user": 1, "role=assistant": 1}, files_per_value
 
 
 def test_done_partitions_of_a_fresh_root_runs_no_query(spark, tmp_path):
