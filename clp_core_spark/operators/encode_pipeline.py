@@ -244,9 +244,14 @@ def encode(
     """Full parse->encode. Returns (encoded_df, logtype_dict, var_dict).
 
     ``pre_parsed``: a DataFrame that already carries the slim parse
-    columns (logtype, var_types, encoded, dict_strs) — e.g. a persisted
-    ``parse(df, slim=True)`` shared across sub-epochs — skips the parse
-    stage entirely so the corpus is tokenized exactly once per partition.
+    columns (logtype, var_types, encoded, dict_strs) skips the parse
+    stage. Its caller owns its persist: IngestPipeline persists one
+    ``parse(df, slim=True)`` per partition, shares it across the
+    sub-epochs and releases it. Without ``pre_parsed``, encode persists
+    its own parse and never releases it; only one-shot callers (bench.py,
+    scripts, the query entry points) take that path.
+    A dictionary built distributed (above its driver-copy bound) comes
+    back persisted (``is_cached``); the caller releases it too.
 
     ``encoded_df`` columns: key_cols + passthrough + logtype_id,
     encoded_vars (array<long>), var_types (array<int>), n_vars.
@@ -264,7 +269,6 @@ def encode(
       faithful-storage mode; costs a resolve join at scale.
     """
     if pre_parsed is not None:
-        # caller owns the persist: typically a filter over a cached parent
         parsed = pre_parsed
     else:
         parsed = parse(df, text_col=text_col, slim=True, schema_spec=schema_spec)

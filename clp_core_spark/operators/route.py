@@ -76,24 +76,19 @@ def _rebalanced(df: DataFrame, cols: Sequence[str]) -> DataFrame:
 
 
 def write_sink(
-    df: DataFrame,
-    store: TableStore,
-    kind: str,
-    scope: Sequence[str] = (),
-    table: str | None = None,
+    df: DataFrame, store: TableStore, kind: str, scope: Sequence[str] = ()
 ) -> None:
-    """The one sink writer: ``table`` (default ``by_<kind>``) of
-    ``store``, partitioned by (*scope, kind), null keys under ``NULL_KEY``;
-    only the partition values in ``df`` are replaced (idempotent retries).
-    Each rebalanced task is sorted by (*scope, kind, conv_id, turn_idx),
-    which has the planned write's required order as prefix, so Spark
-    keeps it. A literal scope column would be dropped from that order and
-    the sort replaced: write a one-value scope as ``table`` instead
-    (``by_role/batch_id=7`` reads back as the column ``batch_id``)."""
+    """The one sink writer: table ``by_<kind>`` of ``store``, partitioned
+    by (*scope, kind), null keys under ``NULL_KEY``; only the partition
+    values in ``df`` are replaced (idempotent retries). Each rebalanced
+    task is sorted by (*scope, kind, conv_id, turn_idx), which has the
+    planned write's required order as prefix, so Spark keeps it. A scope
+    column must be a column of the rows, not a literal: the planner drops
+    a literal from that required order and replaces the sort."""
     cols = [*scope, kind]
     out = df.withColumn(kind, F.coalesce(F.col(kind), F.lit(NULL_KEY)))
     out = _rebalanced(out, cols).sortWithinPartitions(*cols, *ORDER_COLS)
-    store.overwrite_partitions(out, table or f"by_{kind}", cols)
+    store.overwrite_partitions(out, f"by_{kind}", cols)
 
 
 def write_sinks(

@@ -87,17 +87,32 @@ class IngestPipeline:
     open dictionary pointing at deleted files. Ingest always reads the
     dictionaries it grows afresh.
 
-    Jobs per epoch: a fresh single-epoch ingest launches 22 Spark jobs
-    (23 as a session's first; measured on 2k- and 10k-turn inputs): the
-    logtype dictionary's bounded collect, one aggregation for the
-    ledger row count and the per-pattern ts_index spans, the broadcasts
-    of the role/tool dimensions and the logtype dictionary, the count
-    that pins the enriched rows, the three sink writes (route.write_sinks:
-    AQE sizes their files, one per partition value on a 10k-turn epoch),
-    the two dictionary saves, and the ts_index and ledger appends. Every
-    table built on the driver is an Arrow local relation
-    (session.local_table), so none of them starts a Python worker, and a
-    missing ledger (``done_partitions``) or ts_index is read without a job."""
+    Jobs per epoch: a single-epoch ingest launches 23 Spark jobs
+    (measured on a 2k-turn input, also when the session ingested the
+    same input before, since no parse outlives its epoch): one
+    aggregation over the parse (three jobs, the first read of the
+    persisted parse) for the ledger row count and the per-pattern
+    ts_index spans, the logtype dictionary's bounded collect,
+    the broadcasts of the role/tool dimensions and the logtype
+    dictionary, the count that pins the enriched rows, the three sink
+    writes (route.write_sinks: AQE sizes their files, one per partition
+    value on a 10k-turn epoch), the two dictionary saves, and the
+    ts_index and ledger appends. Every table built on the driver is an
+    Arrow local relation (session.local_table), so none of them starts a
+    Python worker, and a missing ledger (``done_partitions``) or ts_index
+    is read without a job.
+
+    Persists: each has one owner, which releases it in a ``finally``, so
+    a failed epoch leaves nothing pinned either. ``_run_partition`` owns
+    the partition's slim parse, the one tokenize pass that the dictionary
+    delta and every sub-epoch read. ``_run_sub_epoch`` owns the enriched
+    rows the sink writes read, and a dictionary ``encode`` built
+    distributed and persisted (a logtype dictionary above
+    ``LOGTYPE_DRIVER_MAX``, a dense var dictionary above
+    ``BROADCAST_VAR_DICT_MAX``).
+
+    Streams: a micro-batch commits as an epoch (``commit_batch``), so a
+    streamed archive is read, searched and resumed like a batch one."""
 
     def __init__(
         self,
@@ -369,63 +384,76 @@ class IngestPipeline:
             new_var = new_var.join(var_existing, "var_str", "left_anti")
         return new_lt.count() + new_var.count()
 
+    def commit_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+        """Commit stream micro-batch ``batch_id`` as the epoch
+        ``partition_id=batch_id, sub_epoch=0``, so its ``epoch_part`` is
+        ``batch_id`` (the ``foreachBatch`` handler of
+        streaming.stream_pipeline.route_stream, whose pipeline has no
+        ``dict_budget``). A batch the ledger already holds is skipped: the
+        stream checkpoint replays its last batch when a crash fell between
+        the ledger commit and the checkpoint's own. A batch that crashed
+        before its ledger commit runs again over its idempotent sink
+        overwrite."""
+        if batch_id in self.done_partitions() or batch_df.isEmpty():
+            return
+        self._run_partition(batch_df, batch_id)
+
+    def _pool(self, partition_id: int) -> str:
+        """The FAIR scheduler pool of an epoch's jobs. Fairness is BETWEEN
+        pools (inside one pool the order is FIFO), so with
+        ``max_concurrent`` > 1 each epoch's driver thread gets its own
+        pool and concurrent epochs share executor slots instead of
+        queueing behind the first-submitted epoch's stages. Epochs that
+        run one at a time (every stream) share one pool: Spark never
+        drops a pool, so a pool per micro-batch would grow its pool list
+        for the life of the stream."""
+        return f"epoch-{partition_id}" if self.max_concurrent > 1 else "epoch"
+
     def _run_partition(self, part_df: DataFrame, partition_id: int) -> None:
-        # Under FAIR scheduling, fairness is BETWEEN pools (inside one
-        # pool the order is FIFO) — give each epoch's driver thread its
-        # own pool so concurrent epochs actually share executor slots
-        # instead of queueing behind the first-submitted epoch's stages.
         self.spark.sparkContext.setLocalProperty(
-            "spark.scheduler.pool", f"epoch-{partition_id}"
+            "spark.scheduler.pool", self._pool(partition_id)
         )
-        n_subs = 1
-        done_subs: set[int] = set()
-        parsed = None
-        if self.dict_budget is not None:
-            done_subs, committed_n_subs = self.committed_sub_epochs(partition_id)
-            # ONE tokenize pass per partition: the delta count and every
-            # sub-epoch encode all read this persisted parse
-            parsed = encode_pipeline.parse(part_df, slim=True).persist()
-            if committed_n_subs is not None:
-                # resume: the split is pinned to the n_subs the committed
-                # sub-epochs used — never recompute from the (now-shrunken)
-                # dictionary delta (see committed_sub_epochs docstring)
-                n_subs = committed_n_subs
-            else:
-                # epoch scope: archive-local dictionaries, nothing carries
-                lt_existing = var_existing = None
-                if self.dict_scope == "global":
-                    lt_existing = self._load_dict("logtype")
-                    var_existing = self._load_dict("var")
-                delta = self._dict_delta(parsed, lt_existing, var_existing)
-                n_subs = max(1, -(-delta // self.dict_budget))  # ceil
+        # ONE tokenize pass per partition, pinned and released here: the
+        # dictionary delta, every sub-epoch's encode and its row-count /
+        # ts_index aggregation read it. The raw text is never read again
+        # (decode reconstructs it), so it leaves before the persist.
+        parsed = encode_pipeline.parse(part_df, slim=True).drop("text").persist()
         try:
+            n_subs = 1
+            done_subs: set[int] = set()
+            if self.dict_budget is not None:
+                done_subs, committed_n_subs = self.committed_sub_epochs(partition_id)
+                if committed_n_subs is not None:
+                    # resume: the split is pinned to the n_subs the committed
+                    # sub-epochs used — never recompute from the (now-shrunken)
+                    # dictionary delta (see committed_sub_epochs docstring)
+                    n_subs = committed_n_subs
+                else:
+                    # epoch scope: archive-local dictionaries, nothing carries
+                    lt_existing = var_existing = None
+                    if self.dict_scope == "global":
+                        lt_existing = self._load_dict("logtype")
+                        var_existing = self._load_dict("var")
+                    delta = self._dict_delta(parsed, lt_existing, var_existing)
+                    n_subs = max(1, -(-delta // self.dict_budget))  # ceil
             for sub in range(n_subs):
                 if sub in done_subs:
                     continue
-                src = parsed if parsed is not None else part_df
-                if n_subs == 1:
-                    sub_df = src
-                else:
+                sub_df = parsed
+                if n_subs > 1:
                     # deterministic row split: re-runs see identical sub-epochs
-                    sub_df = src.filter(
+                    sub_df = parsed.filter(
                         F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(n_subs)) == sub
                     )
-                self._run_sub_epoch(
-                    sub_df, partition_id, sub, n_subs,
-                    is_parsed=parsed is not None,
-                )
+                self._run_sub_epoch(sub_df, partition_id, sub, n_subs)
         finally:
-            if parsed is not None:
-                parsed.unpersist()
+            parsed.unpersist()
 
     def _run_sub_epoch(
-        self,
-        part_df: DataFrame,
-        partition_id: int,
-        sub_epoch: int,
-        n_subs: int,
-        is_parsed: bool = False,
+        self, parsed: DataFrame, partition_id: int, sub_epoch: int, n_subs: int
     ) -> None:
+        """Encode, enrich and write the rows of ``parsed`` (the slim parse
+        ``_run_partition`` owns), save the dictionaries, then commit."""
         t0 = time.time()
         # sink partition value: unique per (partition, sub), stable across
         # resumes; plain partition_id when there is no split
@@ -436,22 +464,6 @@ class IngestPipeline:
             lt_existing = self._load_dict("logtype")
             var_existing = self._load_dict("var")
 
-        encoded, lt_dict, var_dict = encode_pipeline.encode(
-            part_df,
-            key_cols=["conv_id", "turn_idx"],
-            existing_logtype_dict=lt_existing,
-            existing_var_dict=var_existing,
-            var_id_mode=self.var_id_mode,
-            pre_parsed=part_df if is_parsed else None,
-        )
-        enriched = enrich.enrich(
-            encoded, transcripts.role_dim(self.spark), transcripts.tool_dim(self.spark)
-        )
-        enriched = route.with_logtype_class(
-            enriched.join(F.broadcast(lt_dict), "logtype_id")
-        ).drop("logtype")
-        enriched = enriched.withColumn("epoch_part", F.lit(epoch_part)).persist()
-
         # per-pattern timestamp index (clp_s timestamp dictionary:
         # TimestampEntry.hpp:58-95 keeps min/max PER PATTERN; queries are
         # proven false pattern-by-pattern, EvaluateTimestampIndex.cpp).
@@ -461,11 +473,11 @@ class IngestPipeline:
         # carry them exactly whatever the Python process's time zone.
         pat_col = (
             F.col("pattern_id").cast("int")
-            if "pattern_id" in part_df.columns
+            if "pattern_id" in parsed.columns
             else F.lit(-1)
         )
         pat_rows = (
-            part_df.groupBy(pat_col.alias("pattern_id"))
+            parsed.groupBy(pat_col.alias("pattern_id"))
             .agg(
                 F.count("*").alias("n"),
                 F.unix_micros(F.min("ts")).alias("mn"),
@@ -486,29 +498,50 @@ class IngestPipeline:
                 TS_INDEX_SCHEMA,
             ).write.mode("append").parquet(self.ts_index_path)
 
-        # materialize the persist ONCE before fanning out the writers so
-        # the three jobs read the cache instead of racing to build it.
-        # epoch_part scopes each overwrite to THIS sub-epoch, and is a
-        # column of the persisted rows, not a literal (route.write_sink).
-        n_rows = enriched.count()
-        route.write_sinks(
-            enriched, self.store, ["epoch_part"], pool=f"epoch-{partition_id}-sink"
-        )
-        n_routed = n_rows * len(route.SINK_KINDS)
-
-        if self.write_glt:
-            # archival copy: logtype-clustered for min/max file skipping
-            # + maximal ratio (GLT layout; BENCH/BASELINE.md)
-            route.write_glt_layout(
-                enriched, f"{self.glt_root}/epoch_part={epoch_part}",
-                partitions=max(self.spark.sparkContext.defaultParallelism // 4, 1),
-                combine_threshold=0.001,  # GLT's 0.1% combined-table default
+        pinned: list[DataFrame] = []  # released last-first, on failure too
+        try:
+            encoded, lt_dict, var_dict = encode_pipeline.encode(
+                parsed,
+                key_cols=["conv_id", "turn_idx"],
+                existing_logtype_dict=lt_existing,
+                existing_var_dict=var_existing,
+                var_id_mode=self.var_id_mode,
+                pre_parsed=parsed,
             )
+            # encode persists a dictionary it built distributed
+            pinned += [d for d in (lt_dict, var_dict) if d.is_cached]
+            enriched = enrich.enrich(
+                encoded, transcripts.role_dim(self.spark), transcripts.tool_dim(self.spark)
+            )
+            enriched = route.with_logtype_class(
+                enriched.join(F.broadcast(lt_dict), "logtype_id")
+            ).drop("logtype")
+            enriched = enriched.withColumn("epoch_part", F.lit(epoch_part)).persist()
+            pinned.append(enriched)
 
-        ep = epoch_part if self.dict_scope == "epoch" else None
-        lt_n = self._save_dict("logtype", lt_dict, epoch_part=ep)
-        var_n = self._save_dict("var", var_dict, epoch_part=ep)
-        enriched.unpersist()
+            # materialize the persist ONCE before fanning out the writers so
+            # the three jobs read the cache instead of racing to build it.
+            # epoch_part scopes each overwrite to THIS sub-epoch, and is a
+            # column of the persisted rows, not a literal (route.write_sink).
+            n_rows = enriched.count()
+            route.write_sinks(
+                enriched, self.store, ["epoch_part"], pool=f"{self._pool(partition_id)}-sink"
+            )
+            if self.write_glt:
+                # archival copy: logtype-clustered for min/max file skipping
+                # + maximal ratio (GLT layout; BENCH/BASELINE.md)
+                route.write_glt_layout(
+                    enriched, f"{self.glt_root}/epoch_part={epoch_part}",
+                    partitions=max(self.spark.sparkContext.defaultParallelism // 4, 1),
+                    combine_threshold=0.001,  # GLT's 0.1% combined-table default
+                )
+
+            ep = epoch_part if self.dict_scope == "epoch" else None
+            lt_n = self._save_dict("logtype", lt_dict, epoch_part=ep)
+            var_n = self._save_dict("var", var_dict, epoch_part=ep)
+        finally:
+            for df in reversed(pinned):
+                df.unpersist()
 
         wall = time.time() - t0
         self._append_ledger(
@@ -517,7 +550,7 @@ class IngestPipeline:
                 "sub_epoch": sub_epoch,
                 "n_subs": n_subs,
                 "n_rows": n_input,
-                "n_routed": n_routed,
+                "n_routed": n_rows * len(route.SINK_KINDS),
                 "lt_dict_size": lt_n,
                 "var_dict_size": var_n,
                 "wall_sec": round(wall, 3),

@@ -1,17 +1,19 @@
-"""Structured Streaming wrapper for the encode pipeline.
+"""Structured Streaming over the ingest pipeline.
 
 The reference's real-time path is the IR stream: logging libraries emit
 events incrementally and archives are built from them later
-(clp/ir/LogEventSerializer.cpp, clp/clp/FileCompressor.cpp:438-524). The
-Spark-native equivalent is a file/Kafka stream of turns processed in
-micro-batches:
+(clp/ir/LogEventSerializer.cpp, clp/clp/FileCompressor.cpp:438-524), by
+the same archive writer as a file compression. The Spark-native
+equivalent is a file/Kafka stream of turns processed in micro-batches:
 
-- ``encode_stream`` / ``route_stream``: foreachBatch runs the SAME batch
-  encode+route code per micro-batch — dictionaries grow incrementally
-  across batches exactly like resumed batch epochs (CLP's dictionaries
-  are append-only across an archive's lifetime too). The stream
-  checkpoint + the idempotent dynamic-overwrite sinks give end-to-end
-  exactly-once per sink partition.
+- ``route_stream``: foreachBatch commits each micro-batch as one epoch
+  of an ``IngestPipeline`` archive (``IngestPipeline.commit_batch``), the
+  batch ingest's own code: the three sinks, the ts_index, the
+  dictionaries growing across batches (CLP's dictionaries are
+  append-only across an archive's lifetime too) and a ledger row. The
+  ledger makes a batch exactly-once: the stream checkpoint replays an
+  uncommitted batch, and a batch the ledger holds is skipped. The
+  archive is searchable through ``IngestPipeline(spark, work_root)``.
 - ``count_by_time_stream``: CLP's count-by-time bucketing
   (clp/clo/OutputHandler.hpp:269-271) as a watermarked tumbling window —
   late turns beyond the watermark are dropped, matching the reducer's
@@ -24,9 +26,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from clp_core_spark.operators import dictionaries, encode_pipeline, enrich, route
-from clp_core_spark.plans.tablestore import TableStore
-from clp_core_spark.sources import transcripts
+from clp_core_spark.plans.pipeline import IngestPipeline
 
 
 def read_transcript_stream(
@@ -208,57 +208,17 @@ def sessionize_stream(
     )
 
 
-class StreamingEncoder:
-    """foreachBatch handler: encode + enrich + route each micro-batch,
-    growing the dictionaries across batches (epoch = micro-batch)."""
-
-    def __init__(self, spark: SparkSession, work_root: str):
-        self.spark = spark
-        self.work_root = work_root
-        self.dicts_path = f"{work_root}/dicts"
-        self.store = TableStore(spark, f"{work_root}/sinks", mode="parquet")
-
-    def _load_dict(self, name: str) -> DataFrame | None:
-        from clp_core_spark.plans import dictstore
-
-        return dictstore.load_dict(self.spark, self.dicts_path, name)
-
-    def _save_dict(self, name: str, df: DataFrame) -> None:
-        from clp_core_spark.plans import dictstore
-
-        dictstore.save_dict(self.dicts_path, name, df)
-
-    def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        encoded, lt_dict, var_dict = encode_pipeline.encode(
-            batch_df,
-            key_cols=["conv_id", "turn_idx"],
-            existing_logtype_dict=self._load_dict("logtype"),
-            existing_var_dict=self._load_dict("var"),
-        )
-        enriched = enrich.enrich(
-            encoded, transcripts.role_dim(self.spark), transcripts.tool_dim(self.spark)
-        )
-        enriched = route.with_logtype_class(
-            enriched.join(F.broadcast(lt_dict), "logtype_id")
-        ).drop("logtype")
-        # a table per micro-batch, read back as by_role's batch_id column
-        route.write_sink(enriched, self.store, "role", table=f"by_role/batch_id={batch_id}")
-        self._save_dict("logtype", lt_dict)
-        self._save_dict("var", var_dict)
-
-
 def route_stream(
     spark: SparkSession,
     stream: DataFrame,
     work_root: str,
     trigger_available_now: bool = True,
 ) -> StreamingQuery:
-    """Start the encode+route stream; checkpoint under work_root."""
-    encoder = StreamingEncoder(spark, work_root)
+    """Start the ingest stream: micro-batch N commits as epoch N of the
+    archive under ``work_root``; the stream checkpoints under it too."""
+    pipe = IngestPipeline(spark, work_root, table_mode="parquet")
     writer = (
-        stream.writeStream.foreachBatch(encoder.process_batch)
+        stream.writeStream.foreachBatch(pipe.commit_batch)
         .option("checkpointLocation", f"{work_root}/checkpoint")
         .outputMode("update")
     )

@@ -214,11 +214,10 @@ def test_concurrent_crash_resume(spark, input_df, work_root, monkeypatch):
     re-runs only the failed one, and routed rows are exactly-once."""
     orig = IngestPipeline._run_sub_epoch
 
-    def boom(self, part_df, partition_id, sub_epoch, n_subs, is_parsed=False):
+    def boom(self, part_df, partition_id, sub_epoch, n_subs):
         if partition_id == 2:
             raise RuntimeError("simulated crash p2")
-        return orig(self, part_df, partition_id, sub_epoch, n_subs,
-                    is_parsed=is_parsed)
+        return orig(self, part_df, partition_id, sub_epoch, n_subs)
 
     monkeypatch.setattr(IngestPipeline, "_run_sub_epoch", boom)
     pipe = IngestPipeline(
@@ -326,11 +325,10 @@ def test_crash_resume_pins_n_subs(spark, input_df, work_root, monkeypatch):
     pipe = IngestPipeline(spark, work_root, num_partitions=2, dict_budget=200)
     orig = IngestPipeline._run_sub_epoch
 
-    def boom(self, part_df, partition_id, sub_epoch, n_subs, is_parsed=False):
+    def boom(self, part_df, partition_id, sub_epoch, n_subs):
         if sub_epoch >= 1:
             raise RuntimeError("simulated crash")
-        return orig(self, part_df, partition_id, sub_epoch, n_subs,
-                    is_parsed=is_parsed)
+        return orig(self, part_df, partition_id, sub_epoch, n_subs)
 
     monkeypatch.setattr(IngestPipeline, "_run_sub_epoch", boom)
     with pytest.raises(RuntimeError, match="simulated crash"):

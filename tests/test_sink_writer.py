@@ -45,8 +45,8 @@ def test_sink_files_are_sorted_on_shuffled_input(shuffled_ingest):
 
 
 def test_stream_sink_files_are_sorted_on_shuffled_input(spark, transcripts, tmp_path):
-    """The streaming encoder writes each micro-batch as its own table
-    (by_role/batch_id=N); its sink files must be sorted all the same."""
+    """A stream commits each micro-batch as its own epoch
+    (by_role/epoch_part=N); its sink files must be sorted all the same."""
     from clp_core_spark.streaming import stream_pipeline as sp
 
     inp = str(tmp_path / "input")

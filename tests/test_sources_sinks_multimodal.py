@@ -1,12 +1,11 @@
-"""Raw-text source (message splitter), reconstruction sinks, and the
-multimodal mapInPandas plumbing."""
+"""Raw-text source (message splitter) and reconstruction sinks."""
 
 import json
 
 import pyspark.sql.functions as F
 import pytest
 
-from clp_core_spark.operators import encode_pipeline, multimodal, sinks
+from clp_core_spark.operators import encode_pipeline, sinks
 from clp_core_spark.sources import raw_text
 
 LOG = """2016-05-08 07:34:05,251 task started
@@ -206,1353 +205,3 @@ def test_reconstruct_json(spark):
     for r in out[:50]:
         j = json.loads(r["json"])
         assert want[(j["conv_id"], j["turn_idx"])] == j["text"]
-
-
-def test_multimodal_stats_and_features(spark):
-    media = multimodal.synthetic_media_table(spark, n=16)
-    stats = multimodal.image_stats(media).collect()
-    assert len(stats) == 16
-    assert all(len(r["mean"]) == 3 and len(r["std"]) == 3 for r in stats)
-    # deterministic: same input -> same stats
-    again = multimodal.image_stats(media).collect()
-    assert sorted(map(tuple, stats)) == sorted(map(tuple, again))
-
-    feats = multimodal.image_resize_features(media, target=(4, 4)).collect()
-    assert all(len(r["feature"]) == 4 * 4 * 3 for r in feats)
-
-
-def test_multimodal_real_decode_is_stubbed():
-    with pytest.raises(NotImplementedError):
-        multimodal.decode_image(b"xx", 2, 2, 3, fake=False)
-
-
-def test_frame_sampling(spark):
-    media = multimodal.synthetic_media_table(spark, n=6)
-    frames = multimodal.sample_frames(media, every_ms=1000)
-    got = {
-        r["id"]: r["cnt"]
-        for r in frames.groupBy("id").agg(F.count("*").alias("cnt")).collect()
-    }
-    durations = {r["id"]: r["duration_ms"] for r in media.collect()}
-    for i, dur in durations.items():
-        assert got[i] == max(dur // 1000, 1)
-
-
-def test_audio_features(spark):
-    audio = multimodal.synthetic_audio_table(spark, n=12)
-    feats = multimodal.audio_features(audio).collect()
-    assert len(feats) == 12
-    for r in feats:
-        assert 0.0 < r["rms"] <= 1.0
-        assert 0.0 <= r["zero_cross_rate"] <= 1.0
-        assert 0.0 <= r["dominant_hz"] <= 8000.0  # <= Nyquist at 16 kHz
-    again = multimodal.audio_features(audio).collect()
-    assert sorted(map(tuple, feats)) == sorted(map(tuple, again))
-
-
-def test_audio_real_decode_is_stubbed():
-    with pytest.raises(NotImplementedError):
-        multimodal.decode_audio(b"xx", 128, fake=False)
-
-
-def test_video_frame_features(spark):
-    media = multimodal.synthetic_media_table(spark, n=6)
-    feats = multimodal.frame_features(media, every_ms=1000, target=(4, 4))
-    rows = feats.collect()
-    durations = {r["id"]: r["duration_ms"] for r in media.collect()}
-    per_id: dict[int, list] = {}
-    for r in rows:
-        assert len(r["feature"]) == 4 * 4 * 3
-        per_id.setdefault(r["id"], []).append(r)
-    for i, dur in durations.items():
-        assert len(per_id[i]) == max(dur // 1000, 1)
-    # frames at different timestamps decode to different features
-    multi = [v for v in per_id.values() if len(v) > 1]
-    assert multi and any(
-        v[0]["feature"] != v[1]["feature"] for v in multi
-    )
-
-
-# --- real (pure-numpy) BMP / WAV decode, fake=False end-to-end ---------------
-
-
-def _bmp_bytes(px: "np.ndarray") -> bytes:
-    """Hand-assemble an uncompressed 24-bit BI_RGB BMP from an
-    (h, w, 3) uint8 RGB array: bottom-up rows, 4-byte row padding,
-    BGR byte order — the layout decode_bmp must invert."""
-    import struct
-
-    h, w, _ = px.shape
-    stride = (w * 3 + 3) & ~3
-    rows = b""
-    for y in range(h - 1, -1, -1):  # bottom-up
-        row = px[y, :, ::-1].tobytes()  # RGB -> BGR
-        rows += row + b"\0" * (stride - len(row))
-    header = struct.pack("<2sIHHI", b"BM", 54 + len(rows), 0, 0, 54)
-    dib = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(rows), 0, 0, 0, 0)
-    return header + dib + rows
-
-
-def test_bmp_decodes_for_real(spark):
-    import numpy as np
-
-    rng = np.random.RandomState(7)
-    px = rng.randint(0, 256, size=(5, 3, 3), dtype=np.uint8)
-    raw = _bmp_bytes(px)
-    # unit: decoder inverts padding/flip/BGR exactly
-    assert (multimodal.decode_bmp(raw) == px).all()
-    # end-to-end: image_stats with fake_decode=False over real BMP bytes
-    df = spark.createDataFrame(
-        [(1, bytearray(raw), 3, 5, 3)],
-        "id long, data binary, width int, height int, channels int",
-    )
-    [r] = multimodal.image_stats(df, fake_decode=False).collect()
-    flat = px.astype(np.float64)
-    for ch in range(3):
-        assert abs(r["mean"][ch] - flat[:, :, ch].mean()) < 1e-4
-        assert abs(r["std"][ch] - flat[:, :, ch].std()) < 1e-4
-
-
-def _wav_bytes(wave16: "np.ndarray", rate: int) -> bytes:
-    import struct
-
-    data = wave16.astype("<i2").tobytes()
-    fmt = struct.pack("<HHIIHH", 1, 1, rate, rate * 2, 2, 16)
-    return (
-        b"RIFF" + struct.pack("<I", 4 + 8 + len(fmt) + 8 + len(data)) + b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"data" + struct.pack("<I", len(data)) + data
-    )
-
-
-def test_wav_decodes_for_real(spark):
-    import numpy as np
-
-    n, rate, freq = 2048, 16_000, 1000.0
-    t = np.arange(n) / rate
-    wave = np.round(np.sin(2 * np.pi * freq * t) * 20000).astype(np.int16)
-    raw = _wav_bytes(wave, rate)
-    got, got_rate = multimodal.decode_wav(raw)
-    assert got_rate == rate
-    ref = wave.astype(np.float32) / 32768.0
-    assert np.abs(got - ref).max() < 1e-6
-    # end-to-end: audio_features with fake_decode=False; the dominant
-    # rfft bin of a pure 1 kHz tone lands on 1000 Hz exactly (n*f/rate
-    # = 128 is integral)
-    df = spark.createDataFrame(
-        [(1, bytearray(raw), n, rate)],
-        "id long, data binary, num_samples int, sample_rate int",
-    )
-    [r] = multimodal.audio_features(df, fake_decode=False).collect()
-    assert abs(r["rms"] - float(np.sqrt(np.mean(ref**2)))) < 1e-6
-    assert abs(r["dominant_hz"] - 1000.0) < 1e-6
-
-
-def test_stereo_wav_downmixes():
-    import numpy as np
-    import struct
-
-    left = np.array([1000, -1000, 2000, -2000], dtype="<i2")
-    right = np.array([3000, 1000, -2000, 2000], dtype="<i2")
-    inter = np.empty(8, dtype="<i2")
-    inter[0::2], inter[1::2] = left, right
-    data = inter.tobytes()
-    fmt = struct.pack("<HHIIHH", 1, 2, 8000, 8000 * 4, 4, 16)
-    raw = (
-        b"RIFF" + struct.pack("<I", 4 + 8 + len(fmt) + 8 + len(data)) + b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"data" + struct.pack("<I", len(data)) + data
-    )
-    got, rate = multimodal.decode_wav(raw)
-    assert rate == 8000
-    expect = (left.astype(np.float32) + right) / 2.0 / 32768.0
-    assert np.abs(got - expect).max() < 1e-6
-
-
-def _png_bytes(px: "np.ndarray", filters: list[int]) -> bytes:
-    """Hand-assemble a non-interlaced 8-bit PNG from an (h, w, ch) uint8
-    array, FILTERING each scanline with the given per-row filter type
-    (0 None / 1 Sub / 2 Up / 3 Average / 4 Paeth) — the layout
-    decode_png must invert (zlib inflate + unfilter)."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    h, w, nch = px.shape
-    color_type = {1: 0, 2: 4, 3: 2, 4: 6}[nch]
-
-    def chunk(ctype: bytes, body: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(body)) + ctype + body
-            + struct.pack(">I", zlib.crc32(ctype + body) & 0xFFFFFFFF)
-        )
-
-    raw = b""
-    prev = np.zeros(w * nch, dtype=np.int32)
-    for y in range(h):
-        rec = px[y].reshape(-1).astype(np.int32)
-        ft = filters[y % len(filters)]
-        filt = np.empty_like(rec)
-        for x in range(len(rec)):
-            a = int(rec[x - nch]) if x >= nch else 0
-            b = int(prev[x])
-            c = int(prev[x - nch]) if x >= nch else 0
-            if ft == 0:
-                pred = 0
-            elif ft == 1:
-                pred = a
-            elif ft == 2:
-                pred = b
-            elif ft == 3:
-                pred = (a + b) // 2
-            else:
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-            filt[x] = (int(rec[x]) - pred) & 0xFF
-        raw += bytes([ft]) + filt.astype(np.uint8).tobytes()
-        prev = rec
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, color_type, 0, 0, 0)
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(raw))
-        + chunk(b"IEND", b"")
-    )
-
-
-def test_png_decodes_for_real(spark):
-    """decode_png inverts every filter type on real bytes (stdlib zlib +
-    numpy unfiltering — no codec library), across RGB / RGBA / gray, and
-    drives image_stats fake_decode=False end-to-end."""
-    import numpy as np
-
-    rng = np.random.RandomState(11)
-    for nch in (1, 2, 3, 4):
-        px = rng.randint(0, 256, size=(7, 5, nch), dtype=np.uint8)
-        raw = _png_bytes(px, filters=[0, 1, 2, 3, 4])
-        got = multimodal.decode_png(raw)
-        assert got.shape == (7, 5, nch)
-        assert (got == px).all(), f"nch={nch}"
-        # routed through the generic entry point too
-        assert (multimodal.decode_image(raw, 5, 7, nch) == px).all()
-
-    px = rng.randint(0, 256, size=(6, 4, 3), dtype=np.uint8)
-    raw = _png_bytes(px, filters=[4, 3, 1])
-    df = spark.createDataFrame(
-        [(1, bytearray(raw), 4, 6, 3)],
-        "id long, data binary, width int, height int, channels int",
-    )
-    [r] = multimodal.image_stats(df, fake_decode=False).collect()
-    flat = px.astype(np.float64)
-    for ch in range(3):
-        assert abs(r["mean"][ch] - flat[:, :, ch].mean()) < 1e-4
-        assert abs(r["std"][ch] - flat[:, :, ch].std()) < 1e-4
-
-
-def _png_chunk(tag: bytes, body: bytes) -> bytes:
-    import struct
-    import zlib
-
-    return struct.pack(">I", len(body)) + tag + body + struct.pack(
-        ">I", zlib.crc32(tag + body) & 0xFFFFFFFF
-    )
-
-
-def _png_filter_rows(rows: "np.ndarray", bpp: int, filters: list[int]) -> bytes:
-    """FORWARD-filter packed scanline bytes (h, rowbytes) with the given
-    per-row filter types at byte stride ``bpp`` — the exact layout
-    decode_png's unfilter must invert."""
-    import numpy as np
-
-    h, rowlen = rows.shape
-    raw = b""
-    prev = np.zeros(rowlen, dtype=np.int32)
-    for y in range(h):
-        rec = rows[y].astype(np.int32)
-        ft = filters[y % len(filters)]
-        filt = np.empty_like(rec)
-        for x in range(rowlen):
-            a = int(rec[x - bpp]) if x >= bpp else 0
-            b = int(prev[x])
-            c = int(prev[x - bpp]) if x >= bpp else 0
-            if ft == 0:
-                pred = 0
-            elif ft == 1:
-                pred = a
-            elif ft == 2:
-                pred = b
-            elif ft == 3:
-                pred = (a + b) // 2
-            else:
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-            filt[x] = (int(rec[x]) - pred) & 0xFF
-        raw += bytes([ft]) + filt.astype(np.uint8).tobytes()
-        prev = rec
-    return raw
-
-
-def _png_pack_samples(sub: "np.ndarray", depth: int) -> "np.ndarray":
-    """(h, w, nch) int samples -> packed scanline bytes (h, rowbytes):
-    big-endian pairs at depth 16, MSB-first bit groups below 8."""
-    import numpy as np
-
-    h, w, nch = sub.shape
-    flat = sub.reshape(h, w * nch)
-    if depth == 8:
-        return flat.astype(np.uint8)
-    if depth == 16:
-        out = np.empty((h, w * nch * 2), dtype=np.uint8)
-        out[:, 0::2] = (flat >> 8).astype(np.uint8)
-        out[:, 1::2] = (flat & 0xFF).astype(np.uint8)
-        return out
-    nbits = w * nch * depth
-    bits = (
-        (flat[:, :, None] >> np.arange(depth - 1, -1, -1)) & 1
-    ).astype(np.uint8).reshape(h, nbits)
-    return np.packbits(bits, axis=1)  # pads rows to a byte boundary
-
-
-def _png_bytes_full(px: "np.ndarray", depth: int, color_type: int,
-                    interlace: int, filters: list[int]) -> bytes:
-    """Hand-assemble a PNG at any bit depth / interlace method from an
-    (h, w, nch) sample array (palette: nch==1 index samples)."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    h, w, nch = px.shape
-    bpp = max(1, (nch * depth) // 8)
-    passes = (
-        multimodal._PNG_ADAM7 if interlace else ((0, 0, 1, 1),)
-    )
-    raw = b""
-    for x0, y0, dx, dy in passes:
-        sub = px[y0::dy, x0::dx]
-        if sub.shape[0] == 0 or sub.shape[1] == 0:
-            continue
-        raw += _png_filter_rows(_png_pack_samples(sub, depth), bpp, filters)
-    ihdr = struct.pack(">IIBBBBB", w, h, depth, color_type, 0, 0, interlace)
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + _png_chunk(b"IHDR", ihdr)
-        + _png_chunk(b"IDAT", zlib.compress(raw))
-        + _png_chunk(b"IEND", b"")
-    )
-
-
-def test_png_16bit_decodes_for_real():
-    """Bit-depth-16 PNG (big-endian sample pairs; filter stride bpp=2*nch
-    BYTES, not samples) round-trips through every filter type and keeps
-    full precision — decode returns uint16."""
-    import numpy as np
-
-    rng = np.random.RandomState(23)
-    for nch, ctype in ((1, 0), (3, 2), (4, 6)):
-        px = rng.randint(0, 65536, size=(7, 5, nch)).astype(np.uint16)
-        got = multimodal.decode_png(
-            _png_bytes_full(px, 16, ctype, 0, filters=[0, 1, 2, 3, 4])
-        )
-        assert got.dtype == np.uint16
-        assert (got == px).all(), f"nch={nch}"
-
-
-def test_16bit_png_features_share_the_8bit_scale(spark):
-    """A 16-bit PNG's stats/features sit on the SAME 0-255 / [0,1]
-    scale as 8-bit images (samples /257 before stats) — without the
-    rescale a mixed-depth corpus gets features 257x apart and the deep
-    images dominate every ANN distance."""
-    import numpy as np
-
-    rng = np.random.RandomState(31)
-    px = rng.randint(0, 65536, size=(6, 4, 1)).astype(np.uint16)
-    raw = _png_bytes_full(px, 16, 0, 0, filters=[0, 1, 2])
-    df = spark.createDataFrame(
-        [(1, bytearray(raw), 4, 6, 1)],
-        "id long, data binary, width int, height int, channels int",
-    )
-    [r] = multimodal.image_stats(df, fake_decode=False).collect()
-    want = (px.astype(np.float64) / 257.0)[:, :, 0]
-    assert abs(r["mean"][0] - want.mean()) < 1e-3
-    [f] = multimodal.image_resize_features(
-        df, target=(2, 2), fake_decode=False
-    ).collect()
-    assert all(0.0 <= v <= 1.0 for v in f["feature"])
-
-
-def test_png_subbyte_depths_decode_for_real():
-    """1/2/4-bit gray (MSB-first packing, byte-padded rows, samples
-    scaled to full 8-bit range) and 4-bit palette indices + tRNS."""
-    import numpy as np
-
-    rng = np.random.RandomState(29)
-    for depth in (1, 2, 4):
-        mx = (1 << depth) - 1
-        px = rng.randint(0, mx + 1, size=(6, 9, 1)).astype(np.uint8)
-        got = multimodal.decode_png(
-            _png_bytes_full(px, depth, 0, 0, filters=[0, 1, 2])
-        )
-        assert (got == px * (255 // mx)).all(), f"depth={depth}"
-
-    pal = rng.randint(0, 256, size=(11, 3), dtype=np.uint8)
-    idx = rng.randint(0, 11, size=(5, 7, 1)).astype(np.uint8)
-    raw = _png_bytes_full(idx, 4, 3, 0, filters=[0, 2])
-    # splice PLTE+tRNS in before IDAT (builder emits IHDR/IDAT/IEND)
-    ihdr_end = 8 + 12 + 13
-    trns = bytes([9, 18, 27, 36])
-    body = (
-        raw[:ihdr_end] + _png_chunk(b"PLTE", pal.tobytes())
-        + _png_chunk(b"tRNS", trns) + raw[ihdr_end:]
-    )
-    got = multimodal.decode_png(body)
-    assert got.shape == (5, 7, 4)
-    assert (got[..., :3] == pal[idx[..., 0]]).all()
-    alpha = np.full(11, 255, dtype=np.uint8)
-    alpha[:4] = [9, 18, 27, 36]
-    assert (got[..., 3] == alpha[idx[..., 0]]).all()
-
-
-def test_png_adam7_interlace_decodes_for_real():
-    """Adam7: seven independently filtered passes scatter back into the
-    output grid — checked at 8-bit RGB and 16-bit gray, on dimensions
-    that leave some passes empty (w or h < pass origin)."""
-    import numpy as np
-
-    rng = np.random.RandomState(31)
-    for hh, ww in ((9, 10), (4, 3), (1, 1), (2, 7)):
-        px = rng.randint(0, 256, size=(hh, ww, 3), dtype=np.uint8)
-        got = multimodal.decode_png(
-            _png_bytes_full(px, 8, 2, 1, filters=[0, 1, 2, 3, 4])
-        )
-        assert (got == px).all(), f"{hh}x{ww}"
-
-    px16 = rng.randint(0, 65536, size=(9, 10, 1)).astype(np.uint16)
-    got16 = multimodal.decode_png(
-        _png_bytes_full(px16, 16, 0, 1, filters=[4, 3, 1])
-    )
-    assert got16.dtype == np.uint16
-    assert (got16 == px16).all()
-
-
-def test_png_illegal_combinations_rejected():
-    """Spec-illegal headers stay honest errors, not wrong pixels."""
-    import struct
-    import zlib
-
-    import numpy as np
-    import pytest as _pytest
-
-    def hdr(bit_depth, color_type, interlace):
-        ihdr = struct.pack(">IIBBBBB", 2, 2, bit_depth, color_type, 0, 0, interlace)
-        idat = zlib.compress(b"\0" * 20)
-        return (
-            b"\x89PNG\r\n\x1a\n" + _png_chunk(b"IHDR", ihdr)
-            + _png_chunk(b"IDAT", idat)
-        )
-
-    with _pytest.raises(ValueError):  # palette cannot be 16-bit
-        multimodal.decode_png(hdr(16, 3, 0))
-    with _pytest.raises(ValueError):  # RGB cannot be sub-byte
-        multimodal.decode_png(hdr(4, 2, 0))
-    with _pytest.raises(ValueError):  # interlace method 2 does not exist
-        multimodal.decode_png(hdr(8, 2, 2))
-    with _pytest.raises(ValueError):  # bit depth 3 does not exist
-        multimodal.decode_png(hdr(3, 0, 0))
-
-
-def test_png_palette_decodes_with_trns():
-    """Color-type-3 PNG: indices flow through the filter stage (Sub rows
-    included) and map through PLTE; a tRNS chunk adds per-entry alpha
-    (entries past its length default opaque)."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    def chunk(tag, body):
-        return struct.pack(">I", len(body)) + tag + body + struct.pack(
-            ">I", zlib.crc32(tag + body) & 0xFFFFFFFF
-        )
-
-    rng = np.random.RandomState(5)
-    pal = rng.randint(0, 256, size=(7, 3), dtype=np.uint8)
-    idx = rng.randint(0, 7, size=(5, 4), dtype=np.uint8)
-    raw = bytearray()
-    for y in range(5):
-        row = idx[y]
-        if y % 2:  # Sub filter over the 1-byte index lane
-            filt = np.diff(row.astype(np.int16), prepend=np.int16(0)) & 0xFF
-            raw += bytes([1]) + filt.astype(np.uint8).tobytes()
-        else:
-            raw += bytes([0]) + row.tobytes()
-    sig_ihdr = b"\x89PNG\r\n\x1a\n" + chunk(
-        b"IHDR", struct.pack(">IIBBBBB", 4, 5, 8, 3, 0, 0, 0)
-    )
-    idat_iend = chunk(b"IDAT", zlib.compress(bytes(raw))) + chunk(b"IEND", b"")
-
-    got = multimodal.decode_png(sig_ihdr + chunk(b"PLTE", pal.tobytes()) + idat_iend)
-    assert got.shape == (5, 4, 3)
-    assert (got == pal[idx]).all()
-
-    trns = bytes([10, 20, 30])
-    got_a = multimodal.decode_png(
-        sig_ihdr + chunk(b"PLTE", pal.tobytes()) + chunk(b"tRNS", trns) + idat_iend
-    )
-    assert got_a.shape == (5, 4, 4)
-    assert (got_a[..., :3] == pal[idx]).all()
-    alpha = np.full(7, 255, dtype=np.uint8)
-    alpha[:3] = [10, 20, 30]
-    assert (got_a[..., 3] == alpha[idx]).all()
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):  # palette image without PLTE
-        multimodal.decode_png(sig_ihdr + idat_iend)
-
-
-def test_g711_wav_decodes_known_code_points():
-    """G.711 mu-law/A-law WAV: the closed-form companding inverse hits
-    the ITU-T table's known code points exactly (mu-law 0x00 -> -32124,
-    0xFF -> 0; A-law 0x55 -> -8, 0xD5 -> +8, 0x2A -> -32256)."""
-    import struct
-
-    import numpy as np
-
-    def wav(fmt_code, codes):
-        fmt = struct.pack("<HHIIHH", fmt_code, 1, 8000, 8000, 1, 8)
-        data = bytes(codes)
-        return (
-            b"RIFF" + struct.pack("<I", 4 + 8 + len(fmt) + 8 + len(data))
-            + b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-            + b"data" + struct.pack("<I", len(data)) + data
-        )
-
-    mu, rate = multimodal.decode_wav(wav(7, [0x00, 0xFF, 0x7F]))
-    assert rate == 8000
-    got = np.round(mu * 32768.0).astype(int).tolist()
-    assert got == [-32124, 0, 0]
-
-    al, _ = multimodal.decode_wav(wav(6, [0x55, 0xD5, 0x2A]))
-    got = np.round(al * 32768.0).astype(int).tolist()
-    assert got == [-8, 8, -32256]
-
-
-def test_ima_adpcm_wav_decodes_for_real():
-    """IMA ADPCM WAV (fmt tag 0x11): the vectorized block decoder must
-    match a scalar reference decode of the same nibble stream bit-exactly
-    — mono with a trailing partial block, and stereo with round-robin
-    4-byte channel sub-blocks (downmixed by mean like every other
-    multi-channel path)."""
-    import struct
-
-    import numpy as np
-
-    step_t = multimodal._IMA_STEP_TABLE
-    idx_t = multimodal._IMA_INDEX_TABLE
-
-    def scalar_decode(data: bytes, c: int, ba: int) -> np.ndarray:
-        chans: list[list[int]] = [[] for _ in range(c)]
-        for off in range(0, len(data), ba):
-            block = data[off : off + ba]
-            pred, idx = [], []
-            for ch in range(c):
-                p = int.from_bytes(block[4 * ch : 4 * ch + 2], "little", signed=True)
-                i = min(max(block[4 * ch + 2], 0), 88)
-                pred.append(p)
-                idx.append(i)
-                chans[ch].append(p)
-            body = block[4 * c :]
-            for g in range(0, len(body), 4 * c):
-                for ch in range(c):
-                    for b in body[g + 4 * ch : g + 4 * ch + 4]:
-                        for nib in (b & 0xF, b >> 4):
-                            step = int(step_t[idx[ch]])
-                            diff = step >> 3
-                            if nib & 4:
-                                diff += step
-                            if nib & 2:
-                                diff += step >> 1
-                            if nib & 1:
-                                diff += step >> 2
-                            p = pred[ch] + (-diff if nib & 8 else diff)
-                            pred[ch] = max(-32768, min(32767, p))
-                            idx[ch] = max(0, min(88, idx[ch] + int(idx_t[nib & 7])))
-                            chans[ch].append(pred[ch])
-        n = len(chans[0])
-        out = np.empty(n * c, dtype=np.int16)
-        for ch in range(c):
-            out[ch :: c] = chans[ch]
-        return out
-
-    def wav(data: bytes, c: int, ba: int) -> bytes:
-        fmt = struct.pack("<HHIIHH", 0x11, c, 8000, 4000 * c, ba, 4)
-        return (
-            b"RIFF" + struct.pack("<I", 4 + 8 + len(fmt) + 8 + len(data))
-            + b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-            + b"data" + struct.pack("<I", len(data)) + data
-        )
-
-    rng = np.random.default_rng(7)
-
-    # mono, block_align 36 (32 data bytes = 64 samples/block), three full
-    # blocks plus a 16-byte partial block (header + 12 data bytes = 25
-    # decodable samples whose padded tail must be trimmed)
-    mono = bytearray()
-    for _ in range(3):
-        mono += struct.pack("<hBB", int(rng.integers(-2000, 2000)),
-                            int(rng.integers(0, 89)), 0)
-        mono += bytes(rng.integers(0, 256, size=32, dtype=np.uint8))
-    mono += struct.pack("<hBB", int(rng.integers(-2000, 2000)),
-                        int(rng.integers(0, 89)), 0)
-    mono += bytes(rng.integers(0, 256, size=12, dtype=np.uint8))
-
-    got, rate = multimodal.decode_wav(wav(bytes(mono), 1, 36))
-    assert rate == 8000
-    want = scalar_decode(bytes(mono), 1, 36).astype(np.float32) / 32768.0
-    assert got.shape == want.shape == (3 * 65 + 25,)
-    np.testing.assert_array_equal(got, want)
-
-    # stereo, block_align 24 (16 data bytes = 8 bytes = 16 samples per
-    # channel per block, plus the header predictor), two full blocks
-    st = bytearray()
-    for _ in range(2):
-        for _ch in range(2):
-            st += struct.pack("<hBB", int(rng.integers(-2000, 2000)),
-                              int(rng.integers(0, 89)), 0)
-        st += bytes(rng.integers(0, 256, size=16, dtype=np.uint8))
-
-    got2, _ = multimodal.decode_wav(wav(bytes(st), 2, 24))
-    want2 = scalar_decode(bytes(st), 2, 24)
-    want2 = (want2.reshape(-1, 2).astype(np.float32) / 32768.0).mean(axis=1)
-    assert got2.shape == want2.shape == (2 * 17,)
-    np.testing.assert_allclose(got2, want2, rtol=0, atol=1e-7)
-
-
-def _avi_bytes(frames: "np.ndarray", fps: float) -> bytes:
-    """Hand-assemble an uncompressed 24-bit BI_RGB RIFF/AVI from an
-    (n, h, w, 3) uint8 RGB array — bottom-up padded BGR DIB frames in a
-    movi list, the layout decode_avi must invert."""
-    import struct
-
-    n, h, w, _ = frames.shape
-    stride = (w * 3 + 3) & ~3
-
-    def chunk(cid: bytes, body: bytes) -> bytes:
-        pad = b"\0" if len(body) & 1 else b""
-        return cid + struct.pack("<I", len(body)) + body + pad
-
-    def lst(ltype: bytes, body: bytes) -> bytes:
-        return chunk(b"LIST", ltype + body)
-
-    avih = struct.pack("<14I", int(1e6 / fps), 0, 0, 0, n, 0, 1, 0, w, h,
-                       0, 0, 0, 0)
-    strh = b"vids" + b"\0" * 52
-    strf = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, stride * h,
-                       0, 0, 0, 0)
-    hdrl = lst(b"hdrl", chunk(b"avih", avih)
-               + lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf)))
-    movi_frames = b""
-    for k in range(n):
-        rows = b""
-        for y in range(h - 1, -1, -1):  # bottom-up
-            row = frames[k, y, :, ::-1].tobytes()  # RGB -> BGR
-            rows += row + b"\0" * (stride - len(row))
-        movi_frames += chunk(b"00db", rows)
-    return chunk(b"RIFF", b"AVI " + hdrl + lst(b"movi", movi_frames))
-
-
-def _avi_mjpeg_bytes(jpegs: list, w: int, h: int, fps: float) -> bytes:
-    """Hand-assemble a Motion-JPEG RIFF/AVI: each movi chunk is an
-    independent baseline JPEG payload, strf compression = 'MJPG'."""
-    import struct
-
-    def chunk(cid: bytes, body: bytes) -> bytes:
-        pad = b"\0" if len(body) & 1 else b""
-        return cid + struct.pack("<I", len(body)) + body + pad
-
-    def lst(ltype: bytes, body: bytes) -> bytes:
-        return chunk(b"LIST", ltype + body)
-
-    avih = struct.pack("<14I", int(1e6 / fps), 0, 0, 0, len(jpegs), 0, 1,
-                       0, w, h, 0, 0, 0, 0)
-    strh = b"vids" + b"\0" * 52
-    strf = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24,
-                       int.from_bytes(b"MJPG", "little"), 0, 0, 0, 0, 0)
-    hdrl = lst(b"hdrl", chunk(b"avih", avih)
-               + lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf)))
-    movi = b"".join(chunk(b"00dc", j) for j in jpegs)
-    return chunk(b"RIFF", b"AVI " + hdrl + lst(b"movi", movi))
-
-
-def test_mjpeg_avi_decodes_with_standard_tables():
-    """Motion-JPEG: DHT-less baseline JPEG frames (the MJPEG stream
-    convention) decode bit-exactly via the ITU T.81 Annex K.3 default
-    tables, both standalone and wrapped in an AVI with the MJPG FOURCC
-    (mixed 4:4:4 / 4:2:0 frames, odd-length chunk padding exercised)."""
-    import numpy as np
-
-    rng = np.random.default_rng(7)
-    jpegs, exps = [], []
-    for k in range(3):
-        px = rng.integers(0, 256, size=(16, 24, 3), dtype=np.uint8)
-        payload, exp = _jpeg_bytes(px, subsample=(k == 1),
-                                   std_tables=True, emit_dht=False)
-        header = payload.split(b"\xff\xda")[0]
-        assert b"\xff\xc4" not in header  # truly no DHT segment
-        jpegs.append(payload)
-        exps.append(exp)
-
-    # standalone: the decoder falls back to the K.3 tables
-    assert np.array_equal(multimodal.decode_jpeg(jpegs[0]), exps[0])
-    # std tables WITH DHT emitted must round-trip identically too
-    with_dht, exp_dht = _jpeg_bytes(
-        np.asarray(exps[0]), std_tables=True, emit_dht=True)
-    assert np.array_equal(multimodal.decode_jpeg(with_dht), exp_dht)
-
-    got, fps = multimodal.decode_avi(
-        _avi_mjpeg_bytes(jpegs, w=24, h=16, fps=12.5))
-    assert fps == 12.5
-    assert got.shape == (3, 16, 24, 3)
-    for k in range(3):
-        assert np.array_equal(got[k], exps[k]), f"frame {k} mismatch"
-
-
-def test_avi_decodes_and_real_frame_features(spark):
-    """decode_avi inverts the container+DIB layout on real bytes, and
-    frame_features with fake_decode=False extracts the REAL frame at
-    each sampled timestamp (container decoded once per video, indexed
-    by ts*fps)."""
-    import numpy as np
-
-    # 3 solid-color frames at 10 fps: ts 0/100/200ms hit frames 0/1/2
-    colors = [(255, 0, 0), (0, 255, 0), (0, 0, 255)]
-    frames = np.stack([
-        np.full((4, 6, 3), c, dtype=np.uint8) for c in colors
-    ])
-    raw = _avi_bytes(frames, fps=10.0)
-
-    got, fps = multimodal.decode_avi(raw)
-    assert fps == 10.0
-    assert (got == frames).all()
-
-    df = spark.createDataFrame(
-        [(1, bytearray(raw), 6, 4, 3, 300)],
-        "id long, data binary, width int, height int, channels int,"
-        " duration_ms long",
-    )
-    rows = multimodal.frame_features(
-        df, every_ms=100, target=(2, 2), fake_decode=False
-    ).collect()
-    assert len(rows) == 3
-    by_ts = {r["frame_ts_ms"]: r["feature"] for r in rows}
-    for ts, c in zip((0, 100, 200), colors):
-        want = np.tile(np.array(c, dtype=np.float32) / 255.0, 4)
-        assert np.allclose(by_ts[ts], want), (ts, by_ts[ts])
-
-
-def _jpeg_bytes(px: "np.ndarray", subsample: bool = False,
-                restart_interval: int = 0, std_tables: bool = False,
-                emit_dht: bool = True):
-    """Hand-assemble a baseline JPEG (SOF0) from an (h, w, 3) uint8 RGB
-    array: BT.601 color convert, optional 2x2 chroma subsampling, 8x8
-    orthonormal DCT, quantize (flat table, zigzag order), canonical
-    single-length Huffman tables built from the emitted symbol sets —
-    or, with ``std_tables``, the ITU T.81 Annex K.3 defaults (luma
-    tables for component 1, chroma tables for 2/3), optionally with NO
-    DHT segments at all (``emit_dht=False``, the Motion-JPEG stream
-    convention). Returns (payload, expected_rgb) where expected_rgb is
-    the exact reconstruction from the quantized coefficients via the
-    decoder's own arithmetic — so the decode test validates the
-    marker/Huffman/bitstream layers bit-for-bit."""
-    import struct
-
-    import numpy as np
-
-    h, w, _ = px.shape
-    q = np.full(64, 4, dtype=np.int32)  # zigzag order
-    ZZ = multimodal._JPEG_ZIGZAG
-    T = multimodal._DCT_T
-
-    r, g, b = (px[..., i].astype(np.float64) for i in range(3))
-    Y = 0.299 * r + 0.587 * g + 0.114 * b
-    Cb = -0.168736 * r - 0.331264 * g + 0.5 * b + 128.0
-    Cr = 0.5 * r - 0.418688 * g - 0.081312 * b + 128.0
-    hs_l = vs_l = 2 if subsample else 1
-
-    def sub(p):
-        if not subsample:
-            return p
-        hh, ww = -(-p.shape[0] // 2) * 2, -(-p.shape[1] // 2) * 2
-        pp = np.pad(p, ((0, hh - p.shape[0]), (0, ww - p.shape[1])), mode="edge")
-        return (pp[0::2, 0::2] + pp[1::2, 0::2]
-                + pp[0::2, 1::2] + pp[1::2, 1::2]) / 4.0
-
-    planes = [(Y, hs_l, vs_l), (sub(Cb), 1, 1), (sub(Cr), 1, 1)]
-    hmax, vmax = hs_l, vs_l
-    mcux, mcuy = -(-w // (8 * hmax)), -(-h // (8 * vmax))
-    padded = []
-    for p, hs, vs in planes:
-        H, W = mcuy * vs * 8, mcux * hs * 8
-        pp = np.pad(p, ((0, H - p.shape[0]), (0, W - p.shape[1])), mode="edge")
-        padded.append((pp, hs, vs))
-
-    # quantized zigzag blocks in scan order + reconstruction planes
-    scan_blocks: list[tuple[int, np.ndarray]] = []
-    recon = [np.zeros_like(pp) for pp, _, _ in padded]
-    for my in range(mcuy):
-        for mx in range(mcux):
-            for ci, (pp, hs, vs) in enumerate(padded):
-                for by in range(vs):
-                    for bx in range(hs):
-                        y0, x0 = (my * vs + by) * 8, (mx * hs + bx) * 8
-                        blk = pp[y0:y0 + 8, x0:x0 + 8] - 128.0
-                        F = T @ blk @ T.T
-                        zz = np.round(F.reshape(-1)[ZZ] / q).astype(np.int64)
-                        scan_blocks.append((my * mcux + mx, ci, zz))
-                        deq = np.zeros(64)
-                        deq[ZZ] = zz * q
-                        recon[ci][y0:y0 + 8, x0:x0 + 8] = (
-                            T.T @ deq.reshape(8, 8) @ T + 128.0
-                        )
-
-    # expected pixels via the decoder's own upsample/convert/round math
-    full = []
-    for ci, (_, hs, vs) in enumerate(padded):
-        p = np.repeat(np.repeat(recon[ci], vmax // vs, axis=0),
-                      hmax // hs, axis=1)
-        full.append(p[:h, :w])
-    yy, cb, cr = full[0], full[1] - 128.0, full[2] - 128.0
-    exp = np.clip(np.round(np.stack(
-        [yy + 1.402 * cr, yy - 0.344136 * cb - 0.714136 * cr,
-         yy + 1.772 * cb], axis=2)), 0, 255).astype(np.uint8)
-
-    # symbol streams (two-pass: collect, then emit)
-    def bitlen(v):
-        return int(v).bit_length()
-
-    def sym_stream():
-        pred = [0, 0, 0]
-        prev_mcu = 0
-        for mcu, ci, zz in scan_blocks:
-            if restart_interval and mcu != prev_mcu and mcu % restart_interval == 0:
-                # T.81 restart boundary: pad to byte, emit RSTn (mod 8),
-                # reset DC prediction
-                pred = [0, 0, 0]
-                yield ("rst", (mcu // restart_interval - 1) % 8, 0, 0, ci)
-            prev_mcu = mcu
-            diff = int(zz[0]) - pred[ci]
-            pred[ci] = int(zz[0])
-            s = bitlen(abs(diff))
-            yield ("dc", s, diff, s, ci)
-            k, run = 1, 0
-            while k < 64:
-                v = int(zz[k])
-                if v == 0:
-                    run += 1
-                else:
-                    while run > 15:
-                        yield ("ac", 0xF0, 0, 0, ci)
-                        run -= 16
-                    size = bitlen(abs(v))
-                    yield ("ac", (run << 4) | size, v, size, ci)
-                    run = 0
-                k += 1
-            if run:
-                yield ("ac", 0x00, 0, 0, ci)
-
-    if std_tables:
-        # encode against the decoder's own Annex K.3 canonical tables,
-        # inverted to sym -> (length, code); chroma components use the
-        # id-1 tables, as the K.3 convention (and every MJPEG encoder)
-        # does
-        def inv(cls, tid):
-            return {
-                sym: (length, code)
-                for (length, code), sym in
-                multimodal._std_huff_table(cls, tid).items()
-            }
-
-        codes = {("dc", 0): inv(0, 0), ("ac", 0): inv(1, 0),
-                 ("dc", 1): inv(0, 1), ("ac", 1): inv(1, 1)}
-        comp_tid = [0, 1, 1]
-        dht_segs = [
-            (bytes([(cls << 4) | tid]) + bytes(counts) + syms)
-            for (cls, tid), (counts, syms)
-            in sorted(multimodal._JPEG_STD_HUFF_SPEC.items())
-        ] if emit_dht else []
-    else:
-        all_syms = list(sym_stream())
-        dc_syms = sorted({s for kind, s, _, _, _ in all_syms if kind == "dc"})
-        ac_syms = sorted({s for kind, s, _, _, _ in all_syms if kind == "ac"})
-
-        def canon(syms):
-            L = max(2, (len(syms)).bit_length() + 1)  # 2^L > N, all-ones free
-            counts = [0] * 16
-            counts[L - 1] = len(syms)
-            codes = {s: (L, i) for i, s in enumerate(syms)}
-            return counts, codes
-
-        dc_counts, dc_codes = canon(dc_syms)
-        ac_counts, ac_codes = canon(ac_syms)
-        codes = {("dc", 0): dc_codes, ("ac", 0): ac_codes,
-                 ("dc", 1): dc_codes, ("ac", 1): ac_codes}
-        comp_tid = [0, 0, 0]
-        dht_segs = [
-            b"\x00" + bytes(dc_counts) + bytes(dc_syms),
-            b"\x10" + bytes(ac_counts) + bytes(ac_syms),
-        ]
-
-    out = bytearray()
-    bitbuf, nbits = 0, 0
-
-    def put(code, length):
-        nonlocal bitbuf, nbits
-        bitbuf = (bitbuf << length) | (code & ((1 << length) - 1))
-        nbits += length
-        while nbits >= 8:
-            nbits -= 8
-            byte = (bitbuf >> nbits) & 0xFF
-            out.append(byte)
-            if byte == 0xFF:
-                out.append(0x00)
-
-    for kind, s, v, size, ci in sym_stream():
-        if kind == "rst":
-            if nbits:
-                pad = 8 - nbits
-                put((1 << pad) - 1, pad)
-            out += bytes([0xFF, 0xD0 + s])
-            continue
-        L, c = codes[(kind, comp_tid[ci])][s]
-        put(c, L)
-        if size:
-            put(v if v >= 0 else v + (1 << size) - 1, size)
-    if nbits:
-        pad = 8 - nbits
-        put((1 << pad) - 1, pad)  # T.81: pad the last byte with 1-bits
-    data = bytes(out)
-
-    def seg(marker, body):
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-    sof_comps = b"".join(
-        bytes([i + 1, (hs << 4) | vs, 0])
-        for i, (_, hs, vs) in enumerate(padded)
-    )
-    sos_comps = b"".join(
-        bytes([i + 1, (comp_tid[i] << 4) | comp_tid[i]]) for i in range(3)
-    )
-    payload = (
-        b"\xff\xd8"
-        + seg(0xDB, b"\x00" + bytes(int(x) for x in q))
-        + seg(0xC0, b"\x08" + struct.pack(">HH", h, w) + bytes([3]) + sof_comps)
-        + b"".join(seg(0xC4, body) for body in dht_segs)
-        + (seg(0xDD, struct.pack(">H", restart_interval))
-           if restart_interval else b"")
-        + seg(0xDA, bytes([3]) + sos_comps + bytes([0, 63, 0]))
-        + data
-        + b"\xff\xd9"
-    )
-    return payload, exp
-
-
-def test_jpeg_decodes_for_real(spark):
-    """Baseline JPEG: the decoder reproduces the exact reconstruction
-    implied by the quantized coefficients (marker walk + canonical
-    Huffman + dequant + IDCT validated end-to-end on real bytes), for
-    both 4:4:4 and 4:2:0 chroma sampling, and drives image_stats
-    fake_decode=False."""
-    import numpy as np
-
-    rng = np.random.RandomState(5)
-    for subsample in (False, True):
-        px = rng.randint(0, 256, size=(13, 11, 3), dtype=np.uint8)
-        raw, exp = _jpeg_bytes(px, subsample=subsample)
-        got = multimodal.decode_jpeg(raw)
-        assert got.shape == exp.shape
-        assert (got == exp).all(), f"subsample={subsample}"
-        # lossy-but-sane: solid color survives within quant error
-    solid = np.full((16, 16, 3), (200, 64, 30), dtype=np.uint8)
-    raw, exp = _jpeg_bytes(solid)
-    got = multimodal.decode_jpeg(raw)
-    assert np.abs(got.astype(int) - solid.astype(int)).max() <= 6
-
-    df = spark.createDataFrame(
-        [(1, bytearray(raw), 16, 16, 3)],
-        "id long, data binary, width int, height int, channels int",
-    )
-    [r] = multimodal.image_stats(df, fake_decode=False).collect()
-    for ch in range(3):
-        assert abs(r["mean"][ch] - exp[:, :, ch].mean()) < 1e-3
-
-
-def test_jpeg_lossless_rejected():
-    """Non-DCT JPEG variants (SOF3 lossless) stay honest errors."""
-    import struct
-
-    body = b"\x08" + struct.pack(">HH", 8, 8) + bytes([3, 1, 0x11, 0, 2, 0x11, 0, 3, 0x11, 0])
-    raw = (b"\xff\xd8" + bytes([0xFF, 0xC3]) + struct.pack(">H", len(body) + 2)
-           + body + b"\xff\xd9")
-    import pytest as _pytest
-    with _pytest.raises(NotImplementedError):
-        multimodal.decode_jpeg(raw)
-
-
-def _jpeg_progressive_bytes(px: "np.ndarray", subsample: bool = False):
-    """Hand-assemble a PROGRESSIVE JPEG (SOF2) with a libjpeg-style scan
-    script: interleaved DC first (Al=1) + DC refinement, per-component
-    spectral-band AC first scans with successive approximation, and AC
-    refinement scans with EOB runs and buffered correction bits — the
-    encoder mirrors jcphuff.c's published algorithm so the decoder's
-    G.1.2 implementation is validated symbol-for-symbol. All scans
-    refine down to Al=0, so the expected image is the exact
-    reconstruction from the full-precision quantized coefficients
-    (AC zeroed in MCU-padding blocks no non-interleaved scan covers)."""
-    import struct
-
-    import numpy as np
-
-    h, w, _ = px.shape
-    q = np.full(64, 4, dtype=np.int32)
-    ZZ = multimodal._JPEG_ZIGZAG
-    T = multimodal._DCT_T
-
-    r_, g_, b_ = (px[..., i].astype(np.float64) for i in range(3))
-    Y = 0.299 * r_ + 0.587 * g_ + 0.114 * b_
-    Cb = -0.168736 * r_ - 0.331264 * g_ + 0.5 * b_ + 128.0
-    Cr = 0.5 * r_ - 0.418688 * g_ - 0.081312 * b_ + 128.0
-    hs_l = vs_l = 2 if subsample else 1
-
-    def sub(p):
-        if not subsample:
-            return p
-        hh, ww = -(-p.shape[0] // 2) * 2, -(-p.shape[1] // 2) * 2
-        pp = np.pad(p, ((0, hh - p.shape[0]), (0, ww - p.shape[1])), mode="edge")
-        return (pp[0::2, 0::2] + pp[1::2, 0::2]
-                + pp[0::2, 1::2] + pp[1::2, 1::2]) / 4.0
-
-    planes = [(Y, hs_l, vs_l), (sub(Cb), 1, 1), (sub(Cr), 1, 1)]
-    hmax, vmax = hs_l, vs_l
-    mcux, mcuy = -(-w // (8 * hmax)), -(-h // (8 * vmax))
-    padded = []
-    for p, hs, vs in planes:
-        H, W = mcuy * vs * 8, mcux * hs * 8
-        pp = np.pad(p, ((0, H - p.shape[0]), (0, W - p.shape[1])), mode="edge")
-        padded.append((pp, hs, vs))
-
-    # full-precision quantized zigzag coefficients per STORAGE block;
-    # AC zeroed outside the component's non-interleaved raster (those
-    # padding blocks receive only the interleaved DC scans)
-    coef, dims = [], []
-    for pp, hs, vs in padded:
-        nby_s, nbx_s = mcuy * vs, mcux * hs
-        grid = np.zeros((nby_s, nbx_s, 64), dtype=np.int64)
-        for by in range(nby_s):
-            for bx in range(nbx_s):
-                blk = pp[by * 8:(by + 1) * 8, bx * 8:(bx + 1) * 8] - 128.0
-                Fq = T @ blk @ T.T
-                grid[by, bx] = np.round(Fq.reshape(-1)[ZZ] / q).astype(np.int64)
-        cw, ch_ = -(-w * hs // hmax), -(-h * vs // vmax)
-        nbx, nby = -(-cw // 8), -(-ch_ // 8)
-        grid[:, nbx:, 1:] = 0
-        grid[nby:, :, 1:] = 0
-        coef.append(grid)
-        dims.append((nby, nbx))
-
-    # expected pixels via the decoder's own dequant/IDCT/upsample math
-    recon = []
-    for ci, (pp, hs, vs) in enumerate(padded):
-        nby_s, nbx_s, _ = coef[ci].shape
-        plane = np.zeros((nby_s * 8, nbx_s * 8))
-        for by in range(nby_s):
-            for bx in range(nbx_s):
-                deq = np.zeros(64)
-                deq[ZZ] = coef[ci][by, bx] * q
-                plane[by * 8:(by + 1) * 8, bx * 8:(bx + 1) * 8] = (
-                    T.T @ deq.reshape(8, 8) @ T + 128.0
-                )
-        recon.append(plane)
-    full = []
-    for ci, (_, hs, vs) in enumerate(padded):
-        p = np.repeat(np.repeat(recon[ci], vmax // vs, axis=0),
-                      hmax // hs, axis=1)
-        full.append(p[:h, :w])
-    yy, cb, cr = full[0], full[1] - 128.0, full[2] - 128.0
-    exp = np.clip(np.round(np.stack(
-        [yy + 1.402 * cr, yy - 0.344136 * cb - 0.714136 * cr,
-         yy + 1.772 * cb], axis=2)), 0, 255).astype(np.uint8)
-
-    def bitlen(v):
-        return int(v).bit_length()
-
-    def mcu_blocks():
-        for my in range(mcuy):
-            for mx in range(mcux):
-                for ci, (_, hs, vs) in enumerate(padded):
-                    for by in range(vs):
-                        for bx in range(hs):
-                            yield ci, my * vs + by, mx * hs + bx
-
-    # scan generators -> lists of ("sym", cls, s) / ("bits", v, n) events
-    def gen_dc_first(al):
-        ev, pred = [], [0, 0, 0]
-        for ci, by, bx in mcu_blocks():
-            v = int(coef[ci][by, bx, 0]) >> al  # arithmetic shift (G.1.2.1)
-            diff, pred[ci] = v - pred[ci], v
-            s = bitlen(abs(diff))
-            ev.append(("sym", 0, s))
-            if s:
-                ev.append(("bits", diff if diff >= 0 else diff + (1 << s) - 1, s))
-        return ev
-
-    def gen_dc_refine(al):
-        return [("bits", (int(coef[ci][by, bx, 0]) >> al) & 1, 1)
-                for ci, by, bx in mcu_blocks()]
-
-    def gen_ac_first(ci, ss, se, al):
-        ev = []
-        eobrun = 0
-
-        def flush():
-            nonlocal eobrun
-            if eobrun:
-                nb = eobrun.bit_length() - 1
-                ev.append(("sym", 1, nb << 4))
-                if nb:
-                    ev.append(("bits", eobrun - (1 << nb), nb))
-                eobrun = 0
-
-        nby, nbx = dims[ci]
-        for by in range(nby):
-            for bx in range(nbx):
-                zz, r = coef[ci][by, bx], 0
-                for k in range(ss, se + 1):
-                    v = int(zz[k])
-                    t = abs(v) >> al  # magnitude shift (G.1.2.2)
-                    if t == 0:
-                        r += 1
-                        continue
-                    t = t if v >= 0 else -t
-                    flush()
-                    while r > 15:
-                        ev.append(("sym", 1, 0xF0))
-                        r -= 16
-                    size = bitlen(abs(t))
-                    ev.append(("sym", 1, (r << 4) | size))
-                    ev.append(("bits", t if t >= 0 else t + (1 << size) - 1, size))
-                    r = 0
-                if r > 0:
-                    eobrun += 1
-        flush()
-        return ev
-
-    def gen_ac_refine(ci, ss, se, al):
-        # mirrors jcphuff.c encode_mcu_AC_refine: corrections for
-        # already-nonzero coefficients buffer until the next new-coef /
-        # ZRL symbol or the EOB-run flush
-        ev = []
-        eobrun, be = 0, []
-
-        def flush():
-            nonlocal eobrun, be
-            if eobrun:
-                nb = eobrun.bit_length() - 1
-                ev.append(("sym", 1, nb << 4))
-                if nb:
-                    ev.append(("bits", eobrun - (1 << nb), nb))
-                ev.extend(("bits", bit, 1) for bit in be)
-                be = []
-                eobrun = 0
-
-        nby, nbx = dims[ci]
-        for by in range(nby):
-            for bx in range(nbx):
-                zz = coef[ci][by, bx]
-                absv = [abs(int(zz[k])) >> al for k in range(ss, se + 1)]
-                eob = 0  # band-relative index AFTER the last new coef
-                for i, t in enumerate(absv):
-                    if t == 1:
-                        eob = i + 1
-                r, br = 0, []
-                for i, t in enumerate(absv):
-                    if t == 0:
-                        r += 1
-                        continue
-                    while r > 15 and i < eob:
-                        flush()
-                        ev.append(("sym", 1, 0xF0))
-                        r -= 16
-                        ev.extend(("bits", bit, 1) for bit in br)
-                        br = []
-                    if t > 1:  # previously nonzero: buffer correction bit
-                        br.append(t & 1)
-                        continue
-                    flush()
-                    ev.append(("sym", 1, (r << 4) | 1))
-                    ev.append(("bits", 1 if int(zz[ss + i]) > 0 else 0, 1))
-                    ev.extend(("bits", bit, 1) for bit in br)
-                    br, r = [], 0
-                if r > 0 or br:
-                    eobrun += 1
-                    be.extend(br)
-        flush()
-        return ev
-
-    scan_script = [
-        (None, 0, 0, 0, 1, gen_dc_first(1)),
-        (0, 1, 5, 0, 2, gen_ac_first(0, 1, 5, 2)),
-        (1, 1, 63, 0, 1, gen_ac_first(1, 1, 63, 1)),
-        (2, 1, 63, 0, 1, gen_ac_first(2, 1, 63, 1)),
-        (0, 6, 63, 0, 2, gen_ac_first(0, 6, 63, 2)),
-        (0, 1, 63, 2, 1, gen_ac_refine(0, 1, 63, 1)),
-        (None, 0, 0, 1, 0, gen_dc_refine(0)),
-        (0, 1, 63, 1, 0, gen_ac_refine(0, 1, 63, 0)),
-        (1, 1, 63, 1, 0, gen_ac_refine(1, 1, 63, 0)),
-        (2, 1, 63, 1, 0, gen_ac_refine(2, 1, 63, 0)),
-    ]
-
-    # one shared canonical single-length table per class over all scans
-    def canon(syms):
-        syms = sorted(syms)
-        L = max(2, (len(syms)).bit_length() + 1)
-        counts = [0] * 16
-        counts[L - 1] = len(syms)
-        return counts, {s: (L, i) for i, s in enumerate(syms)}
-
-    dc_counts, dc_codes = canon(
-        {s for _, _, _, _, _, ev in scan_script
-         for kind, cls, s in ((e[0], e[1], e[2]) for e in ev if e[0] == "sym")
-         if cls == 0} or {0}
-    )
-    ac_counts, ac_codes = canon(
-        {s for _, _, _, _, _, ev in scan_script
-         for kind, cls, s in ((e[0], e[1], e[2]) for e in ev if e[0] == "sym")
-         if cls == 1} or {0}
-    )
-    codes = {0: dc_codes, 1: ac_codes}
-
-    def encode_scan(ev):
-        out = bytearray()
-        bitbuf, nbits = 0, 0
-
-        def put(code, length):
-            nonlocal bitbuf, nbits
-            bitbuf = (bitbuf << length) | (code & ((1 << length) - 1))
-            nbits += length
-            while nbits >= 8:
-                nbits -= 8
-                byte = (bitbuf >> nbits) & 0xFF
-                out.append(byte)
-                if byte == 0xFF:
-                    out.append(0x00)
-
-        for e in ev:
-            if e[0] == "sym":
-                L, c = codes[e[1]][e[2]]
-                put(c, L)
-            else:
-                _, v, n = e
-                if n:
-                    put(v, n)
-        if nbits:
-            pad = 8 - nbits
-            put((1 << pad) - 1, pad)
-        return bytes(out)
-
-    def seg(marker, body):
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-    sof_comps = b"".join(
-        bytes([i + 1, (hs << 4) | vs, 0])
-        for i, (_, hs, vs) in enumerate(padded)
-    )
-    payload = (
-        b"\xff\xd8"
-        + seg(0xDB, b"\x00" + bytes(int(x) for x in q))
-        + seg(0xC2, b"\x08" + struct.pack(">HH", h, w) + bytes([3]) + sof_comps)
-        + seg(0xC4, b"\x00" + bytes(dc_counts)
-              + bytes(sorted(dc_codes)))
-        + seg(0xC4, b"\x10" + bytes(ac_counts)
-              + bytes(sorted(ac_codes)))
-    )
-    for comp_sel, ss, se, ah, al, ev in scan_script:
-        if comp_sel is None:
-            sos = bytes([3]) + b"".join(
-                bytes([i + 1, 0x00]) for i in range(3)
-            ) + bytes([ss, se, (ah << 4) | al])
-        else:
-            sos = bytes([1, comp_sel + 1, 0x00, ss, se, (ah << 4) | al])
-        payload += seg(0xDA, sos) + encode_scan(ev)
-    return payload + b"\xff\xd9", exp
-
-
-def test_jpeg_progressive_decodes_for_real(spark):
-    """Progressive JPEG (SOF2): interleaved DC first/refinement,
-    per-component spectral-band AC first scans, AC refinement with EOB
-    runs and buffered correction bits — decode reproduces the exact
-    reconstruction implied by the full-precision coefficients, for both
-    4:4:4 and 4:2:0 sampling (the latter exercises non-interleaved
-    scan geometry narrower than the MCU-padded storage)."""
-    import numpy as np
-
-    rng = np.random.RandomState(13)
-    for subsample, hh, ww in ((False, 13, 11), (True, 21, 19), (False, 8, 8)):
-        px = rng.randint(0, 256, size=(hh, ww, 3), dtype=np.uint8)
-        raw, exp = _jpeg_progressive_bytes(px, subsample=subsample)
-        got = multimodal.decode_jpeg(raw)
-        assert got.shape == exp.shape
-        assert (got == exp).all(), f"subsample={subsample} {hh}x{ww}"
-
-    # smooth gradient: many zero/EOB-run blocks, exercises long EOB runs
-    grad = np.linspace(0, 255, 24 * 16 * 3).reshape(24, 16, 3).astype(np.uint8)
-    raw, exp = _jpeg_progressive_bytes(grad)
-    got = multimodal.decode_jpeg(raw)
-    assert (got == exp).all()
-    # and through the generic mapInPandas entry point
-    df = spark.createDataFrame(
-        [(1, bytearray(raw), 16, 24, 3)],
-        "id long, data binary, width int, height int, channels int",
-    )
-    [r] = multimodal.image_stats(df, fake_decode=False).collect()
-    for ch in range(3):
-        assert abs(r["mean"][ch] - exp[:, :, ch].astype(np.float64).mean()) < 1e-3
-
-
-def test_jpeg_restart_markers():
-    """Baseline JPEG with a DRI segment (typical camera output): restart
-    boundaries byte-align the reader, consume the RSTn marker whether or
-    not the entropy stream happened to end byte-aligned, and reset DC
-    predictors — decode is exact, same as the DRI-free path."""
-    import numpy as np
-
-    rng = np.random.RandomState(7)
-    for subsample, ri in ((False, 2), (True, 1), (False, 5)):
-        px = rng.randint(0, 256, size=(21, 19, 3), dtype=np.uint8)
-        raw, exp = _jpeg_bytes(px, subsample=subsample, restart_interval=ri)
-        assert b"\xff\xdd" in raw  # DRI segment present
-        got = multimodal.decode_jpeg(raw)
-        assert got.shape == exp.shape
-        assert (got == exp).all(), f"subsample={subsample} ri={ri}"
-
-
-def test_avi_truncated_frame_chunk_rejected():
-    """A frame chunk whose declared size is smaller than stride*height
-    must raise instead of silently reading the next chunk's bytes as
-    pixel rows."""
-    import struct
-
-    import numpy as np
-    import pytest
-
-    frames = np.zeros((2, 4, 4, 3), dtype=np.uint8)
-    raw = bytearray(_avi_bytes(frames, fps=10.0))
-    # shrink the first '00db' chunk's declared size below stride*h
-    i = raw.index(b"00db")
-    size = struct.unpack("<I", raw[i + 4 : i + 8])[0]
-    raw[i + 4 : i + 8] = struct.pack("<I", size - 8)
-    with pytest.raises(ValueError, match="AVI frame chunk"):
-        multimodal.decode_avi(bytes(raw))

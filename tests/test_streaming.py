@@ -41,6 +41,59 @@ def test_stream_encode_route_matches_batch(spark, staged):
     assert got == want
 
 
+def test_stream_crash_before_commit_resumes_to_the_same_archive(
+    spark, staged, monkeypatch
+):
+    """A stream that fails after its first batch's sink writes and before
+    that batch's ledger commit resumes, on the same work root and
+    checkpoint, to the archive of an uncrashed run: row-identical sinks,
+    one ledger row and ts_index rows per batch, and a search through
+    IngestPipeline equal to a naive scan of the input."""
+    from clp_core_spark.functions.wildcard import wildcard_to_regex
+    from clp_core_spark.operators import route
+    from clp_core_spark.plans.pipeline import IngestPipeline
+
+    def run(work):
+        stream = sp.read_transcript_stream(
+            spark, staged["input"], max_files_per_trigger=1
+        )
+        sp.route_stream(spark, stream, work).awaitTermination(300)
+
+    clean, crashed = f"{staged['root']}/clean", f"{staged['root']}/crashed"
+    run(clean)
+    commit = IngestPipeline._append_ledger
+
+    def boom(self, row):
+        if row["partition_id"] == 0:
+            raise RuntimeError("simulated crash before commit")
+        return commit(self, row)
+
+    monkeypatch.setattr(IngestPipeline, "_append_ledger", boom)
+    with pytest.raises(Exception, match="simulated crash before commit"):
+        run(crashed)
+    monkeypatch.setattr(IngestPipeline, "_append_ledger", commit)
+    pipe = IngestPipeline(spark, crashed)
+    assert pipe.done_partitions() == set()
+    run(crashed)
+
+    n = staged["full"].count()
+    for kind in route.SINK_KINDS:
+        want = spark.read.parquet(f"{clean}/sinks/by_{kind}")
+        got = spark.read.parquet(f"{crashed}/sinks/by_{kind}")
+        assert want.count() == got.count() == n, kind
+        assert got.exceptAll(want).count() == 0, kind
+    assert sorted(r["partition_id"] for r in pipe.ledger().collect()) == [0, 1]
+    assert {r["partition_id"] for r in pipe.ts_index().collect()} == {0, 1}
+    hits = {(r["conv_id"], r["turn_idx"]) for r in pipe.search("heartbeat").collect()}
+    naive = {
+        (r["conv_id"], r["turn_idx"])
+        for r in staged["full"]
+        .filter(F.col("text").rlike(wildcard_to_regex("*heartbeat*")))
+        .collect()
+    }
+    assert hits == naive and hits
+
+
 def test_count_by_time_stream(spark, staged):
     stream = sp.read_transcript_stream(spark, staged["input"])
     agg = sp.count_by_time_stream(stream, bucket="1 hour", watermark="0 seconds")
