@@ -4,7 +4,7 @@
 Reference semantics: y-scope/clp (read-only checkout at /root/reference).
 This is NOT a port: the architecture is Spark-first (DataFrame/Catalyst),
 only the CLP-specific tokenize/encode/decode kernels live in vectorized
-Arrow-batched pandas UDFs. Citations in docstrings use the form
+Arrow-batched Python UDFs. Citations in docstrings use the form
 ``components/core/src/<path>:<lines>`` into the reference checkout.
 """
 

@@ -1,5 +1,5 @@
-"""User-schema tokenizer — CLP's schema-file / log-surgeon alternative
-parse path, vectorized.
+"""User schema file — CLP's schema-file / log-surgeon alternative to the
+heuristic variable rules.
 
 Reference semantics (docs/src/user-guide/reference-unstructured-schema-file.md,
 consumed by clp/clp/run.cpp:60-64 and
@@ -16,36 +16,17 @@ clp/clp/FileCompressor.cpp:196-228 `parse_and_encode_with_library`):
   token a dictionary variable. (``timestamp`` is handled upstream by the
   message splitter — sources/raw_text.py — matching the reference, where
   timestamp patterns delimit messages and are never dictionary vars.)
-- Output is identical in shape to the heuristic tokenizer
-  (functions/tokenizer.py), so dictionaries/encode/search/decode all work
-  unchanged on schema-parsed corpora.
 
-Vectorization: one C-level regex pass splits the NUL-joined batch into
-segments; each rule is ONE pyarrow RE2 match over the token column (no
-per-row Python).
+A :class:`SchemaSpec` only swaps the delimiter set and the variable rule
+of the one parse kernel (tokenizer.tokenize_arrow_arrays), as the schema
+file does in the reference, so dictionaries/encode/search/decode all work
+unchanged on schema-parsed corpora.
 """
 
 from __future__ import annotations
 
 import re
 from dataclasses import dataclass, field
-
-import numpy as np
-import pandas as pd
-
-from clp_core_spark.functions import encoder
-from clp_core_spark.functions.tokenizer import (
-    VT_DICT,
-    VT_FLOAT,
-    VT_INT,
-    _escape_series,
-    _group_join,
-    _group_lists,
-    _row_ordinals,
-    PLACEHOLDER_DICT,
-    PLACEHOLDER_FLOAT,
-    PLACEHOLDER_INT,
-)
 
 _ESCAPES = {"t": "\t", "r": "\r", "n": "\n", "\\": "\\", "v": "\v", "f": "\f"}
 
@@ -92,140 +73,3 @@ def parse_schema_file(text: str) -> SchemaSpec:
     if not delims:
         raise ValueError("schema file must specify at least one delimiter")
     return SchemaSpec(delimiters="".join(delims), rules=rules)
-
-
-def tokenize_frame_schema(
-    texts: pd.Series, spec: SchemaSpec, include_var_strs: bool = True
-) -> pd.DataFrame:
-    """Schema-driven twin of tokenizer.tokenize_frame — same columns."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    idx = texts.index
-    tl = [
-        x if isinstance(x, str) else ("" if x is None or x != x else str(x))
-        for x in texts.tolist()
-    ]
-    n = len(tl)
-    dclass = spec.delim_class()
-    # NUL matches NEITHER class, so segments never cross row boundaries
-    # (same construction as tokenizer._SEGMENT_BATCH_RE).
-    batch_re = re.compile(rf"([{dclass}]+)|([^{dclass}\x00]+)")
-
-    def _empty() -> pd.DataFrame:
-        cols = {"logtype": pd.Series([""] * n, index=idx, dtype=object)}
-        if include_var_strs:
-            cols["var_strs"] = [[] for _ in range(n)]
-        cols.update(
-            var_types=[[] for _ in range(n)],
-            encoded=[[] for _ in range(n)],
-            dict_strs=[[] for _ in range(n)],
-        )
-        return pd.DataFrame(cols, index=idx)
-
-    if any("\x00" in t for t in tl):
-        # NUL would collide with the batch sentinel: per-row scan keeps
-        # the bytes intact so decode(encode(x)) stays byte-equal (same
-        # fallback as tokenizer.tokenize_frame; rewriting NUL to ' '
-        # would corrupt the roundtrip).
-        row_re = re.compile(rf"([{dclass}]+)|([^{dclass}]+)")
-        seg_rows: list[int] = []
-        d_parts: list[str] = []
-        t_parts: list[str] = []
-        for r, t in enumerate(tl):
-            for d, tk in row_re.findall(t):
-                seg_rows.append(r)
-                d_parts.append(d)
-                t_parts.append(tk)
-        if not d_parts:
-            return _empty()
-        d_clean, t_list = tuple(d_parts), tuple(t_parts)
-        row_pos = np.asarray(seg_rows, dtype=np.int64)
-    else:
-        joined = "\x00".join(tl)
-        matches = batch_re.findall(joined)
-        if not matches:
-            return _empty()
-        d_clean, t_list = zip(*matches)
-
-        # Segments tile the sentinel-free concatenation: cumulative segment
-        # lengths against cumulative text lengths recover each segment's row.
-        text_lens = np.fromiter((len(t) for t in tl), dtype=np.int64, count=n)
-        seg_lens = np.fromiter(
-            (len(a) + len(b) for a, b in matches), dtype=np.int64, count=len(matches)
-        )
-        seg_start = np.cumsum(seg_lens) - seg_lens
-        row_pos = np.searchsorted(np.cumsum(text_lens), seg_start, side="right")
-
-    t_arr = pa.array(t_list, type=pa.string())
-    is_tok = np.asarray(pc.not_equal(t_arr, "")).astype(bool)
-    tok_only = pc.filter(t_arr, pa.array(is_tok))
-
-    # First-match-wins rule classification: one RE2 pass per rule.
-    n_tok = len(tok_only)
-    rule_ix = np.full(n_tok, -1, dtype=np.int64)
-    for i, (_name, pattern) in enumerate(spec.rules):
-        m = np.asarray(
-            pc.match_substring_regex(tok_only, f"^(?:{pattern})$")
-        ).astype(bool)
-        rule_ix[(rule_ix == -1) & m] = i
-
-    is_var_tok = rule_ix >= 0
-    var_arr = pc.filter(tok_only, pa.array(is_var_tok))
-    tok_rows = row_pos[is_tok]
-    var_rows = tok_rows[is_var_tok]
-    var_rules = rule_ix[is_var_tok]
-
-    rule_names = [name for name, _ in spec.rules]
-    var_types = np.full(len(var_rows), VT_DICT, dtype=np.int8)
-    encoded_vals = np.zeros(len(var_rows), dtype=np.int64)
-    for i, name in enumerate(rule_names):
-        sel = var_rules == i
-        if not sel.any():
-            continue
-        vals = pd.Series(
-            pc.filter(var_arr, pa.array(sel)).to_numpy(zero_copy_only=False)
-        )
-        if name == "int":
-            ok, enc = encoder.classify_encode_int(vals)
-            t = np.where(ok.to_numpy(), VT_INT, VT_DICT).astype(np.int8)
-            var_types[sel] = t
-            e = np.zeros(len(vals), dtype=np.int64)
-            e[ok.to_numpy()] = enc
-            encoded_vals[sel] = e
-        elif name == "float":
-            ok, enc = encoder.classify_encode_float(vals)
-            t = np.where(ok.to_numpy(), VT_FLOAT, VT_DICT).astype(np.int8)
-            var_types[sel] = t
-            e = np.zeros(len(vals), dtype=np.int64)
-            e[ok.to_numpy()] = enc
-            encoded_vals[sel] = e
-    is_dict_v = var_types == VT_DICT
-    if is_dict_v.any():
-        encoded_vals[is_dict_v] = _row_ordinals(var_rows[is_dict_v])
-
-    # Logtype: escape constants, then placeholder the var slots.
-    is_var = np.zeros(len(is_tok), dtype=bool)
-    is_var[is_tok] = is_var_tok
-    merged = pd.Series(
-        [a + b for a, b in zip(d_clean, t_list)], dtype=object
-    )
-    seg_out = _escape_series(merged).to_numpy()
-    ph_map = np.array(
-        [PLACEHOLDER_INT, PLACEHOLDER_FLOAT, PLACEHOLDER_DICT], dtype=object
-    )
-    d_esc = _escape_series(pd.Series(d_clean, dtype=object)).to_numpy()
-    seg_out[is_var] = d_esc[is_var] + ph_map[var_types.astype(np.int64)]
-
-    logtype = _group_join(row_pos, seg_out, n)
-    var_np = var_arr.to_numpy(zero_copy_only=False)
-
-    cols = {"logtype": pd.Series(logtype, index=idx)}
-    if include_var_strs:
-        cols["var_strs"] = _group_lists(var_rows, var_np, n)
-    cols.update(
-        var_types=_group_lists(var_rows, var_types, n),
-        encoded=_group_lists(var_rows, encoded_vals, n),
-        dict_strs=_group_lists(var_rows[is_dict_v], var_np[is_dict_v], n),
-    )
-    return pd.DataFrame(cols, index=idx)

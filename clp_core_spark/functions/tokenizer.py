@@ -1,5 +1,7 @@
-"""Vectorized CLP tokenizer / logtype builder (pandas + numpy, no per-row
+"""Vectorized CLP tokenizer / logtype builder (pyarrow + numpy, no per-row
 Python in the parse path — one C-level regex pass + columnar classification).
+One kernel, :func:`tokenize_arrow_arrays`, serves both CLP parse modes: the
+heuristic below and a user schema file (schema_tokenizer.SchemaSpec).
 
 Semantics re-implemented from the reference (y-scope/clp):
 
@@ -38,15 +40,12 @@ VT_INT = 0
 VT_FLOAT = 1
 VT_DICT = 2
 
-_PLACEHOLDER_FOR_TYPE = {VT_INT: PLACEHOLDER_INT, VT_FLOAT: PLACEHOLDER_FLOAT,
-                         VT_DICT: PLACEHOLDER_DICT}
-
 # Token charset per is_delim (parsing.cpp:20-24): '+', '-'..'.', digits,
 # upper, '\', '_', lower.  NOTE '-'..'.' is the ASCII range {'-', '.'}
 # ('/' is NOT included: '-' is 0x2D, '.' is 0x2E, '/' is 0x2F).
 _TOKEN_CLASS = r"+\-.0-9A-Za-z\\_"
-# One alternation: a delimiter run OR a token run. extractall() walks the
-# string once in C and returns every segment in order.
+# One alternation: a delimiter run OR a token run, delimiter group first.
+# findall() walks the string once in C and returns every segment in order.
 _SEGMENT_RE = re.compile(rf"(?P<d>[^{_TOKEN_CLASS}]+)|(?P<t>[{_TOKEN_CLASS}]+)")
 # Batch variant: the whole Arrow batch is joined with NUL sentinels and
 # scanned with ONE findall call; NUL is excluded from both classes so
@@ -54,38 +53,6 @@ _SEGMENT_RE = re.compile(rf"(?P<d>[^{_TOKEN_CLASS}]+)|(?P<t>[{_TOKEN_CLASS}]+)")
 _SEGMENT_BATCH_RE = re.compile(
     rf"([^{_TOKEN_CLASS}\x00]+)|([{_TOKEN_CLASS}]+)"
 )
-
-# Chars needing escape inside logtype constants (parsing.inc:20-31).
-_ESCAPE_RE = re.compile(r"([\x11\x12\x13\\])")
-
-# Variable decision regexes (parsing.cpp:64-94, parsing.hpp:36-49).
-_HAS_DIGIT_RE = re.compile(r"[0-9]")
-_HAS_ALPHA_RE = re.compile(r"[A-Za-z]")
-_HEX_RE = re.compile(r"[0-9a-fA-F]{2,}")
-
-
-def _escape_series(s: pd.Series) -> pd.Series:
-    """Escape placeholder bytes / backslash in logtype constants."""
-    return s.str.replace(_ESCAPE_RE, r"\\\1", regex=True)
-
-
-def _group_lists(row_pos: np.ndarray, values, n: int) -> np.ndarray:
-    """Split ``values`` (aligned with sorted ``row_pos``) into per-row
-    Python lists; rows with no entries get []. One tolist() then plain
-    list slicing — no np.split (its per-chunk overhead dominated) and no
-    pandas groupby."""
-    out = np.empty(n, dtype=object)
-    if len(values):
-        present, starts = np.unique(row_pos, return_index=True)
-        bounds = np.append(starts[1:], len(values))
-        vl = values.tolist() if hasattr(values, "tolist") else list(values)
-        for r, s, e in zip(present.tolist(), starts.tolist(), bounds.tolist()):
-            out[r] = vl[s:e]
-        for r in np.flatnonzero(np.equal(out, None)).tolist():
-            out[r] = []
-    else:
-        out[:] = [[] for _ in range(n)]
-    return out
 
 
 def _group_join(row_pos: np.ndarray, segs, n: int) -> np.ndarray:
@@ -109,12 +76,65 @@ def _row_ordinals(row_pos: np.ndarray) -> np.ndarray:
     return np.arange(len(row_pos), dtype=np.int64) - np.repeat(starts, counts)
 
 
-def _tokenize_flat(tl: list[str]):
+def _segment_res(spec) -> tuple[re.Pattern, re.Pattern]:
+    """The (per-row, batch) segment regexes: the heuristic delimiter set
+    (parsing.cpp:20-24) or, with a schema, the schema's delimiters plus
+    space, where every other char is token text."""
+    if spec is None:
+        return _SEGMENT_RE, _SEGMENT_BATCH_RE
+    dclass = spec.delim_class()
+    return (
+        re.compile(rf"([{dclass}]+)|([^{dclass}]+)"),
+        re.compile(rf"([{dclass}]+)|([^{dclass}\x00]+)"),
+    )
+
+
+def _schema_vars(tok_only, spec):
+    """Schema variable rule: a token is a variable iff some rule's regex
+    matches the WHOLE token, and the rule listed first wins (one RE2 pass
+    per rule). Returns (is_var per token, may_int, may_float per variable):
+    only tokens of a rule named ``int`` / ``float`` may take that inline
+    encoding; every other rule makes a dictionary variable."""
+    import pyarrow.compute as pc
+
+    rule_ix = np.full(len(tok_only), -1, dtype=np.int64)
+    for i, (_name, pattern) in enumerate(spec.rules):
+        m = np.asarray(
+            pc.match_substring_regex(tok_only, f"^(?:{pattern})$")
+        ).astype(bool)
+        rule_ix[(rule_ix == -1) & m] = i
+    is_var_tok = rule_ix >= 0
+    names = np.array([name for name, _ in spec.rules], dtype=object)
+    var_names = names[rule_ix[is_var_tok]]
+    return is_var_tok, var_names == "int", var_names == "float"
+
+
+def _classify_where(classify, var_arr, may) -> tuple[np.ndarray, np.ndarray]:
+    """``classify`` (encoder.classify_encode_*_arrow) restricted to the
+    variables ``may`` allows (None: all of them). Values stay aligned
+    with the returned mask."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if may is None:
+        return classify(var_arr)
+    ok = np.zeros(len(may), dtype=bool)
+    sub_ok, vals = classify(pc.filter(var_arr, pa.array(may)))
+    ok[np.flatnonzero(may)] = sub_ok
+    return ok, vals
+
+
+def _tokenize_flat(tl: list[str], spec=None):
     """Core of the tokenizer over a batch of plain strings. Returns None
     when the batch produced no segments, else the FLAT result arrays
-    ``(n, logtype, var_rows, var_types, encoded_vals, var_np, is_dict_v)``
-    — per-row regrouping is left to the caller (python lists for the
-    pandas UDF path, ListArray offsets for the mapInArrow path).
+    ``(logtype, var_rows, var_types, encoded_vals, var_np, is_dict_v)``;
+    per-row regrouping into ListArray offsets is left to the caller.
+
+    ``spec`` (a schema_tokenizer.SchemaSpec) swaps what CLP's schema file
+    swaps (clp/clp/FileCompressor.cpp:196-228): the delimiter set and the
+    variable rule (:func:`_schema_vars` instead of the digit / ``=`` /
+    hex heuristic). Everything else is shared: int/float encoding,
+    dictionary ordinals, escaping, logtype assembly and the NUL fallback.
 
     Hot path: ONE C regex pass over the NUL-joined batch (findall), then
     pyarrow compute (RE2, C++) for every per-segment classification and
@@ -124,6 +144,7 @@ def _tokenize_flat(tl: list[str]):
     import pyarrow.compute as pc
 
     n = len(tl)
+    row_re, batch_re = _segment_res(spec)
     if any("\x00" in t for t in tl):
         # NUL would collide with the batch sentinel: fall back to a
         # per-row scan (rare — NUL bytes in log text).
@@ -131,7 +152,7 @@ def _tokenize_flat(tl: list[str]):
         d_list: list[str] = []
         t_list: list[str] = []
         for r, t in enumerate(tl):
-            for d, tk in _SEGMENT_RE.findall(t):
+            for d, tk in row_re.findall(t):
                 seg_rows.append(r)
                 d_list.append(d)
                 t_list.append(tk)
@@ -139,7 +160,7 @@ def _tokenize_flat(tl: list[str]):
             return None
         row_pos = np.asarray(seg_rows, dtype=np.int64)
     else:
-        matches = _SEGMENT_BATCH_RE.findall("\x00".join(tl))
+        matches = batch_re.findall("\x00".join(tl))
         if not matches:
             return None
         d_list, t_list = zip(*matches)
@@ -155,30 +176,40 @@ def _tokenize_flat(tl: list[str]):
     d_arr = pa.array(d_list, type=pa.string())
     t_arr = pa.array(t_list, type=pa.string())
     is_tok = np.asarray(pc.not_equal(t_arr, "")).astype(bool)
-
-    # Char directly before a token is the last char of the preceding delim
-    # segment (segments alternate and tile each row; parsing.cpp:86 checks
-    # str[begin_pos-1]). A row's first segment has no predecessor.
-    d_ends_eq = np.asarray(pc.ends_with(d_arr, pattern="=")).astype(bool)
-    prev_ends_eq = np.concatenate(([False], d_ends_eq[:-1]))
-    same_row_as_prev = np.concatenate(([False], row_pos[1:] == row_pos[:-1]))
-    preceded_by_eq_all = prev_ends_eq & same_row_as_prev
-
     tok_only = pc.filter(t_arr, pa.array(is_tok))
-    has_digit = np.asarray(pc.match_substring_regex(tok_only, "[0-9]")).astype(bool)
-    has_alpha = np.asarray(pc.match_substring_regex(tok_only, "[A-Za-z]")).astype(bool)
-    is_hex = np.asarray(
-        pc.match_substring_regex(tok_only, "^[0-9a-fA-F]{2,}$")
-    ).astype(bool)
-    is_var_tok = has_digit | (preceded_by_eq_all[is_tok] & has_alpha) | is_hex
+
+    if spec is None:
+        # Char directly before a token is the last char of the preceding
+        # delim segment (segments alternate and tile each row;
+        # parsing.cpp:86 checks str[begin_pos-1]). A row's first segment
+        # has no predecessor.
+        d_ends_eq = np.asarray(pc.ends_with(d_arr, pattern="=")).astype(bool)
+        prev_ends_eq = np.concatenate(([False], d_ends_eq[:-1]))
+        same_row_as_prev = np.concatenate(([False], row_pos[1:] == row_pos[:-1]))
+        preceded_by_eq_all = prev_ends_eq & same_row_as_prev
+
+        # Variable decision (parsing.cpp:64-94, parsing.hpp:36-49).
+        has_digit = np.asarray(pc.match_substring_regex(tok_only, "[0-9]")).astype(bool)
+        has_alpha = np.asarray(pc.match_substring_regex(tok_only, "[A-Za-z]")).astype(bool)
+        is_hex = np.asarray(
+            pc.match_substring_regex(tok_only, "^[0-9a-fA-F]{2,}$")
+        ).astype(bool)
+        is_var_tok = has_digit | (preceded_by_eq_all[is_tok] & has_alpha) | is_hex
+        may_int = may_float = None
+    else:
+        is_var_tok, may_int, may_float = _schema_vars(tok_only, spec)
 
     is_var = np.zeros(len(is_tok), dtype=bool)
     is_var[is_tok] = is_var_tok
 
     var_arr = pc.filter(tok_only, pa.array(is_var_tok))
     var_rows = row_pos[is_var]
-    is_int_v, int_vals = encoder.classify_encode_int_arrow(var_arr)
-    is_float_v, float_vals = encoder.classify_encode_float_arrow(var_arr)
+    is_int_v, int_vals = _classify_where(
+        encoder.classify_encode_int_arrow, var_arr, may_int
+    )
+    is_float_v, float_vals = _classify_where(
+        encoder.classify_encode_float_arrow, var_arr, may_float
+    )
     is_float_v &= ~is_int_v  # int is checked first (EncodedVariableInterpreter.cpp:439-446)
 
     var_types = np.full(len(var_rows), VT_DICT, dtype=np.int8)
@@ -208,110 +239,69 @@ def _tokenize_flat(tl: list[str]):
 
     logtype = _group_join(row_pos, seg_out, n)
     var_np = var_arr.to_numpy(zero_copy_only=False)
-    return n, logtype, var_rows, var_types, encoded_vals, var_np, is_dict_v
+    return logtype, var_rows, var_types, encoded_vals, var_np, is_dict_v
 
 
-def tokenize_frame(texts: pd.Series, include_var_strs: bool = True) -> pd.DataFrame:
-    """Tokenize + encode a batch of messages.
+PARSED_FIELDS = ("logtype", "var_types", "encoded", "dict_strs")
 
-    Returns a DataFrame aligned to ``texts.index`` with columns:
+
+def tokenize_arrow_arrays(texts, spec=None):
+    """Tokenize + encode a pyarrow string array: the one parse kernel.
+    ``spec`` (a schema_tokenizer.SchemaSpec) selects the schema-file
+    delimiters and variable rules; None is CLP's heuristic.
+
+    Returns a ``pa.StructArray`` with fields :data:`PARSED_FIELDS`:
 
     - ``logtype``: template string, placeholders embedded, constants escaped
-    - ``var_strs``: list[str], every variable in order of appearance
-      (omitted when ``include_var_strs=False`` — the encode pipeline never
-      reads it, and skipping it cuts the Arrow return payload)
-    - ``var_types``: list[int8], VT_INT / VT_FLOAT / VT_DICT per variable
-    - ``encoded``: list[int64] — CLP encoded variable per position; int
+    - ``var_types``: list<int32>, VT_INT / VT_FLOAT / VT_DICT per variable
+    - ``encoded``: list<int64> — CLP encoded variable per position; int
       vars hold the value, float vars hold the 64-bit CLP float packing,
       dict vars hold the 0-based ordinal of that dict var *within the row*
       (replaced by the global dictionary ID after the dictionary join).
-    - ``dict_strs``: list[str], only the dictionary-variable strings in order
-    """
-    idx = texts.index
-    tl = [
-        x if isinstance(x, str) else ("" if x is None or x != x else str(x))
-        for x in texts.tolist()
-    ]
-    n = len(tl)
-    flat = _tokenize_flat(tl)
-    if flat is None:
-        cols = {"logtype": pd.Series([""] * n, index=idx, dtype=object)}
-        if include_var_strs:
-            cols["var_strs"] = [[] for _ in range(n)]
-        cols.update(
-            var_types=[[] for _ in range(n)],
-            encoded=[[] for _ in range(n)],
-            dict_strs=[[] for _ in range(n)],
-        )
-        return pd.DataFrame(cols, index=idx)
-    _, logtype, var_rows, var_types, encoded_vals, var_np, is_dict_v = flat
+    - ``dict_strs``: list<string>, the dictionary-variable strings in order
 
-    cols = {"logtype": pd.Series(logtype, index=idx)}
-    if include_var_strs:
-        cols["var_strs"] = _group_lists(var_rows, var_np, n)
-    cols.update(
-        var_types=_group_lists(var_rows, var_types, n),
-        encoded=_group_lists(var_rows, encoded_vals, n),
-        dict_strs=_group_lists(var_rows[is_dict_v], var_np[is_dict_v], n),
-    )
-    return pd.DataFrame(cols, index=idx)
-
-
-def tokenize_arrow_arrays(texts) -> list:
-    """Tokenize a pyarrow string array into the parsed columns as ARROW
-    arrays ``[logtype, var_types, encoded, dict_strs]`` (slim form) —
-    the mapInArrow fast path. Per-row list columns are built with
-    ``ListArray.from_arrays`` over the kernel's flat numpy outputs:
-    offsets come from one bincount+cumsum per column, so no per-element
-    Python lists are materialized and no pandas->Arrow reconversion
-    walks them afterwards (that conversion cost more than the kernel
-    itself at bench scale — ~205 CPU-s for an ~90 CPU-s kernel over
-    3.8M rows)."""
+    Non-string cells stringify; None and NaN become "". Per-row list
+    columns are built with ``ListArray.from_arrays`` over the kernel's
+    flat numpy outputs: offsets come from one bincount+cumsum per column,
+    so no per-element Python lists are materialized and no pandas->Arrow
+    reconversion walks them afterwards (that conversion cost more than
+    the kernel itself at bench scale — ~205 CPU-s for an ~90 CPU-s
+    kernel over 3.8M rows)."""
     import pyarrow as pa
 
-    # same coercion as tokenize_frame: non-string cells stringify, None
-    # and NaN become ""
     tl = [
         x if isinstance(x, str) else ("" if x is None or x != x else str(x))
         for x in texts.to_pylist()
     ]
     n = len(tl)
-    flat = _tokenize_flat(tl)
-    if flat is None:
-        empty_offs = np.zeros(n + 1, dtype=np.int32)
-        return [
-            pa.array([""] * n, type=pa.string()),
-            pa.ListArray.from_arrays(
-                empty_offs, pa.array([], type=pa.int32())
-            ),
-            pa.ListArray.from_arrays(
-                empty_offs, pa.array([], type=pa.int64())
-            ),
-            pa.ListArray.from_arrays(
-                empty_offs, pa.array([], type=pa.string())
-            ),
-        ]
-    _, logtype, var_rows, var_types, encoded_vals, var_np, is_dict_v = flat
+    flat = _tokenize_flat(tl, spec)
+    if flat is None:  # no segments: every row is empty, with no variables
+        flat = (
+            np.full(n, "", dtype=object), np.zeros(0, dtype=np.int64),
+            np.zeros(0, dtype=np.int8), np.zeros(0, dtype=np.int64),
+            np.zeros(0, dtype=object), np.zeros(0, dtype=bool),
+        )
+    logtype, var_rows, var_types, encoded_vals, var_np, is_dict_v = flat
 
-    def offs(rows: np.ndarray) -> np.ndarray:
+    def offs(rows: np.ndarray) -> pa.Array:
         counts = np.bincount(rows, minlength=n)
         out = np.zeros(n + 1, dtype=np.int64)
         np.cumsum(counts, out=out[1:])
-        return out.astype(np.int32)
+        return pa.array(out.astype(np.int32))
 
-    var_offs = pa.array(offs(var_rows))
-    dict_offs = pa.array(offs(var_rows[is_dict_v]))
-    return [
-        pa.array(logtype, type=pa.string()),
-        pa.ListArray.from_arrays(
-            var_offs, pa.array(var_types.astype(np.int32))
-        ),
-        pa.ListArray.from_arrays(var_offs, pa.array(encoded_vals)),
-        pa.ListArray.from_arrays(
-            dict_offs, pa.array(var_np[is_dict_v], type=pa.string())
-        ),
-    ]
-
+    var_offs = offs(var_rows)
+    return pa.StructArray.from_arrays(
+        [
+            pa.array(logtype, type=pa.string()),
+            pa.ListArray.from_arrays(var_offs, pa.array(var_types.astype(np.int32))),
+            pa.ListArray.from_arrays(var_offs, pa.array(encoded_vals)),
+            pa.ListArray.from_arrays(
+                offs(var_rows[is_dict_v]),
+                pa.array(var_np[is_dict_v], type=pa.string()),
+            ),
+        ],
+        names=PARSED_FIELDS,
+    )
 
 # --- decoding ---------------------------------------------------------------
 
@@ -446,7 +436,7 @@ def decode_frame(
     encoded: pd.Series,
     dict_strs: pd.Series,
 ) -> pd.Series:
-    """Inverse of :func:`tokenize_frame` — rebuild the original message.
+    """Inverse of :func:`tokenize_arrow_arrays` — rebuild the original message.
 
     Mirrors clp/EncodedVariableInterpreter.cpp:298-367
     (decode_variables_into_message): walk the logtype, substitute each

@@ -63,10 +63,11 @@ def encode_clpstring_columns(
     Returns (encoded_df, {col: (logtype_dict, var_dict)}).
 
     SINGLE-PASS: all k columns are tokenized in ONE scan of the corpus —
-    the per-column parse UDFs sit in one projection, so Spark fuses them
-    into a single ArrowEvalPython stage (each Arrow batch crosses the
-    Python boundary once and feeds every column writer), mirroring clp_s
-    parsing each record once into all column writers
+    the per-column parse expressions (encode_pipeline.parse_column) sit
+    in one projection, so Spark fuses them into a single ArrowEvalPython
+    stage (each Arrow batch crosses the Python boundary once and feeds
+    every column writer), mirroring clp_s parsing each record once into
+    all column writers
     (clp_s/JsonParser.cpp:125-232, clp_s/ColumnWriter.hpp:104-163).
     Dictionary IDs are content hashes computed inline (zero resolve
     shuffle); logtype IDs attach via k broadcast joins on tiny dicts.
@@ -102,7 +103,7 @@ def encode_clpstring_columns(
         parsed = out.select(
             "*",
             *[
-                encode_pipeline._parse_slim_udf(F.col(c)).alias(f"_p_{c}")
+                encode_pipeline.parse_column(F.col(c)).alias(f"_p_{c}")
                 for c in missing
             ],
         ).persist()

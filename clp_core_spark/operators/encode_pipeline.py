@@ -4,9 +4,9 @@ Spark-first layout of CLP's ``Archive::write_msg`` path
 (clp/streaming_archive/writer/Archive.cpp:299-316 +
 clp/EncodedVariableInterpreter.cpp:206-225):
 
-1. An Arrow batch kernel (tokenizer.tokenize_arrow_arrays, run through
-   ``mapInArrow``) extracts the logtype template + typed variables per
-   turn.
+1. One Arrow scalar UDF over one batch kernel (:func:`parse_column` over
+   tokenizer.tokenize_arrow_arrays) extracts the logtype template + typed
+   variables per turn, under the heuristic or a user schema.
 2. The logtype dictionary gets dense IDs on the driver from one bounded
    collect of its distinct templates (CLP's premise: templates << data;
    dictionaries.assign_dense_ids falls back to a distributed assignment
@@ -27,9 +27,10 @@ by the placeholder sequence in the logtype (equivalently ``var_types``).
 from __future__ import annotations
 
 import pandas as pd
+import pyarrow as pa
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
-from pyspark.sql.pandas.functions import pandas_udf
+from pyspark.sql import Column, DataFrame
+from pyspark.sql.pandas.functions import arrow_udf, pandas_udf
 from pyspark.sql.types import (
     ArrayType,
     IntegerType,
@@ -42,20 +43,14 @@ from pyspark.sql.types import (
 from clp_core_spark.functions.tokenizer import VT_DICT
 from clp_core_spark.operators import dictionaries
 
-PARSED_SCHEMA = StructType(
+# The parse struct: tokenizer.PARSED_FIELDS as Spark types.
+PARSED_SCHEMA_SLIM = StructType(
     [
         StructField("logtype", StringType()),
-        StructField("var_strs", ArrayType(StringType())),
         StructField("var_types", ArrayType(IntegerType())),
         StructField("encoded", ArrayType(LongType())),
         StructField("dict_strs", ArrayType(StringType())),
     ]
-)
-
-# Slim variant: no var_strs (the encode path never reads it; skipping it
-# cuts the per-row Arrow payload roughly in half for var-heavy text).
-PARSED_SCHEMA_SLIM = StructType(
-    [f for f in PARSED_SCHEMA.fields if f.name != "var_strs"]
 )
 
 # The JVM lookup join broadcasts the dictionary side up to this many
@@ -64,79 +59,39 @@ PARSED_SCHEMA_SLIM = StructType(
 BROADCAST_JOIN_DICT_MAX = 5_000_000
 
 
-@pandas_udf(PARSED_SCHEMA)
-def _parse_udf(texts: pd.Series) -> pd.DataFrame:
-    from clp_core_spark.functions.tokenizer import tokenize_frame
+def parse_column(text: Column, schema_spec=None) -> Column:
+    """The one parse function: an Arrow scalar UDF over the one kernel,
+    tokenizer.tokenize_arrow_arrays, giving a :data:`PARSED_SCHEMA_SLIM`
+    struct per text. ``schema_spec`` (a functions.schema_tokenizer.
+    SchemaSpec) swaps in the user schema's delimiters and variable rules
+    (CLP's schema-file path, clp/clp/FileCompressor.cpp:196-228).
 
-    # tokenize_frame emits plain-Python lists (ndarray.tolist), which Arrow
-    # ingests directly — no per-row conversion needed here.
-    return tokenize_frame(texts)
+    It is a column expression, so k of them in one projection run as one
+    ArrowEvalPython node over one scan (the clp_s shape, one parse feeding
+    every column writer)."""
 
+    def _parse(texts: pa.Array) -> pa.Array:
+        from clp_core_spark.functions.tokenizer import tokenize_arrow_arrays
 
-@pandas_udf(PARSED_SCHEMA_SLIM)
-def _parse_slim_udf(texts: pd.Series) -> pd.DataFrame:
-    from clp_core_spark.functions.tokenizer import tokenize_frame
+        return tokenize_arrow_arrays(texts, schema_spec)
 
-    return tokenize_frame(texts, include_var_strs=False)
+    return arrow_udf(_parse, PARSED_SCHEMA_SLIM)(text)
 
 
 def parse(
     df: DataFrame,
     text_col: str = "text",
-    slim: bool = False,
+    slim: bool = True,
     schema_spec=None,
 ) -> DataFrame:
-    """Append parsed columns (logtype, [var_strs,] var_types, encoded,
-    dict_strs) to ``df``. ``slim=True`` omits var_strs (encode hot path).
+    """Append the parsed columns (logtype, var_types, encoded, dict_strs)
+    to ``df``, from :func:`parse_column` over ``text_col``.
 
-    ``schema_spec`` (a functions.schema_tokenizer.SchemaSpec) switches to
-    the user-schema tokenizer — CLP's schema-file / log-surgeon alternative
-    parse path (clp/clp/FileCompressor.cpp:196-228), same output shape."""
-    if schema_spec is not None:
-        out_schema = PARSED_SCHEMA_SLIM if slim else PARSED_SCHEMA
-
-        @pandas_udf(out_schema)
-        def _schema_udf(texts: pd.Series) -> pd.DataFrame:
-            from clp_core_spark.functions.schema_tokenizer import (
-                tokenize_frame_schema,
-            )
-
-            return tokenize_frame_schema(
-                texts, schema_spec, include_var_strs=not slim
-            )
-
-        udf = _schema_udf
-    elif slim:
-        # mapInArrow fast path: the parsed list columns are emitted as
-        # Arrow ListArrays built directly from the kernel's flat numpy
-        # outputs (offsets via bincount) — no per-row Python lists, no
-        # pandas->Arrow reconversion walking them. That conversion cost
-        # more than the tokenizer kernel itself at bench scale (guide
-        # §4.2: keep batch work in native code end to end).
-        import pyarrow as pa
-
-        full_schema = StructType(
-            df.schema.fields + list(PARSED_SCHEMA_SLIM.fields)
-        )
-        names = [f.name for f in full_schema.fields]
-        ti = df.columns.index(text_col)
-
-        def _parse_batches(batches):
-            from clp_core_spark.functions.tokenizer import (
-                tokenize_arrow_arrays,
-            )
-
-            for batch in batches:
-                extra = tokenize_arrow_arrays(batch.column(ti))
-                yield pa.RecordBatch.from_arrays(
-                    list(batch.columns) + extra, names=names
-                )
-
-        return df.mapInArrow(_parse_batches, full_schema)
-    else:
-        udf = _parse_udf
-    parsed = df.withColumn("_parsed", udf(F.col(text_col)))
-    return parsed.select("*", "_parsed.*").drop("_parsed")
+    ``slim`` is accepted and ignored: every parse returns these columns
+    only. The keyword stays because perfbench/layers.py and bench.py
+    still pass ``slim=True``."""
+    parsed = df.withColumn("_p", parse_column(F.col(text_col), schema_spec))
+    return parsed.select("*", "_p.*").drop("_p")
 
 
 def _lookup_join(
@@ -187,28 +142,17 @@ def resolve_dict_ids(
     """
     copy = dictionaries.driver_copy(var_dict)
     if copy is not None:
-        # ship {var_str -> id} into the Arrow batches: a single
-        # vectorized pd.Series.map per batch, zero shuffle
+        # ship {var_str -> id} into the Arrow batches: one dict lookup
+        # per variable over the flat list values, zero shuffle
         bc = copy.broadcast_map("var_str", "var_id")
 
-        @pandas_udf(ArrayType(LongType()))
-        def _lookup(dict_strs: pd.Series) -> pd.Series:
-            import numpy as np
-
-            m = bc.value
-            idx = dict_strs.index
-            counts = np.fromiter(
-                (len(x) if x is not None else 0 for x in dict_strs),
-                dtype=np.int64, count=len(dict_strs),
+        @arrow_udf(ArrayType(LongType()))
+        def _lookup(dict_strs: pa.Array) -> pa.Array:
+            get = bc.value.get
+            ids = pa.array(
+                [get(s) for s in dict_strs.values.to_pylist()], type=pa.int64()
             )
-            flat = pd.Series(
-                [s for x in dict_strs if x is not None for s in x], dtype=object
-            )
-            ids = flat.map(m).to_numpy(dtype=object)
-            bounds = np.cumsum(counts)[:-1]
-            chunks = np.split(ids, bounds)
-            return pd.Series([c.tolist() for c in chunks], index=idx, dtype=object)
-
+            return pa.ListArray.from_arrays(dict_strs.offsets, ids)
         resolved = parsed.withColumn("dict_ids", _lookup(F.col("dict_strs")))
     else:
         resolved = _lookup_join(
@@ -246,7 +190,7 @@ def encode(
     ``pre_parsed``: a DataFrame that already carries the slim parse
     columns (logtype, var_types, encoded, dict_strs) skips the parse
     stage. Its caller owns its persist: IngestPipeline persists one
-    ``parse(df, slim=True)`` per partition, shares it across the
+    ``parse(df)`` per partition, shares it across the
     sub-epochs and releases it. Without ``pre_parsed``, encode persists
     its own parse and never releases it; only one-shot callers (bench.py,
     scripts, the query entry points) take that path.
@@ -271,7 +215,7 @@ def encode(
     if pre_parsed is not None:
         parsed = pre_parsed
     else:
-        parsed = parse(df, text_col=text_col, slim=True, schema_spec=schema_spec)
+        parsed = parse(df, text_col=text_col, schema_spec=schema_spec)
         if not keep_text:
             # the raw text is never read again (decode reconstructs it);
             # dropping it BEFORE the persist cuts the cached working set
@@ -314,7 +258,7 @@ def encode(
 
     encoded = with_ids.join(F.broadcast(logtype_dict), "logtype")
 
-    drop_cols = ["logtype", "var_strs", "dict_strs", "dict_ids"]
+    drop_cols = ["logtype", "dict_strs", "dict_ids"]
     if not keep_text:
         drop_cols.append(text_col)
     encoded = encoded.withColumn("n_vars", F.size("encoded_vars")).drop(

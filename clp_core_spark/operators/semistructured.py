@@ -164,14 +164,14 @@ def encode_semistructured(
             col = F.to_json(col)  # array dict analog: arrays kept as JSON text
         flat_cols.append(col.alias(name))
     if clp_string_cols:
-        from clp_core_spark.operators.encode_pipeline import _parse_slim_udf
+        from clp_core_spark.operators.encode_pipeline import parse_column
 
         by_name = {p.replace(".", "__"): (p, d) for p, d in leaves}
         for c in clp_string_cols:
             if c not in by_name or not isinstance(by_name[c][1], StringType):
                 raise ValueError(f"clp_string_cols entry {c!r} is not a string leaf")
             src = F.coalesce(F.col(f"_j.{by_name[c][0]}"), F.lit(""))
-            flat_cols.append(_parse_slim_udf(src).alias(f"_p_{c}"))
+            flat_cols.append(parse_column(src).alias(f"_p_{c}"))
     # one JSON parse, many consumers: the stats agg, structurize probes,
     # dense-ID bucket counts, schema map, and the returned table all read
     # this relation — without the persist each would re-run from_json over

@@ -417,7 +417,7 @@ class IngestPipeline:
         # dictionary delta, every sub-epoch's encode and its row-count /
         # ts_index aggregation read it. The raw text is never read again
         # (decode reconstructs it), so it leaves before the persist.
-        parsed = encode_pipeline.parse(part_df, slim=True).drop("text").persist()
+        parsed = encode_pipeline.parse(part_df).drop("text").persist()
         try:
             n_subs = 1
             done_subs: set[int] = set()

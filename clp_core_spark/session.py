@@ -6,7 +6,9 @@ share the same tuning:
 * AQE on (runtime re-plan, skew-join splitting) — stands in for CLP's
   scheduler-level partition balancing
   (job_orchestration/scheduler/compress/partition.py:99-138).
-* Arrow on — every CLP-specific kernel is an Arrow-batched pandas UDF.
+* Arrow on — every CLP-specific kernel runs over Arrow batches: the one
+  parse is an Arrow scalar UDF (encode_pipeline.parse_column), the
+  decode kernels are pandas UDFs.
 * Parquet zstd — mirrors CLP's zstd segment compression
   (components/core/src/clp/streaming_compression/zstd/).
 

@@ -52,7 +52,7 @@ def render(legs: list[dict], pair: tuple[dict, dict] | None = None) -> str:
     )
     return f"""# BENCH/BASELINE — measured throughput + scaling evidence
 
-Pipeline measured: scan -> parse/tokenize (vectorized Arrow pandas UDF)
+Pipeline measured: scan -> parse/tokenize (vectorized Arrow UDF)
 -> logtype + variable dictionary build (distributed groupBy-dedup)
 -> dictionary-ID encode -> broadcast enrich (role/tool dims)
 -> fan-out route to 3 sink families (rebalanced, partitioned

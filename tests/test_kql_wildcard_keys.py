@@ -222,7 +222,7 @@ def test_multi_column_encode_is_single_parse(spark):
     nodes = [ln for ln in plan.splitlines() if "ArrowEvalPython" in ln]
     assert nodes, plan
     assert all(
-        "_parse_slim_udf(m1" in ln and "_parse_slim_udf(m2" in ln for ln in nodes
+        "_parse(m1" in ln and "_parse(m2" in ln for ln in nodes
     ), plan
     # REUSE: the parse output is cached — downstream consumers read the
     # InMemoryRelation instead of re-running the parse per column

@@ -560,6 +560,35 @@ def test_ingest_plans_no_python_rdd_scan(spark, small_df, work_root):
     assert [p for p in plans if "Scan ExistingRDD" in p] == []
 
 
+def test_every_parse_is_the_one_arrow_udf(spark, work_root):
+    """A heuristic encode, a schema encode and an ingest all parse through
+    the one Arrow scalar UDF (encode_pipeline.parse_column): their
+    executed plans show the parse as an ArrowEvalPython of ``_parse``,
+    never a MapInArrow or a pandas parse UDF."""
+    from clp_core_spark.functions.schema_tokenizer import SchemaSpec
+    from clp_core_spark.operators import encode_pipeline
+
+    df = generate_transcripts(spark, num_turns=400, seed=7)
+    spec = SchemaSpec(delimiters=" =", rules=[("int", r"-{0,1}[0-9]+")])
+    plans = []
+    for kw in ({}, {"schema_spec": spec}):
+        enc, _, _ = encode_pipeline.encode(df, key_cols=["conv_id", "turn_idx"], **kw)
+        plan = enc._jdf.queryExecution().executedPlan().toString()
+        stray = [
+            ln for ln in plan.splitlines()
+            if "_parse(" in ln and "ArrowEvalPython" not in ln
+        ]
+        assert stray == [], plan
+        plans.append(plan)
+    last = max((i for i, _ in _sql_runs(spark)), default=-1)
+    IngestPipeline(spark, work_root, num_partitions=1).run(df)
+    plans.append("\n".join(p for i, p in _sql_runs(spark) if i > last))
+    for plan in plans:
+        assert "ArrowEvalPython" in plan and "_parse(" in plan, plan
+        for old in ("MapInArrow", "_parse_slim_udf", "_parse_udf", "_schema_udf"):
+            assert old not in plan, plan
+
+
 def test_driver_built_tables_are_local_relations(spark, small_df, work_root):
     from datetime import datetime, timezone
 
@@ -567,7 +596,7 @@ def test_driver_built_tables_are_local_relations(spark, small_df, work_root):
     from clp_core_spark.session import local_table
     from clp_core_spark.sources import transcripts
 
-    parsed = encode_pipeline.parse(small_df, slim=True)
+    parsed = encode_pipeline.parse(small_df)
     lt = dictionaries.build_logtype_dict(parsed)
     tables = [
         transcripts.role_dim(spark),

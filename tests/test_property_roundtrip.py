@@ -1,5 +1,5 @@
 """Property-based fuzzing of the core encode/decode invariant:
-decode_frame(tokenize_frame(x)) must equal x byte-for-byte for ARBITRARY
+decode_frame(tokenize_arrow_arrays(x)) must equal x byte-for-byte for ARBITRARY
 text — the reference's own end-to-end guarantee
 (tests/test-clp_s-end_to_end.cpp), pushed through adversarial inputs
 (unicode, NUL bytes, placeholder bytes, escape chars, wildcard chars,
@@ -8,17 +8,18 @@ no Spark jobs."""
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from clp_core_spark.functions import encoder
 from clp_core_spark.functions.encoder import decode_float_batch
 from clp_core_spark.functions.tokenizer import (
     PLACEHOLDER_DICT,
     PLACEHOLDER_FLOAT,
     PLACEHOLDER_INT,
-    decode_frame,
-    tokenize_frame,
 )
+from tests.test_tokenizer import decode_rows, kernel_rows
 
 # text incl. the engine's own metacharacters and tricky classes
 _special = st.sampled_from(
@@ -40,21 +41,14 @@ _texts = st.lists(
 )
 
 
-def _roundtrip(texts: list[str]) -> pd.Series:
-    s = pd.Series(texts, dtype=object)
-    parsed = tokenize_frame(s)
-    return decode_frame(
-        parsed["logtype"],
-        pd.Series(parsed["encoded"].tolist(), dtype=object),
-        pd.Series(parsed["dict_strs"].tolist(), dtype=object),
-    )
+def _roundtrip(texts: list[str]) -> list[str]:
+    return decode_rows(kernel_rows(texts))
 
 
 @settings(max_examples=200, deadline=None)
 @given(_texts)
 def test_tokenize_decode_roundtrip_is_identity(texts):
-    got = _roundtrip(texts)
-    assert list(got) == texts
+    assert _roundtrip(texts) == texts
 
 
 @settings(max_examples=200, deadline=None)
@@ -75,7 +69,7 @@ def test_numeric_token_roundtrip_preserves_formatting(tokens):
     all come back byte-exact — CLP's encode-or-dictionary split
     (EncodedVariableInterpreter.cpp:70-149) must never lose formatting."""
     texts = [" ".join(tokens)]
-    assert list(_roundtrip(texts)) == texts
+    assert _roundtrip(texts) == texts
 
 
 @settings(max_examples=300, deadline=None)
@@ -108,3 +102,47 @@ def test_float_encoding_is_bit_exact(ip, fp, neg):
     if bool(m.iloc[0]):
         back = decode_float_batch(np.asarray([int(enc[0])], dtype=np.int64))[0]
         assert back == raw
+
+
+# Numeric edge forms: leading zeros, signed zero, bare-dot floats, the
+# 16/17-digit float bound, the int64 bounds and non-ASCII digits.
+_NUMERIC_EDGES = [
+    "", "0", "-0", "00", "007", "-007", ".5", "5.", "-.5", "-0.0", "00.5",
+    "123456789012345.6", "1234567890123456.7", ".9999999999999999",
+    "-.99999999999999999", "9223372036854775807", "9223372036854775808",
+    "-9223372036854775808", "-9223372036854775809", "18446744073709551615",
+    "99999999999999999999", "\u0663", "\u0661\u0662.\u0663", "\uff11\uff12",
+    "1\u0663", "-\u0665", "1e5", "+1", "--1", "1.2.3",
+]
+
+
+@settings(max_examples=300, deadline=None)
+@given(
+    st.lists(
+        st.one_of(
+            st.sampled_from(_NUMERIC_EDGES),
+            st.text(alphabet=st.sampled_from(list("0123456789-.+e\u0663\uff11")),
+                    max_size=22),
+            st.integers(min_value=-(2**65), max_value=2**65).map(str),
+            st.from_regex(r"-?0{0,3}[0-9]{0,17}\.[0-9]{0,17}", fullmatch=True),
+        ),
+        min_size=1,
+        max_size=30,
+    )
+)
+def test_arrow_and_pandas_classifiers_agree(tokens):
+    """The parse kernel classifies with the Arrow encoders; query
+    compilation (operators/search.py) classifies tokens with the pandas
+    ones. Both must give the same masks and values, or a query token
+    would encode differently from the same token in the corpus."""
+    s = pd.Series(tokens, dtype=object)
+    arr = pa.array(tokens, type=pa.string())
+    for pd_fn, pa_fn in (
+        (encoder.classify_encode_int, encoder.classify_encode_int_arrow),
+        (encoder.classify_encode_float, encoder.classify_encode_float_arrow),
+    ):
+        m_pd, v_pd = pd_fn(s)
+        m_pa, v_pa = pa_fn(arr)
+        assert np.asarray(m_pd, dtype=bool).tolist() == m_pa.tolist()
+        assert np.asarray(v_pd, dtype=np.int64).tolist() == v_pa.tolist()
+

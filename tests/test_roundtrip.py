@@ -161,7 +161,7 @@ def test_next_id_after_a_one_entry_dictionary(spark, monkeypatch, kind, driver):
 def test_driver_ids_equal_distributed_ids(spark, transcripts, monkeypatch, kind):
     """The driver rule assigns exactly the IDs of the distributed
     bucket-count + window assignment, fresh and incremental."""
-    parsed = encode_pipeline.parse(transcripts, slim=True).persist()
+    parsed = encode_pipeline.parse(transcripts).persist()
     # a first epoch lacking some templates and vars: the second adds both
     first = parsed.where(
         (F.pmod(F.xxhash64("logtype"), F.lit(3)) != 0) & (F.col("turn_idx") % 2 == 0)

@@ -1,15 +1,11 @@
-"""User-schema tokenizer (functions/schema_tokenizer.py) — the schema-file
-alternative parse path (docs/src/user-guide/reference-unstructured-schema-file.md,
+"""User-schema parsing: functions/schema_tokenizer.py's SchemaSpec driving
+the one parse kernel — the schema-file alternative delimiters and variable
+rules (docs/src/user-guide/reference-unstructured-schema-file.md,
 clp/clp/FileCompressor.cpp:196-228)."""
 
-import pandas as pd
 import pyspark.sql.functions as F
 
-from clp_core_spark.functions.schema_tokenizer import (
-    SchemaSpec,
-    parse_schema_file,
-    tokenize_frame_schema,
-)
+from clp_core_spark.functions.schema_tokenizer import SchemaSpec, parse_schema_file
 from clp_core_spark.functions.tokenizer import (
     PLACEHOLDER_DICT,
     PLACEHOLDER_FLOAT,
@@ -19,6 +15,7 @@ from clp_core_spark.functions.tokenizer import (
     VT_INT,
 )
 from clp_core_spark.operators import encode_pipeline
+from tests.test_tokenizer import tok_one
 
 SCHEMA_TEXT = """
 // Delimiters
@@ -45,22 +42,14 @@ def test_parse_schema_file():
     assert [n for n, _ in spec.rules] == ["int", "float", "vid", "hex"]
 
 
-def _tok(text: str, spec: SchemaSpec):
-    df = tokenize_frame_schema(pd.Series([text]), spec)
-    r = df.iloc[0]
-    return (
-        r["logtype"], list(r["var_strs"]), list(r["var_types"]), list(r["encoded"])
-    )
-
-
 def test_rule_classification_and_priority():
     spec = _spec()
-    lt, vs, vt, enc = _tok("evt user=13 q=4.5 id v77 0xff", spec)
+    lt, vs, vt, enc = tok_one("evt user=13 q=4.5 id v77 0xff", spec)
     assert vs == ["13", "4.5", "v77", "0xff"]
     assert vt == [VT_INT, VT_FLOAT, VT_DICT, VT_DICT]
     assert enc[0] == 13
     # int rule (listed first) wins over later rules for pure digits
-    lt2, vs2, vt2, _ = _tok("x=99", spec)
+    lt2, vs2, vt2, _ = tok_one("x=99", spec)
     assert vs2 == ["99"] and vt2 == [VT_INT]
 
 
@@ -68,7 +57,7 @@ def test_unmatched_digit_token_is_static_text():
     """Differs from the heuristic tokenizer: a token with digits that
     matches NO schema rule stays static (schema-file semantics)."""
     spec = SchemaSpec(delimiters=" ", rules=[("vid", r"v[0-9]+")])
-    lt, vs, vt, _ = _tok("disk3 full v9", spec)
+    lt, vs, vt, _ = tok_one("disk3 full v9", spec)
     assert vs == ["v9"]
     assert "disk3" in lt  # kept as constant
     assert lt == "disk3 full " + PLACEHOLDER_DICT
@@ -76,7 +65,7 @@ def test_unmatched_digit_token_is_static_text():
 
 def test_placeholders_in_logtype():
     spec = _spec()
-    lt, _, _, _ = _tok("a=1 b=2.5 c=v3", spec)
+    lt, _, _, _ = tok_one("a=1 b=2.5 c=v3", spec)
     assert lt == (
         "a=" + PLACEHOLDER_INT + " b=" + PLACEHOLDER_FLOAT
         + " c=" + PLACEHOLDER_DICT
@@ -85,7 +74,7 @@ def test_placeholders_in_logtype():
 
 def test_int_overflow_falls_back_to_dict():
     spec = _spec()
-    _, vs, vt, _ = _tok("n=99999999999999999999", spec)
+    _, vs, vt, _ = tok_one("n=99999999999999999999", spec)
     assert vs == ["99999999999999999999"] and vt == [VT_DICT]
 
 

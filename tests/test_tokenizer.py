@@ -4,6 +4,7 @@ cases (components/core/tests/test-ir_parsing.cpp, test-EncodedVariableInterprete
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 
 from clp_core_spark.functions import encoder, tokenizer
@@ -17,10 +18,33 @@ from clp_core_spark.functions.tokenizer import (
 )
 
 
-def tok_one(text):
-    df = tokenizer.tokenize_frame(pd.Series([text]))
-    r = df.iloc[0]
-    return r["logtype"], list(r["var_strs"]), list(r["var_types"]), list(r["encoded"])
+def kernel_rows(texts, spec=None) -> dict[str, list]:
+    """Run the one parse kernel (tokenizer.tokenize_arrow_arrays) and turn
+    its Arrow arrays into per-row Python lists. ``var_strs`` (every
+    variable in order of appearance) is not a parse column; it is read
+    from the kernel's flat result."""
+    out = tokenizer.tokenize_arrow_arrays(pa.array(texts, type=pa.string()), spec)
+    rows = {f: out.field(f).to_pylist() for f in tokenizer.PARSED_FIELDS}
+    rows["var_strs"] = [[] for _ in texts]
+    flat = tokenizer._tokenize_flat(list(texts), spec)
+    if flat is not None:
+        _, var_rows, _, _, var_np, _ = flat
+        for r, v in zip(var_rows.tolist(), var_np.tolist()):
+            rows["var_strs"][r].append(v)
+    return rows
+
+
+def decode_rows(rows) -> list[str]:
+    return list(tokenizer.decode_frame(
+        pd.Series(rows["logtype"], dtype=object),
+        pd.Series(rows["encoded"], dtype=object),
+        pd.Series(rows["dict_strs"], dtype=object),
+    ))
+
+
+def tok_one(text, spec=None):
+    r = {k: v[0] for k, v in kernel_rows([text], spec).items()}
+    return r["logtype"], r["var_strs"], r["var_types"], r["encoded"]
 
 
 def test_empty_and_non_variable_strings():
@@ -155,10 +179,7 @@ def test_decode_roundtrip_batch():
         "",
         "multi\nline 42\nmessage ff",
     ]
-    s = pd.Series(msgs)
-    df = tokenizer.tokenize_frame(s)
-    decoded = tokenizer.decode_frame(df["logtype"], df["encoded"], df["dict_strs"])
-    assert list(decoded) == msgs
+    assert decode_rows(kernel_rows(msgs)) == msgs
 
 
 def test_decode_roundtrip_property():
@@ -166,10 +187,7 @@ def test_decode_roundtrip_property():
     rng = np.random.RandomState(42)
     alphabet = list("abcXYZ0123456789.+-_\\ =:;/!\x11\x12\x13\t\n")
     msgs = ["".join(rng.choice(alphabet, size=rng.randint(0, 60))) for _ in range(500)]
-    s = pd.Series(msgs)
-    df = tokenizer.tokenize_frame(s)
-    decoded = tokenizer.decode_frame(df["logtype"], df["encoded"], df["dict_strs"])
-    assert list(decoded) == msgs
+    assert decode_rows(kernel_rows(msgs)) == msgs
 
 
 def test_float_16_digit_boundary():
@@ -183,3 +201,21 @@ def test_float_16_digit_boundary():
     too_many = "1234567890123456.7"  # 17 digits
     mask, _ = encoder.classify_encode_float(pd.Series([too_many]))
     assert not mask.any()
+
+
+@pytest.mark.parametrize("texts", [[], [""], ["", None, ""]])
+def test_all_empty_batch(texts):
+    """A batch with no segments at all (empty or null texts) takes the
+    kernel's no-segment branch and still returns one empty row per text,
+    typed like a normal batch."""
+    from clp_core_spark.functions.schema_tokenizer import SchemaSpec
+
+    for spec in (None, SchemaSpec(delimiters=" =", rules=[("int", "[0-9]+")])):
+        assert tokenizer._tokenize_flat(["" for _ in texts], spec) is None
+        out = tokenizer.tokenize_arrow_arrays(pa.array(texts, type=pa.string()), spec)
+        full = tokenizer.tokenize_arrow_arrays(pa.array(["a=1 b"]), spec)
+        assert out.type == full.type
+        assert out.field("logtype").to_pylist() == [""] * len(texts)
+        for f in ("var_types", "encoded", "dict_strs"):
+            assert out.field(f).to_pylist() == [[] for _ in texts]
+
