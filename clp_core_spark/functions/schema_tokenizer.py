@@ -38,8 +38,11 @@ class SchemaSpec:
     delimiters: str  # raw chars, space always included
     rules: list[tuple[str, str]] = field(default_factory=list)  # (name, regex)
 
-    def delim_class(self) -> str:
-        return "".join(re.escape(c) for c in sorted(set(self.delimiters + " ")))
+    def delim_class(self, without: str = "") -> str:
+        """The delimiters (plus space) as the body of a regex char class,
+        leaving out the chars of ``without``."""
+        chars = set(self.delimiters + " ") - set(without)
+        return "".join(re.escape(c) for c in sorted(chars))
 
 
 def parse_schema_file(text: str) -> SchemaSpec:

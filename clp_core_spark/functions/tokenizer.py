@@ -79,13 +79,17 @@ def _row_ordinals(row_pos: np.ndarray) -> np.ndarray:
 def _segment_res(spec) -> tuple[re.Pattern, re.Pattern]:
     """The (per-row, batch) segment regexes: the heuristic delimiter set
     (parsing.cpp:20-24) or, with a schema, the schema's delimiters plus
-    space, where every other char is token text."""
+    space, where every other char is token text. As in the heuristic
+    pair, the batch regex leaves NUL out of both classes, even when the
+    schema lists it as a delimiter: NUL is the batch's row sentinel, and
+    a text holding NUL takes the per-row scan."""
     if spec is None:
         return _SEGMENT_RE, _SEGMENT_BATCH_RE
     dclass = spec.delim_class()
+    batch_dclass = spec.delim_class(without="\x00")
     return (
         re.compile(rf"([{dclass}]+)|([^{dclass}]+)"),
-        re.compile(rf"([{dclass}]+)|([^{dclass}\x00]+)"),
+        re.compile(rf"([{batch_dclass}]+)|([^{dclass}\x00]+)"),
     )
 
 

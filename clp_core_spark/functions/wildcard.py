@@ -7,8 +7,12 @@ anchored regex, which is exactly equivalent to the reference's greedy
 backtracking glob matcher ('*' = any run incl. newlines, '?' = any one
 char, '\\' escapes).
 
-These run driver-side on query strings (one string per query), never in
-the row path — row-path wildcard work is `rlike` in the JVM.
+The translation runs on the driver, once per query string. Matching
+runs in two places with one semantics: ``rlike`` in the JVM over a large
+table, and :func:`wildcard_regex` in the driver over rows that fit in
+memory (dictionary probes against a held dictionary, and search's
+wildcard-verify residue within its bound), with both sides lowered under
+case-insensitive search, as the ``rlike`` path lowers them.
 """
 
 from __future__ import annotations
@@ -204,13 +208,19 @@ def regex_to_wildcard(
     return "".join(out)
 
 
+def wildcard_regex(wild: str, case_sensitive: bool = True) -> re.Pattern:
+    """The compiled Python matcher of a cleaned wildcard string: match a
+    text with ``.match(text)``, lowering the text first when not
+    ``case_sensitive`` (the pattern is lowered here)."""
+    if not case_sensitive:
+        wild = wild.lower()
+    # the Java-regex end anchor (rlike consumer); Python spells it \Z
+    return re.compile(wildcard_to_regex(wild)[:-2] + r"\Z")
+
+
 def wildcard_match(tame: str, wild: str, case_sensitive: bool = True) -> bool:
     """Reference-equivalent matcher (via regex), for tests and driver-side
-    dictionary probes on small collections."""
+    matching of single strings."""
     if not case_sensitive:
-        tame, wild = tame.lower(), wild.lower()
-    rx = wildcard_to_regex(wild)
-    if rx.endswith(r"\z"):
-        # the Java-regex end anchor (rlike consumer); Python spells it \Z
-        rx = rx[:-2] + r"\Z"
-    return re.match(rx, tame) is not None
+        tame = tame.lower()
+    return wildcard_regex(wild, case_sensitive).match(tame) is not None

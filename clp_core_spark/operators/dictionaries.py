@@ -193,6 +193,13 @@ def build_var_dict(
 # dictionaries; beyond it both take the JVM explode -> join -> regroup.
 LOGTYPE_DRIVER_MAX = 100_000
 BROADCAST_VAR_DICT_MAX = 200_000
+# Search's wildcard-verify residue follows the same rule: one
+# ``limit(bound + 1)`` collect of the candidate rows is the size test and
+# the data, and within the bound (with both dictionaries held) the rows
+# are decoded and matched in driver memory, as CLP's search process does
+# (Grep.cpp:935-951). Set from the driver-against-distributed verify
+# measurement at 10^3, 10^4 and 10^5 residue rows (CHANGES.md).
+VERIFY_DRIVER_MAX = 100_000
 
 
 def _driver_bound(columns: list[str]) -> int:
@@ -202,24 +209,32 @@ def _driver_bound(columns: list[str]) -> int:
 
 class DriverCopy:
     """A dictionary held in driver memory: its rows as a pandas ``frame``,
-    and the broadcast ``{key: value}`` maps built from it on first use,
-    one per lookup direction (decode reads id -> string, dense encode
-    string -> id)."""
+    and the ``{key: value}`` maps built from it on first use, one per
+    lookup direction (decode reads id -> string, dense encode string ->
+    id), each kept as a plain dict for the driver and broadcast once for
+    the executors."""
 
     def __init__(self, spark, frame):
         self.frame = frame
         self._spark = spark
         self._maps: dict = {}
-        self._lock = threading.Lock()
+        self._broadcasts: dict = {}
+        self._lock = threading.RLock()
+
+    def lookup(self, key_col: str, value_col: str) -> dict:
+        with self._lock:
+            m = self._maps.get((key_col, value_col))
+            if m is None:
+                m = dict(zip(self.frame[key_col].tolist(), self.frame[value_col].tolist()))
+                self._maps[(key_col, value_col)] = m
+            return m
 
     def broadcast_map(self, key_col: str, value_col: str):
         with self._lock:
-            bc = self._maps.get((key_col, value_col))
+            bc = self._broadcasts.get((key_col, value_col))
             if bc is None:
-                bc = self._spark.sparkContext.broadcast(
-                    dict(zip(self.frame[key_col].tolist(), self.frame[value_col].tolist()))
-                )
-                self._maps[(key_col, value_col)] = bc
+                bc = self._spark.sparkContext.broadcast(self.lookup(key_col, value_col))
+                self._broadcasts[(key_col, value_col)] = bc
             return bc
 
 

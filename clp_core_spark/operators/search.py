@@ -17,8 +17,11 @@ Pipeline per query:
    ``logtype_id IN (...) AND vars-ordered-subsequence(...)``.
 5. Execute: OR of subquery predicates, logtype-ID pushdown first; rows
    matched only by verify-required subqueries are decoded and re-checked
-   with the original wildcard pattern (Grep.cpp:935-951) — the decode UDF
-   runs only on that residue.
+   with the original wildcard pattern (Grep.cpp:935-951). Only the
+   candidate scan runs on the cluster when that residue is small: it is
+   collected once and verified in driver memory against the held
+   dictionaries, as CLP's search process does; a large residue is
+   decoded and matched where it lies.
 
 The encoded-domain semantics (ordered, non-contiguous subsequence over
 ``encoded_vars``) mirror clp/Query.cpp:150-173; the subsequence automaton
@@ -29,6 +32,8 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
+import pandas as pd
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
@@ -43,9 +48,11 @@ from clp_core_spark.functions.wildcard import (
     clean_up_wildcard_search_string,
     is_wildcard,
     regex_to_wildcard,
+    wildcard_regex,
     wildcard_to_regex,
 )
 from clp_core_spark.operators import dictionaries
+from clp_core_spark.session import job_description, local_table
 
 _PLACEHOLDERS = (PLACEHOLDER_INT, PLACEHOLDER_DICT, PLACEHOLDER_FLOAT)
 _TOKEN_CHARS = set("+-.0123456789ABCDEFGHIJKLMNOPQRSTUVWXYZ\\_abcdefghijklmnopqrstuvwxyz")
@@ -404,15 +411,23 @@ def _append_query_constant(constant: str, out: list[str]) -> None:
 
 
 class DictProbes:
-    """Wildcard/exact probes against the two dictionaries, with memoization
-    (one bounded Spark job per distinct probe — dictionary-first evaluation,
-    Grep.cpp:460-496).
+    """Wildcard/exact probes against the two dictionaries, memoized per
+    (dictionary, pattern) — dictionary-first evaluation, Grep.cpp:460-496.
 
-    A probe collects at most ``max_literal_ids + 1`` rows to the driver:
-    small hit sets become literal ``isin`` predicates (the exact encoded
-    automaton), anything larger stays a lazy DataFrame that execution
-    consumes via broadcast semi-join — driver memory and plan size stay
-    O(cutoff) regardless of dictionary size."""
+    One rule for both dictionaries: a dictionary held in driver memory is
+    matched there with zero Spark jobs, as CLP holds both dictionaries in
+    memory during query compilation (Grep.cpp:477-495). The logtype
+    dictionary takes its driver copy on first use
+    (dictionaries.driver_copy); a var dictionary is matched in memory
+    only when it already holds its copy (a verify decode or a dense
+    encode took it), since a probe never collects a possibly huge var
+    dictionary. Any other probe is one bounded Spark job (``search:probe``)
+    that collects at most ``max_literal_ids + 1`` IDs.
+
+    Either way, small hit sets become literal ``isin`` predicates (the
+    exact encoded automaton), and anything larger stays a lazy DataFrame
+    that execution consumes via broadcast semi-join, so driver memory
+    and plan size stay O(cutoff) regardless of dictionary size."""
 
     def __init__(self, logtype_dict: DataFrame, var_dict: DataFrame,
                  ignore_case: bool, max_literal_ids: int = ISIN_MAX_IDS):
@@ -422,66 +437,52 @@ class DictProbes:
         self.max_literal_ids = max_literal_ids
         self._cache: dict = {}
 
-    def _probe(self, df: DataFrame, value_col: str, id_col: str, pattern: str,
-               exact: bool) -> ProbeResult:
-        key = (id_col, pattern, exact)
-        if key in self._cache:
-            return self._cache[key]
+    def _hits(self, df: DataFrame, value_col: str, id_col: str, pattern: str,
+              exact: bool) -> DataFrame:
+        """The probe as a lazy DataFrame of the matching IDs."""
         col = F.col(value_col)
         pat = pattern
         if self.ignore_case:
             col = F.lower(col)
             pat = pattern.lower()
-        if exact:
-            cond = col == F.lit(pat)
+        cond = (col == F.lit(pat)) if exact else col.rlike(wildcard_to_regex(pat))
+        return df.filter(cond).select(id_col)
+
+    def _probe(self, df: DataFrame, value_col: str, id_col: str, pattern: str,
+               exact: bool) -> ProbeResult:
+        key = (id_col, pattern, exact)
+        if key in self._cache:
+            return self._cache[key]
+        held = df is self.logtype_dict or dictionaries.has_driver_copy(df)
+        copy = dictionaries.driver_copy(df) if held else None
+        hits = None  # built only when used: each build costs JVM round trips
+        if copy is not None:
+            lower = self.ignore_case
+            pat = pattern.lower() if lower else pattern
+            rx = None if exact else wildcard_regex(pattern, case_sensitive=not lower)
+            ids = []
+            for v, i in zip(copy.frame[value_col].tolist(), copy.frame[id_col].tolist()):
+                if v is None:
+                    continue
+                v = v.lower() if lower else v
+                if (v == pat) if exact else rx.match(v):
+                    ids.append(i)
         else:
-            cond = col.rlike(wildcard_to_regex(pat))
-        hits = df.filter(cond).select(id_col)
-        head = hits.limit(self.max_literal_ids + 1).collect()
-        if len(head) <= self.max_literal_ids:
-            res = ProbeResult(ids=[int(r[id_col]) for r in head], df=None)
+            hits = self._hits(df, value_col, id_col, pattern, exact)
+            with job_description(df.sparkSession, "search:probe"):
+                head = hits.limit(self.max_literal_ids + 1).collect()
+            ids = [int(r[id_col]) for r in head]
+        if len(ids) <= self.max_literal_ids:
+            res = ProbeResult(ids=ids, df=None)
         else:
+            if hits is None:
+                hits = self._hits(df, value_col, id_col, pattern, exact)
             res = ProbeResult(ids=None, df=hits)
         self._cache[key] = res
         return res
 
     def logtypes(self, pattern: str) -> ProbeResult:
-        """A logtype dictionary with a driver copy is matched in memory
-        (zero Spark jobs), as CLP holds the whole logtype dictionary in
-        memory during query compilation (Grep.cpp:477-495); a larger one
-        is probed distributed. Var dictionaries can be huge and always
-        probe distributed."""
-        copy = dictionaries.driver_copy(self.logtype_dict)
-        if copy is None:
-            return self._probe(
-                self.logtype_dict, "logtype", "logtype_id", pattern, exact=False
-            )
-        key = ("logtype_id", pattern, False)
-        if key in self._cache:
-            return self._cache[key]
-        from clp_core_spark.functions.wildcard import wildcard_match
-
-        lt = copy.frame
-        ids = [
-            int(lid)
-            for val, lid in zip(lt["logtype"], lt["logtype_id"])
-            if wildcard_match(val, pattern, case_sensitive=not self.ignore_case)
-        ]
-        if len(ids) > self.max_literal_ids:
-            # keep the plan-size bound: large hit sets stay a lazy DF for
-            # broadcast-semi-join consumption, same as distributed probes
-            col = F.lower(F.col("logtype")) if self.ignore_case else F.col("logtype")
-            pat = pattern.lower() if self.ignore_case else pattern
-            res = ProbeResult(
-                ids=None,
-                df=self.logtype_dict.filter(
-                    col.rlike(wildcard_to_regex(pat))
-                ).select("logtype_id"),
-            )
-        else:
-            res = ProbeResult(ids=ids, df=None)
-        self._cache[key] = res
-        return res
+        return self._probe(self.logtype_dict, "logtype", "logtype_id", pattern, exact=False)
 
     def var_exact(self, value: str) -> ProbeResult:
         return self._probe(self.var_dict, "var_str", "var_id", value, exact=True)
@@ -551,8 +552,8 @@ def _prefetch_var_probes(tokens: list[QueryToken], probes: DictProbes) -> None:
             continue
         keys.append(("wild" if tok.contains_wildcards else "exact", tok.value))
     keys = list(dict.fromkeys(keys))
-    if len(keys) < 2:
-        return
+    if len(keys) < 2 or dictionaries.has_driver_copy(probes.var_dict):
+        return  # nothing to overlap: in-memory probes launch no job
     from concurrent.futures import ThreadPoolExecutor
 
     def _one(k: tuple[str, str]) -> None:
@@ -682,7 +683,10 @@ def _decode_for_verify(
     key_cols: list[str],
     slim_to_needed: bool = False,
 ) -> DataFrame:
-    """Attach ``decoded_text`` for the wildcard-verify stage. When every
+    """Attach ``decoded_text`` for the distributed wildcard verify, the
+    path of a residue above ``VERIFY_DRIVER_MAX`` rows or of dictionaries
+    without driver copies (a smaller residue is verified in driver memory,
+    :func:`_verify_on_driver`). When every
     logtype's placeholders are INTEGER variables (no dictionary/float
     slots) and the logtype dict is driver-resident, the reconstruction
     is a pure-JVM CASE over per-template concat chains —
@@ -733,6 +737,96 @@ def _decode_for_verify(
     return encode_pipeline.decode(
         df, logtype_dict, var_dict, key_cols, slim_to_needed=slim_to_needed
     )
+
+
+def _verify(
+    residue: DataFrame,
+    logtype_dict: DataFrame,
+    var_dict: DataFrame,
+    compiled: CompiledQuery,
+    key_cols: list[str],
+    out_cols: list[str],
+    slim_to_needed: bool = False,
+) -> DataFrame:
+    """The ``out_cols`` of the ``residue`` rows whose decoded message
+    matches the processed query string: the residual verify of
+    Grep.cpp:935-951. A residue within ``VERIFY_DRIVER_MAX`` rows is
+    verified in driver memory (:func:`_verify_on_driver`); a larger one,
+    or one whose dictionaries are not both held, is decoded
+    (:func:`_decode_for_verify`) and matched with ``rlike`` where it
+    lies. ``slim_to_needed`` is passed on to the distributed decode."""
+    hits = _verify_on_driver(residue, logtype_dict, var_dict, compiled, out_cols)
+    if hits is not None:
+        return hits
+    decoded = _decode_for_verify(
+        residue, logtype_dict, var_dict, key_cols, slim_to_needed=slim_to_needed
+    )
+    pat = compiled.search_string
+    col = F.col("decoded_text")
+    if compiled.ignore_case:
+        col, pat = F.lower(col), pat.lower()
+    return decoded.filter(col.rlike(wildcard_to_regex(pat))).select(*out_cols)
+
+
+def _verify_on_driver(
+    residue: DataFrame,
+    logtype_dict: DataFrame,
+    var_dict: DataFrame,
+    compiled: CompiledQuery,
+    out_cols: list[str],
+) -> DataFrame | None:
+    """The verify hits as a local relation, or None when either
+    dictionary has no driver copy or the residue holds more than
+    ``VERIFY_DRIVER_MAX`` rows.
+
+    CLP decodes and wildcard-matches the candidate messages inside the
+    search process, with both dictionaries in memory (Grep.cpp:477-495,
+    :935-951). Here one Arrow collect of at most ``VERIFY_DRIVER_MAX + 1``
+    rows (the out columns, ``logtype_id`` and ``encoded_vars``) is both
+    the size test and the data; the rows decode through the same kernel
+    as the distributed decode (tokenizer.decode_frame_with_map, over the
+    id -> string maps of the driver copies) and match with the ``rlike``
+    semantics (wildcard.wildcard_regex). No Python worker starts, so the
+    residue pays no UDF stage. Timestamps leave Spark as ``unix_micros``,
+    exact whatever the Python process's zone."""
+    from pyspark.sql.types import TimestampType
+
+    from clp_core_spark.functions.tokenizer import decode_frame_with_map
+
+    lt_copy = dictionaries.driver_copy(logtype_dict)
+    var_copy = lt_copy and dictionaries.driver_copy(var_dict)
+    if not var_copy:
+        return None
+    bound = dictionaries.VERIFY_DRIVER_MAX
+    schema = residue.select(*out_cols).schema
+    cols = [
+        F.unix_micros(f.name).alias(f.name) if isinstance(f.dataType, TimestampType)
+        else F.col(f.name)
+        for f in schema.fields
+    ]
+    with job_description(residue.sparkSession, "search:verify-residue"):
+        table = (
+            residue.select(*cols, F.col("logtype_id").alias("_lt"),
+                           F.col("encoded_vars").alias("_ev"))
+            .limit(bound + 1)
+            .toArrow()
+        )
+    if table.num_rows > bound:
+        return None
+    lt_of = lt_copy.lookup("logtype_id", "logtype")
+    # a logtype the dictionary lacks drops the row, as the decode's join does
+    logtypes = pd.Series([lt_of.get(i) for i in table.column("_lt").to_pylist()], dtype=object)
+    known = logtypes.notna().to_numpy()
+    texts = decode_frame_with_map(
+        logtypes[known], table.column("_ev").to_pandas()[known],
+        var_copy.lookup("var_id", "var_str"),
+    )
+    lower = compiled.ignore_case
+    rx = wildcard_regex(compiled.search_string, case_sensitive=not lower)
+    known[known] = [rx.match(t.lower() if lower else t) is not None for t in texts]
+    # the out columns by position: they may repeat a name
+    hits = table.filter(pa.array(known)).select(range(len(cols)))
+    return local_table(residue.sparkSession, hits, schema)
 
 
 def _subseq_predicate(vars_plan: list[QueryVarPlan]) -> Column:
@@ -804,7 +898,16 @@ def search(
     select_cols: list[str] | None = None,
 ) -> DataFrame:
     """Execute a compiled query over the encoded table. Returns matching
-    rows (key_cols + select_cols)."""
+    rows (key_cols + select_cols).
+
+    Direct subqueries stay lazy filters and semi-joins over ``encoded``.
+    The verify-required rows (and a ``?``-only query's rows) are the
+    residue: within ``dictionaries.VERIFY_DRIVER_MAX`` rows, and with both
+    dictionaries held in driver memory, it is collected once (a
+    ``search:verify-residue`` job) and verified on the driver, so the
+    result holds those hits as a local relation and this call runs that
+    job before it returns; otherwise the residue is decoded and matched
+    with ``rlike`` in the returned plan (:func:`_verify`)."""
     select_cols = select_cols or []
     out_cols = key_cols + select_cols
     df = encoded
@@ -824,12 +927,7 @@ def search(
         # `!contains_sub_queries && !search_string_matches_all`).
         if compiled.search_string in ("", "*"):
             return df.select(*out_cols)
-        decoded = _decode_for_verify(df, logtype_dict, var_dict, key_cols)
-        pat = compiled.search_string
-        col = F.col("decoded_text")
-        if compiled.ignore_case:
-            col, pat = F.lower(col), pat.lower()
-        return decoded.filter(col.rlike(wildcard_to_regex(pat))).select(*out_cols)
+        return _verify(df, logtype_dict, var_dict, compiled, key_cols, out_cols)
     if compiled.wont_match:
         return df.select(*out_cols).limit(0)
 
@@ -868,19 +966,10 @@ def search(
     if candidates is not None:
         if lit_verify and join_verify or len(join_verify) > 1:
             candidates = candidates.dropDuplicates(key_cols)
-        # Residual verify (Grep.cpp:935-951): decode the (small) residue
-        # and wildcard-match against the processed query string; the
-        # dictionary slims to the residue's own var IDs first, so big
-        # dicts never shuffle/broadcast whole for a verify.
-        decoded = _decode_for_verify(
-            candidates, logtype_dict, var_dict, key_cols, slim_to_needed=True
+        results.append(
+            _verify(candidates, logtype_dict, var_dict, compiled, key_cols,
+                    out_cols, slim_to_needed=True)
         )
-        pat = compiled.search_string
-        col = F.col("decoded_text")
-        if compiled.ignore_case:
-            col, pat = F.lower(col), pat.lower()
-        verified = decoded.filter(col.rlike(wildcard_to_regex(pat)))
-        results.append(verified.select(*out_cols))
 
     out = results[0]
     for r in results[1:]:

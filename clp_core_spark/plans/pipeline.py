@@ -61,6 +61,40 @@ def _utc(micros: int | None) -> datetime | None:
     return None if micros is None else _UNIX_EPOCH + timedelta(microseconds=micros)
 
 
+def _read_meta(path: str, columns: list[str]) -> list[dict] | None:
+    """The rows of the archive metadata table under ``path`` (the ledger
+    or the ts_index), None when it does not exist. They are read with
+    pyarrow on the driver, so no Spark job runs: the store is local-fs,
+    as for ``_version`` and dictstore, and each table holds a few rows
+    per epoch. Files named ``_*`` or ``.*`` (``_SUCCESS``, checksums)
+    are not data, as for Spark's reader. A timestamp comes back as
+    exact ms since the epoch, floored like ``unix_millis``: Spark writes
+    it as an INT96 UTC instant. A column a file lacks reads as None."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    if not os.path.exists(path):
+        return None
+    rows: list[dict] = []
+    for name in sorted(os.listdir(path)):
+        if name.startswith(("_", ".")):
+            continue
+        t = pq.read_table(os.path.join(path, name), coerce_int96_timestamp_unit="us")
+        vals = []
+        for c in columns:
+            if c not in t.column_names:
+                vals.append([None] * t.num_rows)
+                continue
+            col = t.column(c)
+            if pa.types.is_timestamp(col.type):
+                us = col.cast(pa.timestamp("us", tz=col.type.tz)).cast(pa.int64())
+                vals.append([None if v is None else v // 1000 for v in us.to_pylist()])
+            else:
+                vals.append(col.to_pylist())
+        rows.extend(dict(zip(columns, r)) for r in zip(*vals))
+    return rows
+
+
 class IngestPipeline:
     """Ingest into, and search, one archive under ``work_root``.
 
@@ -99,8 +133,8 @@ class IngestPipeline:
     value on a 10k-turn epoch), the two dictionary saves, and the
     ts_index and ledger appends. Every table built on the driver is an
     Arrow local relation (session.local_table), so none of them starts a
-    Python worker, and a missing ledger (``done_partitions``) or ts_index
-    is read without a job.
+    Python worker, and the ledger and ts_index checks (``done_partitions``,
+    the epoch spans) read those tables on the driver, without a job.
 
     Persists: each has one owner, which releases it in a ``finally``, so
     a failed epoch leaves nothing pinned either. ``_run_partition`` owns
@@ -240,13 +274,15 @@ class IngestPipeline:
 
     def done_partitions(self) -> set[int]:
         """Partitions whose EVERY sub-epoch committed: a partition split
-        into n_subs sub-epochs is done iff all n_subs ledger rows exist."""
-        if not os.path.exists(self.ledger_path):  # nothing committed
-            return set()
-        rows = self.ledger().groupBy("partition_id").agg(
-            F.count("*").alias("n"), F.max("n_subs").alias("want")
-        ).collect()
-        return {r["partition_id"] for r in rows if r["n"] >= r["want"]}
+        into n_subs sub-epochs is done iff all n_subs ledger rows exist.
+        Read on the driver (``_read_meta``), with no Spark job."""
+        n: dict[int, int] = {}
+        want: dict[int, int] = {}
+        for r in _read_meta(self.ledger_path, ["partition_id", "n_subs"]) or []:
+            p = r["partition_id"]
+            n[p] = n.get(p, 0) + 1
+            want[p] = max(want.get(p, 1), r["n_subs"] or 1)
+        return {p for p in n if n[p] >= want[p]}
 
     def committed_sub_epochs(self, partition_id: int) -> tuple[set[int], int | None]:
         """(committed sub_epoch ids, the n_subs they were committed under).
@@ -256,12 +292,11 @@ class IngestPipeline:
         the dict delta yields a smaller n_subs and a *different*
         pmod(xxhash64, n_subs) split — rows would be duplicated into new
         epoch_parts or silently dropped."""
-        rows = (
-            self.ledger()
-            .filter(F.col("partition_id") == partition_id)
-            .select("sub_epoch", "n_subs")
-            .collect()
-        )
+        rows = [
+            r
+            for r in _read_meta(self.ledger_path, ["partition_id", "sub_epoch", "n_subs"]) or []
+            if r["partition_id"] == partition_id
+        ]
         subs = {r["sub_epoch"] for r in rows}
         return subs, (max(r["n_subs"] for r in rows) if rows else None)
 
@@ -594,40 +629,32 @@ class IngestPipeline:
 
     def _epoch_spans(self) -> list[tuple[int, int | None, int | None]]:
         """(epoch_part, min ms, max ms) per timestamp pattern of every
-        committed epoch — what ``epochs_for_range`` filters."""
-        ledger_rows = self.ledger().select(
-            "partition_id", "sub_epoch",
-            F.unix_millis(F.col("input_min_ts").cast("timestamp")).alias("mn"),
-            F.unix_millis(F.col("input_max_ts").cast("timestamp")).alias("mx"),
-        ).collect()
-        idx = self.ts_index()
+        committed epoch — what ``epochs_for_range`` filters. Read on the
+        driver (``_read_meta``), with no Spark job."""
+        keys = ["partition_id", "sub_epoch"]
+        ledger_rows = [
+            (r["partition_id"], r["sub_epoch"], r["input_min_ts"], r["input_max_ts"])
+            for r in _read_meta(self.ledger_path, keys + ["input_min_ts", "input_max_ts"])
+            or []
+        ]
+        idx = _read_meta(self.ts_index_path, keys + ["min_ts", "max_ts"])
         rows = ledger_rows
         if idx is not None:
             # only COMMITTED sub-epochs count: a crash between the index
             # append and the ledger commit leaves orphan index rows whose
             # sink directories don't exist (the re-run rewrites both)
-            committed = {(r["partition_id"], r["sub_epoch"]) for r in ledger_rows}
+            committed = {r[:2] for r in ledger_rows}
             rows = [
-                r
-                for r in idx.select(
-                    "partition_id", "sub_epoch",
-                    F.unix_millis(F.col("min_ts")).alias("mn"),
-                    F.unix_millis(F.col("max_ts")).alias("mx"),
-                ).collect()
+                (r["partition_id"], r["sub_epoch"], r["min_ts"], r["max_ts"])
+                for r in idx
                 if (r["partition_id"], r["sub_epoch"]) in committed
             ]
             # committed epochs WITHOUT index rows (work dirs written before
             # the per-pattern index existed, then resumed) must not vanish
             # from search: fall back to their coarse ledger span
-            indexed = {(r["partition_id"], r["sub_epoch"]) for r in rows}
-            rows.extend(
-                r for r in ledger_rows
-                if (r["partition_id"], r["sub_epoch"]) not in indexed
-            )
-        return [
-            (r["partition_id"] + r["sub_epoch"] * self.num_partitions, r["mn"], r["mx"])
-            for r in rows
-        ]
+            indexed = {r[:2] for r in rows}
+            rows.extend(r for r in ledger_rows if r[:2] not in indexed)
+        return [(p + sub * self.num_partitions, mn, mx) for p, sub, mn, mx in rows]
 
     def read_sink(
         self, kind: str = "role", epochs: list[int] | None = None

@@ -13,12 +13,14 @@ share the same tuning:
   (components/core/src/clp/streaming_compression/zstd/).
 
 :func:`local_table` is the one way product code turns driver-held rows
-into a DataFrame.
+into a DataFrame, and :func:`job_description` names the Spark jobs a
+block of product code launches.
 """
 
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -92,21 +94,26 @@ def local_table(spark: SparkSession, data, schema: str | StructType) -> DataFram
     a ``LocalTableScan``, so reading it needs no Python worker and no
     Spark job of its own. (``createDataFrame`` of a Python list plans a
     ``Scan ExistingRDD`` instead: a Python-worker job every time it is
-    read.) ``data`` is a pandas DataFrame holding ``schema``'s columns,
-    or a list of rows: tuples in ``schema``'s column order, or dicts.
+    read.) ``data`` is a pyarrow Table of ``schema``'s columns in its
+    order, a pandas DataFrame holding ``schema``'s columns, or a list of
+    rows: tuples in ``schema``'s column order, or dicts.
 
     Timestamp values must be timezone-aware: Arrow reads a naive
     datetime as a wall-clock time in the session zone, while ``collect``
     returns naive datetimes in the Python process's zone, so a collected
     timestamp passed back here unconverted would shift by the difference
-    between the two."""
+    between the two. A pyarrow Table may instead carry a timestamp as
+    int64 UTC microseconds, the ``unix_micros`` a collect takes out of
+    Spark."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
     if isinstance(schema, str):
         schema = StructType.fromDDL(schema)
     arrow_schema = to_arrow_schema(schema)
-    if isinstance(data, pd.DataFrame):
+    if isinstance(data, pa.Table):
+        table = data.cast(arrow_schema)
+    elif isinstance(data, pd.DataFrame):
         table = pa.Table.from_pandas(
             data[schema.names], schema=arrow_schema, preserve_index=False
         )
@@ -117,3 +124,17 @@ def local_table(spark: SparkSession, data, schema: str | StructType) -> DataFram
             raise ValueError("local_table: naive datetime in a timestamp column")
         table = pa.Table.from_pylist(rows, schema=arrow_schema)
     return spark.createDataFrame(table, schema)
+
+
+@contextmanager
+def job_description(spark: SparkSession, text: str):
+    """Run the block's Spark jobs under the description ``text`` (what the
+    UI and the status API show for them), then restore the thread's
+    previous description."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(text)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)

@@ -468,15 +468,21 @@ def test_open_archive_follows_commits_on_the_root(spark, input_df, work_root, tm
 
 def test_search_on_unchanged_archive_reuses_the_open(spark, input_df, work_root):
     """Once a search has opened the archive, building the same search
-    again reads no ledger, index, sink schema or dictionary: zero Spark
-    jobs."""
+    again reads no ledger, index, sink schema or dictionary: no Spark job
+    but the verify residue's one collect, which a search within the
+    driver-verify bound runs when it is built."""
     pipe = IngestPipeline(spark, work_root, num_partitions=2)
     pipe.run(input_df)
-    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    sc = spark.sparkContext
+    scheduler = sc._jsc.sc().dagScheduler()
     pipe.search("heartbeat")
     before = int(scheduler.nextJobId())
     pipe.search("heartbeat")
-    assert int(scheduler.nextJobId()) == before
+    after = int(scheduler.nextJobId())
+    store = sc._jsc.sc().statusStore()
+    assert [store.job(j).description().get() for j in range(before, after)] == [
+        "search:verify-residue"
+    ]
 
 
 def test_open_state_one_object_per_key_under_threads(spark, work_root):
@@ -668,3 +674,77 @@ def test_fresh_ingest_spark_jobs(spark, small_df, work_root):
     before = int(scheduler.nextJobId())
     IngestPipeline(spark, work_root, num_partitions=1).run(small_df)
     assert int(scheduler.nextJobId()) - before <= 23
+
+
+def _spark_meta(pipe: IngestPipeline, ts_index: bool):
+    """done_partitions, committed_sub_epochs and the epoch spans, computed
+    with Spark reads of the ledger and ts_index."""
+    led = pipe.ledger()
+    done = {
+        r["partition_id"]
+        for r in led.groupBy("partition_id")
+        .agg(F.count("*").alias("n"), F.max("n_subs").alias("want"))
+        .collect()
+        if r["n"] >= r["want"]
+    }
+    rows = led.select("partition_id", "sub_epoch", "n_subs").collect()
+    subs = {
+        p: (
+            {r["sub_epoch"] for r in rows if r["partition_id"] == p},
+            max((r["n_subs"] for r in rows if r["partition_id"] == p), default=None),
+        )
+        for p in range(pipe.num_partitions + 1)
+    }
+    spans = [
+        tuple(r)
+        for r in led.select(
+            "partition_id", "sub_epoch",
+            F.unix_millis("input_min_ts"), F.unix_millis("input_max_ts"),
+        ).collect()
+    ]
+    if ts_index:
+        spans = [
+            tuple(r)
+            for r in pipe.ts_index().select(
+                "partition_id", "sub_epoch", F.unix_millis("min_ts"), F.unix_millis("max_ts")
+            ).collect()
+        ]
+    spans = sorted(
+        (p + s * pipe.num_partitions, mn, mx) for p, s, mn, mx in spans
+    )
+    return done, subs, spans
+
+
+def test_archive_metadata_reads_on_the_driver(spark, small_df, work_root, monkeypatch):
+    """done_partitions, committed_sub_epochs and the epoch spans read the
+    ledger and ts_index with pyarrow: no Spark job, and the same result as
+    the Spark read, on a 3-epoch archive and on a legacy one without
+    ts_index, in a process zone other than the session's (UTC)."""
+    import os
+    import shutil
+    import time
+
+    IngestPipeline(spark, work_root, num_partitions=3).run(small_df)
+    # Spark's own side files sit beside the data files
+    assert any(n.startswith((".", "_")) for n in os.listdir(f"{work_root}/ledger"))
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    monkeypatch.setenv("TZ", "IST-05:30")
+    time.tzset()
+    try:
+        for legacy in (False, True):
+            if legacy:
+                shutil.rmtree(f"{work_root}/ts_index")
+            pipe = IngestPipeline(spark, work_root, num_partitions=3)
+            before = int(scheduler.nextJobId())
+            got = (
+                pipe.done_partitions(),
+                {p: pipe.committed_sub_epochs(p) for p in range(4)},
+                sorted(pipe._epoch_spans()),
+            )
+            assert int(scheduler.nextJobId()) == before
+            want = _spark_meta(pipe, ts_index=not legacy)
+            assert got == want
+            assert got[0] == {0, 1, 2} and len(got[2]) == 3
+    finally:
+        monkeypatch.undo()
+        time.tzset()

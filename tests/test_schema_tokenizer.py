@@ -116,6 +116,23 @@ def test_schema_roundtrip_with_nul_bytes(spark):
     assert bad == 0
 
 
+def test_nul_delimiter_keeps_rows_apart():
+    """A schema that lists NUL as a delimiter: the batch scan's NUL row
+    sentinel must not join a delimiter run, or segments cross rows (this
+    raised IndexError in _group_join). Each row parses as it does alone,
+    with or without a NUL in the batch's text."""
+    import pyarrow as pa
+
+    from clp_core_spark.functions.tokenizer import tokenize_arrow_arrays
+
+    spec = SchemaSpec(delimiters="\x00 ", rules=[("int", "[0-9]+")])
+    for texts in (["a 1", "b 22", "c"], ["a\x001", "b 22", "c"]):
+        got = tokenize_arrow_arrays(pa.array(texts), spec).to_pylist()
+        alone = [tokenize_arrow_arrays(pa.array([t]), spec).to_pylist()[0] for t in texts]
+        assert got == alone
+    assert got[0]["logtype"] == "a\x00" + PLACEHOLDER_INT and got[0]["encoded"] == [1]
+
+
 def test_query_side_schema_lexer(spark):
     """Query tokenization must follow the CORPUS's schema (Grep.cpp:750-891
     log-surgeon path): with delimiters=' ' and a tag rule, 'error:13' is

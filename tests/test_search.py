@@ -212,3 +212,23 @@ def test_identical_subqueries_compile_once(corpus):
     keys = [s.literal_key() for s in compiled.sub_queries]
     assert len(keys) == len(set(keys)) == 1
     assert run(corpus, query) == naive(transcripts, query)
+
+
+# The residual verify runs in driver memory within
+# dictionaries.VERIFY_DRIVER_MAX residue rows and distributed above it: with
+# the bound at 0 every verify takes the distributed path, and the hits must
+# not change.
+@pytest.mark.parametrize("query", GOLDEN_QUERIES)
+def test_search_matches_naive_scan_distributed_verify(corpus, query, monkeypatch):
+    from clp_core_spark.operators import dictionaries
+
+    monkeypatch.setattr(dictionaries, "VERIFY_DRIVER_MAX", 0)
+    assert run(corpus, query) == naive(corpus[0], query), query
+
+
+@pytest.mark.parametrize("query", JOIN_PATH_QUERIES)
+def test_search_forced_join_path_distributed_verify(corpus, query, monkeypatch):
+    from clp_core_spark.operators import dictionaries
+
+    monkeypatch.setattr(dictionaries, "VERIFY_DRIVER_MAX", 0)
+    assert run(corpus, query, max_literal_ids=0) == naive(corpus[0], query), query
