@@ -30,6 +30,7 @@ is a JVM-side ``aggregate`` over the array — no Python in the row path.
 
 from __future__ import annotations
 
+import re
 from dataclasses import dataclass, field
 
 import pandas as pd
@@ -589,9 +590,13 @@ def compile_query(
         search_string = "*" + search_string + "*"
     processed = clean_up_wildcard_search_string(search_string)
 
-    # '?' has no subquery support: treat as '*' for generation; the final
-    # verify uses the original '?' (Grep.cpp:521-530).
-    for_subqueries = clean_up_wildcard_search_string(processed.replace("?", "*"))
+    # '?' has no subquery support: an unescaped '?' reads as '*' for
+    # generation (Grep.cpp:521-530), so every subquery of such a query is
+    # verified against the original '?'; an escaped '\?' stays literal.
+    for_subqueries = clean_up_wildcard_search_string(
+        re.sub(r"(\\.)|\?", lambda m: m.group(1) or "*", processed)
+    )
+    verify_all = "?" in re.sub(r"\\.", "", processed)
 
     tokens: list[QueryToken] = []
     begin = end = 0
@@ -619,7 +624,7 @@ def compile_query(
 
     changed = True
     while changed:
-        sub = SubQueryPlan(logtype_ids=[])
+        sub = SubQueryPlan(logtype_ids=[], wildcard_match_required=verify_all)
         lt: list[str] = []
         last_end = 0
         wont_match = False

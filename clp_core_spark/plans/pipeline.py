@@ -8,7 +8,7 @@ scheduler/compress/partition.py:99-138). Here the unit of work is a
 deterministic hash bucket of ``conv_id`` ("epoch partition"): every turn
 of a conversation lands in exactly one partition, partitions are
 processed independently, and a parquet *ledger* table records one row per
-completed partition.
+committed (sub-)epoch.
 
 Resume semantics:
 - a partition is re-processed iff its ledger row is missing (crash before
@@ -19,9 +19,10 @@ Resume semantics:
   counters of clp/VariableDictionaryWriter.cpp:16-23. Dictionary state is
   persisted per epoch under {work_root}/dicts.
 
-Lineage per partition: input row count, per-sink routed counts, dict
-deltas, wall time, turns/sec — CLP's archive metadata rows
-(clp/streaming_archive/MetadataDB.cpp) as a queryable table.
+Lineage per (sub-)epoch: input row count, per-sink routed counts, dict
+deltas, wall time, turns/sec, the per-pattern time spans and the tags —
+CLP's archive metadata rows (clp/streaming_archive/MetadataDB.cpp) as a
+queryable table.
 """
 
 from __future__ import annotations
@@ -34,64 +35,70 @@ from datetime import datetime, timedelta, timezone
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.errors import AnalysisException
+from pyspark.sql.types import StructType
 
 from clp_core_spark.operators import encode_pipeline, enrich, route
 from clp_core_spark.plans import dictstore
 from clp_core_spark.plans.tablestore import TableStore
-from clp_core_spark.session import local_table
+from clp_core_spark.session import arrow_table, local_table
 from clp_core_spark.sources import transcripts
 
 LEDGER_SCHEMA = (
     "partition_id int, sub_epoch int, n_subs int,"
     " n_rows long, n_routed long, lt_dict_size long,"
     " var_dict_size long, wall_sec double, turns_per_sec double,"
-    " input_min_ts timestamp, input_max_ts timestamp, finished_at double"
-)
-TS_INDEX_SCHEMA = (
-    "partition_id int, sub_epoch int, pattern_id int,"
-    " min_ts timestamp, max_ts timestamp"
+    " input_min_ts timestamp, input_max_ts timestamp, finished_at double,"
+    " spans array<struct<pattern_id:int,min_ts:timestamp,max_ts:timestamp>>,"
+    " tags array<string>"
 )
 _UNIX_EPOCH = datetime(1970, 1, 1, tzinfo=timezone.utc)
 
 
 def _utc(micros: int | None) -> datetime | None:
     """An aggregated ``unix_micros`` as an exact UTC datetime, the form
-    local_table takes timestamps in."""
+    arrow_table takes timestamps in."""
     return None if micros is None else _UNIX_EPOCH + timedelta(microseconds=micros)
 
 
-def _read_meta(path: str, columns: list[str]) -> list[dict] | None:
-    """The rows of the archive metadata table under ``path`` (the ledger
-    or the ts_index), None when it does not exist. They are read with
-    pyarrow on the driver, so no Spark job runs: the store is local-fs,
-    as for ``_version`` and dictstore, and each table holds a few rows
-    per epoch. Files named ``_*`` or ``.*`` (``_SUCCESS``, checksums)
-    are not data, as for Spark's reader. A timestamp comes back as
-    exact ms since the epoch, floored like ``unix_millis``: Spark writes
-    it as an INT96 UTC instant. A column a file lacks reads as None."""
-    import pyarrow as pa
+def _ms(ts: datetime | None) -> int | None:
+    """A timestamp read from a ledger file as exact ms since the epoch,
+    floored like ``unix_millis``. A naive one is a UTC instant: Spark
+    wrote the ledger files of older archives with INT96 timestamps."""
+    if ts is None:
+        return None
+    if ts.tzinfo is None:
+        ts = ts.replace(tzinfo=timezone.utc)
+    return (ts - _UNIX_EPOCH) // timedelta(milliseconds=1)
+
+
+def _read_meta(path: str) -> list[dict]:
+    """The rows of the ledger under ``path`` (none when it does not
+    exist), as dicts keyed by column name. They are read with pyarrow on
+    the driver, so no Spark job runs: the store is local-fs, as for
+    ``_version`` and dictstore, and the ledger holds one row per
+    sub-epoch. Files named ``_*`` or ``.*`` (``_SUCCESS``, checksums, a
+    commit's temp file) are not data, as for Spark's reader.
+    Timestamps, top-level and in ``spans``, come back as ms (``_ms``).
+    ``spans`` and ``tags``, which the ledger files of older archives
+    lack, read as None."""
     import pyarrow.parquet as pq
 
     if not os.path.exists(path):
-        return None
+        return []
     rows: list[dict] = []
     for name in sorted(os.listdir(path)):
         if name.startswith(("_", ".")):
             continue
         t = pq.read_table(os.path.join(path, name), coerce_int96_timestamp_unit="us")
-        vals = []
-        for c in columns:
-            if c not in t.column_names:
-                vals.append([None] * t.num_rows)
-                continue
-            col = t.column(c)
-            if pa.types.is_timestamp(col.type):
-                us = col.cast(pa.timestamp("us", tz=col.type.tz)).cast(pa.int64())
-                vals.append([None if v is None else v // 1000 for v in us.to_pylist()])
-            else:
-                vals.append(col.to_pylist())
-        rows.extend(dict(zip(columns, r)) for r in zip(*vals))
+        for r in t.to_pylist():
+            r["input_min_ts"] = _ms(r.get("input_min_ts"))
+            r["input_max_ts"] = _ms(r.get("input_max_ts"))
+            spans = r.get("spans")
+            r["spans"] = None if spans is None else [
+                dict(s, min_ts=_ms(s["min_ts"]), max_ts=_ms(s["max_ts"])) for s in spans
+            ]
+            r.setdefault("tags", None)
+            rows.append(r)
     return rows
 
 
@@ -103,7 +110,7 @@ class IngestPipeline:
     archive once per pipeline object, as CLP opens an archive once per
     search session (its DictionaryReader keeps both dictionaries in
     memory, Grep.cpp:477-495). Each piece of open state is built on first
-    use and kept: the committed epoch spans, the sink DataFrame per
+    use and kept: the ledger rows, the sink DataFrame per
     (kind, epochs) and the dictionary DataFrames. Because every request
     gets the same dictionary DataFrame objects, their driver copies
     (operators.dictionaries.driver_copy, kept on those objects) are
@@ -111,30 +118,40 @@ class IngestPipeline:
 
     Version: the open state belongs to one archive version, the sorted
     file names under ``{work_root}/ledger``, read without a Spark job.
-    The ledger append is the commit point and comes after the dictionary
-    swap, the ts_index append and the sink writes, so an unchanged
-    version means nothing has committed since the state was built; any
-    other version (another pipeline committed an epoch, or the root was
-    removed and re-ingested) drops all of it. Global dictionaries are
-    swapped before the commit, so their file names are part of the
-    version too: an ingest that crashed after the swap must not leave an
-    open dictionary pointing at deleted files. Ingest always reads the
+    The ledger file is the commit point and comes after the dictionary
+    swap and the sink writes, so an unchanged version means nothing has
+    committed since the state was built; any other version (another
+    pipeline committed an epoch, or the root was removed and re-ingested)
+    drops all of it. Global dictionaries are swapped before the commit,
+    so their file names are part of the version too: an ingest that
+    crashed after the swap must not leave an open dictionary pointing at
+    deleted files. Ingest always reads the
     dictionaries it grows afresh.
 
-    Jobs per epoch: a single-epoch ingest launches 23 Spark jobs
+    Commit record: each committed sub-epoch has one ledger row, its only
+    metadata record (CLP keeps one metadata row per archive): the row
+    counts, dictionary sizes and wall time, the epoch's overall time span,
+    the per-pattern ``spans`` and the pipeline's ``tags``. The driver
+    writes it with pyarrow as its own file,
+    ``ledger/p{partition_id}-s{sub_epoch}.parquet``, through a temp file
+    and a rename, so a commit is one file that exists or does not, and no
+    two writers share a file: concurrent epochs need no lock. The rows
+    are read on the driver (``_read_meta``) once per archive version;
+    ``done_partitions``, the epoch spans, the tag filter and ``metrics``
+    launch no Spark job.
+
+    Jobs per epoch: a single-epoch ingest launches 21 Spark jobs
     (measured on a 2k-turn input, also when the session ingested the
     same input before, since no parse outlives its epoch): one
     aggregation over the parse (three jobs, the first read of the
     persisted parse) for the ledger row count and the per-pattern
-    ts_index spans, the logtype dictionary's bounded collect,
-    the broadcasts of the role/tool dimensions and the logtype
-    dictionary, the count that pins the enriched rows, the three sink
-    writes (route.write_sinks: AQE sizes their files, one per partition
-    value on a 10k-turn epoch), the two dictionary saves, and the
-    ts_index and ledger appends. Every table built on the driver is an
+    spans, the logtype dictionary's bounded collect, the broadcasts of
+    the role/tool dimensions and the logtype dictionary, the count that
+    pins the enriched rows, the three sink writes (route.write_sinks:
+    AQE sizes their files, one per partition value on a 10k-turn epoch)
+    and the two dictionary saves. Every table built on the driver is an
     Arrow local relation (session.local_table), so none of them starts a
-    Python worker, and the ledger and ts_index checks (``done_partitions``,
-    the epoch spans) read those tables on the driver, without a job.
+    Python worker.
 
     Persists: each has one owner, which releases it in a ``finally``, so
     a failed epoch leaves nothing pinned either. ``_run_partition`` owns
@@ -209,10 +226,7 @@ class IngestPipeline:
         # analog of `clp ... --tags` archive tagging; search prunes by
         # them BEFORE dispatch (scheduler/query/query_scheduler.py:381-386)
         self.tags = list(tags) if tags else []
-        self._meta_lock = threading.Lock()  # serializes ledger/ts_index appends
         self.ledger_path = f"{work_root}/ledger"
-        self.tags_path = f"{work_root}/tags"
-        self.ts_index_path = f"{work_root}/ts_index"
         self.dicts_path = f"{work_root}/dicts"
         self.sinks_root = f"{work_root}/sinks"
         self.glt_root = f"{work_root}/glt"
@@ -272,13 +286,16 @@ class IngestPipeline:
             return local_table(self.spark, [], LEDGER_SCHEMA)
         return self.spark.read.schema(LEDGER_SCHEMA).parquet(self.ledger_path)
 
+    def _ledger_rows(self) -> list[dict]:
+        """The ledger rows (``_read_meta``), read once per archive version."""
+        return self._opened(("ledger",), lambda: _read_meta(self.ledger_path))
+
     def done_partitions(self) -> set[int]:
         """Partitions whose EVERY sub-epoch committed: a partition split
-        into n_subs sub-epochs is done iff all n_subs ledger rows exist.
-        Read on the driver (``_read_meta``), with no Spark job."""
+        into n_subs sub-epochs is done iff all n_subs ledger rows exist."""
         n: dict[int, int] = {}
         want: dict[int, int] = {}
-        for r in _read_meta(self.ledger_path, ["partition_id", "n_subs"]) or []:
+        for r in self._ledger_rows():
             p = r["partition_id"]
             n[p] = n.get(p, 0) + 1
             want[p] = max(want.get(p, 1), r["n_subs"] or 1)
@@ -292,56 +309,37 @@ class IngestPipeline:
         the dict delta yields a smaller n_subs and a *different*
         pmod(xxhash64, n_subs) split — rows would be duplicated into new
         epoch_parts or silently dropped."""
-        rows = [
-            r
-            for r in _read_meta(self.ledger_path, ["partition_id", "sub_epoch", "n_subs"]) or []
-            if r["partition_id"] == partition_id
-        ]
+        rows = [r for r in self._ledger_rows() if r["partition_id"] == partition_id]
         subs = {r["sub_epoch"] for r in rows}
         return subs, (max(r["n_subs"] for r in rows) if rows else None)
 
+    def _commit_file(self, partition_id: int, sub_epoch: int) -> str:
+        return f"{self.ledger_path}/p{partition_id}-s{sub_epoch}.parquet"
+
     def _append_ledger(self, row: dict) -> None:
-        with self._meta_lock:
-            if self.tags:
-                # one row per (epoch, tag) — CLP stamps tags into the
-                # archive metadata at compression time (`--tags`,
-                # clp_package tags table). Tags write BEFORE the ledger
-                # row: a crash between the two leaves an orphan tag row
-                # for an uncommitted epoch, which is harmless (search
-                # intersects tagged_epochs with the ledger-committed
-                # set, and the re-run re-appends the same rows —
-                # tagged_epochs reads a distinct set). The opposite
-                # order would commit a resumable epoch that permanently
-                # LACKS its tags, silently excluding its data from
-                # every tagged search.
-                ep = row["partition_id"] + row["sub_epoch"] * self.num_partitions
-                local_table(
-                    self.spark, [(ep, t) for t in self.tags], "epoch_part int, tag string"
-                ).write.mode("append").parquet(self.tags_path)
-            local_table(self.spark, [row], LEDGER_SCHEMA).write.mode("append").parquet(
-                self.ledger_path
-            )
+        """Commit a sub-epoch: write its ledger row as its own file. The
+        row goes to a ``.``-prefixed temp file (which no reader lists)
+        and is renamed into place, so a crash leaves no partial commit."""
+        import pyarrow.parquet as pq
+
+        path = self._commit_file(row["partition_id"], row["sub_epoch"])
+        tmp = os.path.join(self.ledger_path, "." + os.path.basename(path))
+        os.makedirs(self.ledger_path, exist_ok=True)
+        pq.write_table(arrow_table([row], StructType.fromDDL(LEDGER_SCHEMA)), tmp)
+        os.replace(tmp, path)
 
     def tagged_epochs(self, tags: list[str]) -> set[int]:
         """Epoch ids carrying ANY of ``tags`` — the schedule-time tag
         filter (scheduler/query/query_scheduler.py:381-386 joins the
-        requested tag ids against archive_tags before dispatch). A work
-        dir with no tags file matches nothing, like an untagged archive
-        set queried with --tags."""
-        try:
-            rows = (
-                self.spark.read.parquet(self.tags_path)
-                .filter(F.col("tag").isin(list(tags)))
-                .select("epoch_part")
-                .distinct()
-                .collect()
-            )
-        except AnalysisException:  # no tags ever written (path missing);
-            # real read errors (corrupt footer, permissions) propagate —
-            # swallowing them would silently turn a tagged search into
-            # zero results
-            return set()
-        return {r["epoch_part"] for r in rows}
+        requested tag ids against archive_tags before dispatch). An
+        untagged epoch matches nothing, like an untagged archive set
+        queried with --tags."""
+        want = set(tags)
+        return {
+            r["partition_id"] + r["sub_epoch"] * self.num_partitions
+            for r in self._ledger_rows()
+            if want.intersection(r["tags"] or ())
+        }
 
     # -- dictionaries ------------------------------------------------------
 
@@ -424,12 +422,12 @@ class IngestPipeline:
         ``partition_id=batch_id, sub_epoch=0``, so its ``epoch_part`` is
         ``batch_id`` (the ``foreachBatch`` handler of
         streaming.stream_pipeline.route_stream, whose pipeline has no
-        ``dict_budget``). A batch the ledger already holds is skipped: the
-        stream checkpoint replays its last batch when a crash fell between
-        the ledger commit and the checkpoint's own. A batch that crashed
-        before its ledger commit runs again over its idempotent sink
-        overwrite."""
-        if batch_id in self.done_partitions() or batch_df.isEmpty():
+        ``dict_budget``). A batch whose own commit file exists is skipped:
+        the stream checkpoint replays its last batch when a crash fell
+        between the ledger commit and the checkpoint's own. A batch that
+        crashed before its ledger commit runs again over its idempotent
+        sink overwrite."""
+        if os.path.exists(self._commit_file(batch_id, 0)) or batch_df.isEmpty():
             return
         self._run_partition(batch_df, batch_id)
 
@@ -450,7 +448,7 @@ class IngestPipeline:
         )
         # ONE tokenize pass per partition, pinned and released here: the
         # dictionary delta, every sub-epoch's encode and its row-count /
-        # ts_index aggregation read it. The raw text is never read again
+        # span aggregation read it. The raw text is never read again
         # (decode reconstructs it), so it leaves before the persist.
         parsed = encode_pipeline.parse(part_df).drop("text").persist()
         try:
@@ -499,13 +497,13 @@ class IngestPipeline:
             lt_existing = self._load_dict("logtype")
             var_existing = self._load_dict("var")
 
-        # per-pattern timestamp index (clp_s timestamp dictionary:
+        # per-pattern time spans (clp_s timestamp dictionary:
         # TimestampEntry.hpp:58-95 keeps min/max PER PATTERN; queries are
         # proven false pattern-by-pattern, EvaluateTimestampIndex.cpp).
         # Inputs without a pattern_id column index as one pattern (-1).
         # The same one aggregation gives the ledger's row count and span.
-        # Timestamps leave Spark as unix_micros, so the driver-built rows
-        # carry them exactly whatever the Python process's time zone.
+        # Timestamps leave Spark as unix_micros, so the driver-built row
+        # carries them exactly whatever the Python process's time zone.
         pat_col = (
             F.col("pattern_id").cast("int")
             if "pattern_id" in parsed.columns
@@ -523,15 +521,6 @@ class IngestPipeline:
         n_input = sum(r["n"] for r in pat_rows)
         mins = [r["mn"] for r in pat_rows if r["mn"] is not None]
         maxs = [r["mx"] for r in pat_rows if r["mx"] is not None]
-        with self._meta_lock:
-            local_table(
-                self.spark,
-                [
-                    (partition_id, sub_epoch, r["pattern_id"], _utc(r["mn"]), _utc(r["mx"]))
-                    for r in pat_rows
-                ],
-                TS_INDEX_SCHEMA,
-            ).write.mode("append").parquet(self.ts_index_path)
 
         pinned: list[DataFrame] = []  # released last-first, on failure too
         try:
@@ -593,18 +582,19 @@ class IngestPipeline:
                 "input_min_ts": _utc(min(mins, default=None)),
                 "input_max_ts": _utc(max(maxs, default=None)),
                 "finished_at": time.time(),
+                "spans": [
+                    {
+                        "pattern_id": r["pattern_id"],
+                        "min_ts": _utc(r["mn"]),
+                        "max_ts": _utc(r["mx"]),
+                    }
+                    for r in pat_rows
+                ],
+                "tags": self.tags,
             }
         )
 
     # -- query-time pruning + search ----------------------------------------
-
-    def ts_index(self) -> DataFrame | None:
-        """(partition_id, sub_epoch, pattern_id, min_ts, max_ts) — the
-        timestamp dictionary (one span per pattern per epoch), None for
-        work dirs written before the index existed."""
-        if not os.path.exists(self.ts_index_path):  # legacy work dir / nothing ingested
-            return None
-        return self.spark.read.schema(TS_INDEX_SCHEMA).parquet(self.ts_index_path)
 
     def epochs_for_range(
         self, ts_begin_ms: int | None = None, ts_end_ms: int | None = None
@@ -615,10 +605,10 @@ class IngestPipeline:
         patterns' spans skips the epoch even though it overlaps the union
         span — clp_s EvaluateTimestampIndex over the timestamp dictionary
         (clp_s/TimestampEntry.hpp:58-95). Falls back to the ledger's
-        epoch-level span for legacy work dirs; CLP's scheduler analog:
-        job_orchestration/.../query_scheduler.py:369-397."""
+        epoch-level span for epochs of older archives; CLP's scheduler
+        analog: job_orchestration/.../query_scheduler.py:369-397."""
         out = []
-        for ep, mn, mx in self._opened(("epoch_spans",), self._epoch_spans):
+        for ep, mn, mx in self._epoch_spans():
             # an epoch survives if ANY of its pattern spans overlaps
             if ts_end_ms is not None and mn is not None and mn > ts_end_ms:
                 continue
@@ -629,32 +619,17 @@ class IngestPipeline:
 
     def _epoch_spans(self) -> list[tuple[int, int | None, int | None]]:
         """(epoch_part, min ms, max ms) per timestamp pattern of every
-        committed epoch — what ``epochs_for_range`` filters. Read on the
-        driver (``_read_meta``), with no Spark job."""
-        keys = ["partition_id", "sub_epoch"]
-        ledger_rows = [
-            (r["partition_id"], r["sub_epoch"], r["input_min_ts"], r["input_max_ts"])
-            for r in _read_meta(self.ledger_path, keys + ["input_min_ts", "input_max_ts"])
-            or []
-        ]
-        idx = _read_meta(self.ts_index_path, keys + ["min_ts", "max_ts"])
-        rows = ledger_rows
-        if idx is not None:
-            # only COMMITTED sub-epochs count: a crash between the index
-            # append and the ledger commit leaves orphan index rows whose
-            # sink directories don't exist (the re-run rewrites both)
-            committed = {r[:2] for r in ledger_rows}
-            rows = [
-                (r["partition_id"], r["sub_epoch"], r["min_ts"], r["max_ts"])
-                for r in idx
-                if (r["partition_id"], r["sub_epoch"]) in committed
-            ]
-            # committed epochs WITHOUT index rows (work dirs written before
-            # the per-pattern index existed, then resumed) must not vanish
-            # from search: fall back to their coarse ledger span
-            indexed = {r[:2] for r in rows}
-            rows.extend(r for r in ledger_rows if r[:2] not in indexed)
-        return [(p + sub * self.num_partitions, mn, mx) for p, sub, mn, mx in rows]
+        committed epoch — what ``epochs_for_range`` filters. A ledger row
+        of an older archive has no ``spans``: its epoch keeps its coarse
+        ledger span, so it does not vanish from search."""
+        out = []
+        for r in self._ledger_rows():
+            ep = r["partition_id"] + r["sub_epoch"] * self.num_partitions
+            if r["spans"] is None:
+                out.append((ep, r["input_min_ts"], r["input_max_ts"]))
+            else:
+                out.extend((ep, s["min_ts"], s["max_ts"]) for s in r["spans"])
+        return out
 
     def read_sink(
         self, kind: str = "role", epochs: list[int] | None = None
@@ -694,52 +669,51 @@ class IngestPipeline:
         if tags:
             tagged = self.tagged_epochs(tags)
             epochs = [e for e in epochs if e in tagged]
-        if self.dict_scope == "epoch":
-            # one search task per archive, each against ITS dictionaries
-            # (CLP's query scheduler fans a query out per archive); the
-            # per-epoch hit sets union — epochs partition the rows, so no
-            # dedup is needed. Compilation does per-archive dictionary
-            # probes (driver-coordinated jobs); with max_concurrent > 1
-            # they run through a thread pool so a 1000-archive search
-            # doesn't serialize 1000 probe rounds.
-            def _one(e: int) -> DataFrame | None:
-                # distinct pool per archive probe thread (FAIR shares
-                # between pools, not within one — see _run_partition)
+        # global scope: one unit, the dictionary pair over every selected
+        # epoch; epoch scope: one search task per archive, each against
+        # ITS dictionaries (CLP's query scheduler fans a query out per
+        # archive), whose hit sets union without dedup since epochs
+        # partition the rows. Compilation does per-archive dictionary
+        # probes; with max_concurrent > 1 they run through a thread pool
+        # so a 1000-archive search doesn't serialize 1000 probe rounds.
+        units = (
+            [(None, epochs)] if self.dict_scope == "global" else [(e, [e]) for e in epochs]
+        )
+
+        def _one(unit: tuple) -> DataFrame | None:
+            e, eps = unit
+            if self.max_concurrent > 1:
+                # a pool per archive probe thread (FAIR shares between
+                # pools, not within one — see _run_partition)
                 self.spark.sparkContext.setLocalProperty(
                     "spark.scheduler.pool", f"search-epoch-{e}"
                 )
-                lt, vd = self._dict("logtype", e), self._dict("var", e)
-                if lt is None or vd is None:
-                    return None
-                return search_op.search_text(
-                    self.read_sink(kind, epochs=[e]), lt, vd, query,
-                    ["conv_id", "turn_idx"], ignore_case=ignore_case,
-                    ts_begin_ms=ts_begin_ms, ts_end_ms=ts_end_ms, **kw,
-                )
+            lt, vd = self._dict("logtype", e), self._dict("var", e)
+            if lt is None or vd is None:
+                return None
+            return search_op.search_text(
+                self.read_sink(kind, epochs=eps), lt, vd, query,
+                ["conv_id", "turn_idx"], ignore_case=ignore_case,
+                ts_begin_ms=ts_begin_ms, ts_end_ms=ts_end_ms, **kw,
+            )
 
-            if self.max_concurrent > 1:
-                from concurrent.futures import ThreadPoolExecutor
+        if self.max_concurrent > 1:
+            from concurrent.futures import ThreadPoolExecutor
 
-                with ThreadPoolExecutor(self.max_concurrent) as pool:
-                    outs = [d for d in pool.map(_one, epochs) if d is not None]
-            else:
-                outs = [d for d in map(_one, epochs) if d is not None]
-            if not outs:
-                return (
-                    self.read_sink(kind, epochs=[])
-                    .select("conv_id", "turn_idx")
-                    .where(F.lit(False))
-                )
-            df = outs[0]
-            for o in outs[1:]:
-                df = df.unionByName(o, allowMissingColumns=True)
-            return df
-        return search_op.search_text(
-            self.read_sink(kind, epochs=epochs),
-            self._dict("logtype"), self._dict("var"), query,
-            ["conv_id", "turn_idx"], ignore_case=ignore_case,
-            ts_begin_ms=ts_begin_ms, ts_end_ms=ts_end_ms, **kw,
-        )
+            with ThreadPoolExecutor(self.max_concurrent) as pool:
+                outs = [d for d in pool.map(_one, units) if d is not None]
+        else:
+            outs = [d for d in map(_one, units) if d is not None]
+        if not outs:
+            return (
+                self.read_sink(kind, epochs=[])
+                .select("conv_id", "turn_idx")
+                .where(F.lit(False))
+            )
+        df = outs[0]
+        for o in outs[1:]:
+            df = df.unionByName(o, allowMissingColumns=True)
+        return df
 
     def count_by_time(
         self,
@@ -799,7 +773,7 @@ class IngestPipeline:
     # -- metrics -------------------------------------------------------------
 
     def metrics(self) -> dict:
-        rows = self.ledger().collect()
+        rows = self._ledger_rows()
         total_rows = sum(r["n_rows"] for r in rows)
         total_wall = sum(r["wall_sec"] for r in rows)
         return {

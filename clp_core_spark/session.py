@@ -13,8 +13,9 @@ share the same tuning:
   (components/core/src/clp/streaming_compression/zstd/).
 
 :func:`local_table` is the one way product code turns driver-held rows
-into a DataFrame, and :func:`job_description` names the Spark jobs a
-block of product code launches.
+into a DataFrame, through :func:`arrow_table`, which also builds the
+ingest ledger's commit rows; :func:`job_description` names the Spark
+jobs a block of product code launches.
 """
 
 from __future__ import annotations
@@ -94,9 +95,17 @@ def local_table(spark: SparkSession, data, schema: str | StructType) -> DataFram
     a ``LocalTableScan``, so reading it needs no Python worker and no
     Spark job of its own. (``createDataFrame`` of a Python list plans a
     ``Scan ExistingRDD`` instead: a Python-worker job every time it is
-    read.) ``data`` is a pyarrow Table of ``schema``'s columns in its
-    order, a pandas DataFrame holding ``schema``'s columns, or a list of
-    rows: tuples in ``schema``'s column order, or dicts.
+    read.) ``data`` is what :func:`arrow_table` takes."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    return spark.createDataFrame(arrow_table(data, schema), schema)
+
+
+def arrow_table(data, schema: StructType):
+    """``data`` as a pyarrow Table of ``schema``: ``data`` is a pyarrow
+    Table of ``schema``'s columns in its order, a pandas DataFrame holding
+    ``schema``'s columns, or a list of rows: tuples in ``schema``'s column
+    order, or dicts.
 
     Timestamp values must be timezone-aware: Arrow reads a naive
     datetime as a wall-clock time in the session zone, while ``collect``
@@ -108,22 +117,18 @@ def local_table(spark: SparkSession, data, schema: str | StructType) -> DataFram
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    if isinstance(schema, str):
-        schema = StructType.fromDDL(schema)
     arrow_schema = to_arrow_schema(schema)
     if isinstance(data, pa.Table):
-        table = data.cast(arrow_schema)
-    elif isinstance(data, pd.DataFrame):
-        table = pa.Table.from_pandas(
+        return data.cast(arrow_schema)
+    if isinstance(data, pd.DataFrame):
+        return pa.Table.from_pandas(
             data[schema.names], schema=arrow_schema, preserve_index=False
         )
-    else:
-        rows = [r if isinstance(r, dict) else dict(zip(schema.names, r)) for r in data]
-        ts_cols = [f.name for f in schema.fields if isinstance(f.dataType, TimestampType)]
-        if any(r[c] is not None and r[c].tzinfo is None for r in rows for c in ts_cols):
-            raise ValueError("local_table: naive datetime in a timestamp column")
-        table = pa.Table.from_pylist(rows, schema=arrow_schema)
-    return spark.createDataFrame(table, schema)
+    rows = [r if isinstance(r, dict) else dict(zip(schema.names, r)) for r in data]
+    ts_cols = [f.name for f in schema.fields if isinstance(f.dataType, TimestampType)]
+    if any(r[c] is not None and r[c].tzinfo is None for r in rows for c in ts_cols):
+        raise ValueError("naive datetime in a timestamp column")
+    return pa.Table.from_pylist(rows, schema=arrow_schema)
 
 
 @contextmanager

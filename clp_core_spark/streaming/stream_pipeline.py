@@ -8,12 +8,14 @@ equivalent is a file/Kafka stream of turns processed in micro-batches:
 
 - ``route_stream``: foreachBatch commits each micro-batch as one epoch
   of an ``IngestPipeline`` archive (``IngestPipeline.commit_batch``), the
-  batch ingest's own code: the three sinks, the ts_index, the
-  dictionaries growing across batches (CLP's dictionaries are
-  append-only across an archive's lifetime too) and a ledger row. The
-  ledger makes a batch exactly-once: the stream checkpoint replays an
-  uncommitted batch, and a batch the ledger holds is skipped. The
-  archive is searchable through ``IngestPipeline(spark, work_root)``.
+  batch ingest's own code: the three sinks, the dictionaries growing
+  across batches (CLP's dictionaries are append-only across an
+  archive's lifetime too) and a ledger row with the batch's per-pattern
+  time spans, written as the batch's own commit file. The commit file
+  makes a batch exactly-once: the stream checkpoint replays an
+  uncommitted batch, and a batch whose commit file exists is skipped,
+  without reading any other batch's. The archive is searchable through
+  ``IngestPipeline(spark, work_root)``.
 - ``count_by_time_stream``: CLP's count-by-time bucketing
   (clp/clo/OutputHandler.hpp:269-271) as a watermarked tumbling window —
   late turns beyond the watermark are dropped, matching the reducer's

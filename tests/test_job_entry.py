@@ -260,12 +260,12 @@ def test_job_cli_tags_prune_search(tmp_path, spark):
     search_out = [x for x in lines if "query" in x][-1]
     rows_total = [x for x in lines if "rows" in x][-1]["rows"]
     assert search_out["matches"] == rows_total  # '*' matches every turn
-    assert os.path.isdir(f"{work}/tags")
 
     # in-process: a tag never stamped matches nothing; a stamped one all
     from clp_core_spark.plans.pipeline import IngestPipeline
 
     pipe = IngestPipeline(spark, work, num_partitions=2)
+    assert {tuple(r["tags"]) for r in pipe.ledger().collect()} == {("prod", "us-east")}
     assert pipe.search("*", tags=["staging"]).count() == 0
     assert pipe.search("*", tags=["us-east"]).count() == rows_total
 
@@ -295,8 +295,8 @@ def test_json_search_releases_caches(tmp_path, spark):
 
 
 def test_tagged_epochs_corrupt_table_propagates(tmp_path, spark):
-    """A missing tags table means 'untagged archive set' (matches
-    nothing), but a CORRUPT tags table must raise — swallowing the read
+    """A missing ledger means 'untagged archive set' (matches
+    nothing), but a CORRUPT ledger file must raise — swallowing the read
     error would silently report 0 matches for a tagged search."""
     import pytest
 
@@ -306,10 +306,9 @@ def test_tagged_epochs_corrupt_table_propagates(tmp_path, spark):
     pipe = IngestPipeline(spark, work, num_partitions=2)
     assert pipe.tagged_epochs(["prod"]) == set()  # no tags ever written
 
-    os.makedirs(f"{work}/tags", exist_ok=True)
-    with open(f"{work}/tags/part-00000.parquet", "wb") as f:
+    os.makedirs(f"{work}/ledger", exist_ok=True)
+    with open(f"{work}/ledger/p0-s0.parquet", "wb") as f:
         f.write(b"this is not a parquet file")
-    # a corrupt footer surfaces as a Py4J/Spark read error, not the
-    # AnalysisException the missing-path case maps to set()
+    # a corrupt footer surfaces as a read error, not as "no tags"
     with pytest.raises(Exception, match="FOOTER|footer|Parquet"):
         pipe.tagged_epochs(["prod"])

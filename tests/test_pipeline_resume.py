@@ -14,6 +14,27 @@ def work_root(tmp_path):
     return str(tmp_path / "work")
 
 
+def _spans(pipe: IngestPipeline):
+    """The per-pattern spans of the ledger rows, one row each:
+    (partition_id, sub_epoch, pattern_id, min_ts, max_ts)."""
+    return pipe.ledger().select(
+        "partition_id", "sub_epoch", F.explode("spans").alias("s")
+    ).select("partition_id", "sub_epoch", "s.*")
+
+
+def _make_legacy(spark, pipe: IngestPipeline, partition_id: int) -> None:
+    """Rewrite a partition's ledger rows the way an older archive holds
+    them: appended by Spark, with no spans or tags column."""
+    import glob
+    import os
+
+    files = glob.glob(f"{pipe.ledger_path}/p{partition_id}-s*.parquet")
+    old = spark.read.parquet(*files).drop("spans", "tags").localCheckpoint()
+    for f in files:
+        os.remove(f)
+    old.write.mode("append").parquet(pipe.ledger_path)
+
+
 @pytest.fixture(scope="module")
 def input_df(spark):
     return generate_transcripts(spark, num_turns=3000, seed=42).persist()
@@ -296,7 +317,7 @@ def test_per_pattern_ts_index_prunes_gaps(spark, work_root):
 
     idx = {
         r["pattern_id"]: (r["min_ts"], r["max_ts"])
-        for r in pipe.ts_index().collect()
+        for r in _spans(pipe).collect()
     }
     assert set(idx) == {3, 7}
     gap_lo = ms(idx[3][1]) + 10_000
@@ -386,20 +407,15 @@ def test_routed_rows_match_input(spark, input_df, work_root):
 
 
 def test_legacy_epochs_without_ts_index_stay_searchable(spark, input_df, work_root):
-    """A work dir whose early epochs predate the per-pattern timestamp
-    index (ledger rows only) must keep those epochs searchable via the
-    coarse ledger span when NEWER epochs have index rows."""
-    import shutil
-
+    """A work dir whose early epochs predate the per-pattern spans (ledger
+    rows without them) must keep those epochs searchable via the coarse
+    ledger span when NEWER epochs have spans."""
     pipe = IngestPipeline(spark, work_root, num_partitions=2)
     pipe.run(input_df, partitions=[0])
-    # simulate a pre-index work dir for partition 0
-    shutil.rmtree(f"{work_root}/ts_index")
-    pipe.run(input_df)  # partition 1 writes index rows; 0 has none
+    _make_legacy(spark, pipe, 0)  # an older archive's row for partition 0
+    pipe.run(input_df)  # partition 1 writes spans; 0 has none
 
-    idx = pipe.ts_index()
-    assert idx is not None
-    assert {r["partition_id"] for r in idx.collect()} == {1}
+    assert {r["partition_id"] for r in _spans(pipe).collect()} == {1}
     # both epochs must still be selectable (0 via the ledger fallback)
     assert pipe.epochs_for_range() == [0, 1]
     assert pipe.search("heartbeat").count() > 0
@@ -554,9 +570,8 @@ def _sql_runs(spark) -> list:
 
 
 def test_ingest_plans_no_python_rdd_scan(spark, small_df, work_root):
-    """Every table a fresh tagged ingest builds on the driver (ledger,
-    ts_index and tag rows, role/tool dims, logtype dictionary) is an
-    Arrow local relation: none of its SQL executions plans a
+    """Every table a fresh tagged ingest builds on the driver (role/tool
+    dims, logtype dictionary) is an Arrow local relation: none of its SQL executions plans a
     ``Scan ExistingRDD``, the Python-worker job a list-built DataFrame
     costs."""
     last = max((i for i, _ in _sql_runs(spark)), default=-1)
@@ -626,7 +641,7 @@ def test_driver_built_tables_are_local_relations(spark, small_df, work_root):
 def test_timestamps_round_trip_in_a_non_utc_process_zone(
     spark, small_df, work_root, monkeypatch
 ):
-    """The ledger span and the per-pattern ts_index rows are built on the
+    """The ledger span and the per-pattern spans are built on the
     driver; they must hold the input's exact instants when the Python
     process runs in another zone than the session (UTC)."""
     import time
@@ -653,7 +668,7 @@ def test_timestamps_round_trip_in_a_non_utc_process_zone(
         }
         index = {
             tuple(r)
-            for r in pipe.ts_index().select(
+            for r in _spans(pipe).select(
                 "partition_id", F.unix_micros("min_ts"), F.unix_micros("max_ts")
             ).collect()
         }
@@ -665,20 +680,20 @@ def test_timestamps_round_trip_in_a_non_utc_process_zone(
 
 
 def test_fresh_ingest_spark_jobs(spark, small_df, work_root):
-    """A fresh single-epoch ingest of 2000 turns launches at most 23
+    """A fresh single-epoch ingest of 2000 turns launches at most 21
     Spark jobs. With every driver-held table built from a Python list and
     the logtype dictionary ranked through a bucket-count collect and a
     window, the same ingest took 35 (39 as the session's first ingest);
-    23 is two-thirds of 35."""
+    with the ledger and ts_index rows appended by Spark, 23."""
     scheduler = spark.sparkContext._jsc.sc().dagScheduler()
     before = int(scheduler.nextJobId())
     IngestPipeline(spark, work_root, num_partitions=1).run(small_df)
-    assert int(scheduler.nextJobId()) - before <= 23
+    assert int(scheduler.nextJobId()) - before <= 21
 
 
-def _spark_meta(pipe: IngestPipeline, ts_index: bool):
+def _spark_meta(pipe: IngestPipeline, with_spans: bool):
     """done_partitions, committed_sub_epochs and the epoch spans, computed
-    with Spark reads of the ledger and ts_index."""
+    with Spark reads of the ledger."""
     led = pipe.ledger()
     done = {
         r["partition_id"]
@@ -702,10 +717,10 @@ def _spark_meta(pipe: IngestPipeline, ts_index: bool):
             F.unix_millis("input_min_ts"), F.unix_millis("input_max_ts"),
         ).collect()
     ]
-    if ts_index:
+    if with_spans:
         spans = [
             tuple(r)
-            for r in pipe.ts_index().select(
+            for r in _spans(pipe).select(
                 "partition_id", "sub_epoch", F.unix_millis("min_ts"), F.unix_millis("max_ts")
             ).collect()
         ]
@@ -717,23 +732,26 @@ def _spark_meta(pipe: IngestPipeline, ts_index: bool):
 
 def test_archive_metadata_reads_on_the_driver(spark, small_df, work_root, monkeypatch):
     """done_partitions, committed_sub_epochs and the epoch spans read the
-    ledger and ts_index with pyarrow: no Spark job, and the same result as
-    the Spark read, on a 3-epoch archive and on a legacy one without
-    ts_index, in a process zone other than the session's (UTC)."""
+    ledger with pyarrow: no Spark job, and the same result as the Spark
+    read, on a 3-epoch archive and on a legacy one whose Spark-written
+    rows have no spans, in a process zone other than the session's (UTC)."""
     import os
-    import shutil
     import time
 
-    IngestPipeline(spark, work_root, num_partitions=3).run(small_df)
-    # Spark's own side files sit beside the data files
-    assert any(n.startswith((".", "_")) for n in os.listdir(f"{work_root}/ledger"))
+    base = IngestPipeline(spark, work_root, num_partitions=3)
+    base.run(small_df)
+    # side files like Spark's own sit beside the data files
+    for side in ("_SUCCESS", "._SUCCESS.crc"):
+        with open(f"{work_root}/ledger/{side}", "w") as f:
+            f.write("not parquet")
     scheduler = spark.sparkContext._jsc.sc().dagScheduler()
     monkeypatch.setenv("TZ", "IST-05:30")
     time.tzset()
     try:
         for legacy in (False, True):
             if legacy:
-                shutil.rmtree(f"{work_root}/ts_index")
+                for p in range(3):
+                    _make_legacy(spark, base, p)
             pipe = IngestPipeline(spark, work_root, num_partitions=3)
             before = int(scheduler.nextJobId())
             got = (
@@ -742,9 +760,68 @@ def test_archive_metadata_reads_on_the_driver(spark, small_df, work_root, monkey
                 sorted(pipe._epoch_spans()),
             )
             assert int(scheduler.nextJobId()) == before
-            want = _spark_meta(pipe, ts_index=not legacy)
+            want = _spark_meta(pipe, with_spans=not legacy)
             assert got == want
             assert got[0] == {0, 1, 2} and len(got[2]) == 3
     finally:
         monkeypatch.undo()
         time.tzset()
+
+
+def test_one_commit_file_per_sub_epoch(spark, input_df, work_root):
+    """A tagged, dict-budget-split ingest writes each committed sub-epoch's
+    metadata, spans and tags included, as one ledger file and nothing
+    else; a tagged search on the opened archive reads the tags from the
+    ledger rows it already holds, so it launches no more Spark jobs than
+    the same untagged search."""
+    import os
+
+    pipe = IngestPipeline(spark, work_root, num_partitions=2, dict_budget=200, tags=["t"])
+    pipe.run(input_df)
+    rows = pipe.ledger().collect()
+    assert len(rows) > 2, "fixture must force a sub-epoch split"
+    assert not os.path.exists(f"{work_root}/ts_index")
+    assert not os.path.exists(f"{work_root}/tags")
+    assert sorted(os.listdir(pipe.ledger_path)) == sorted(
+        f"p{r['partition_id']}-s{r['sub_epoch']}.parquet" for r in rows
+    )
+    assert all(r["tags"] == ["t"] and r["spans"] for r in rows)
+
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    pipe.search("heartbeat").count()  # opens the archive
+
+    def jobs(**kw):
+        before = int(scheduler.nextJobId())
+        n = pipe.search("heartbeat", **kw).count()
+        return int(scheduler.nextJobId()) - before, n
+
+    untagged, tagged = jobs(), jobs(tags=["t"])
+    assert tagged == untagged and untagged[1] > 0
+
+
+def test_commit_batch_reads_only_its_own_commit(spark, small_df, work_root, monkeypatch):
+    """A stream batch's commit check looks for its own commit file and
+    reads no other batch's: the check does not grow with the stream."""
+    import pyarrow.parquet as pq
+
+    batches = [
+        small_df.filter(F.pmod(F.xxhash64("conv_id"), F.lit(3)) == b) for b in range(3)
+    ]
+    pipe = IngestPipeline(spark, work_root, table_mode="parquet")
+    for b in range(2):
+        pipe.commit_batch(batches[b], b)
+    read = []
+    real = pq.read_table
+
+    def spy(source, *a, **kw):
+        if str(source).startswith(pipe.ledger_path):
+            read.append(str(source))
+        return real(source, *a, **kw)
+
+    monkeypatch.setattr(pq, "read_table", spy)
+    pipe.commit_batch(batches[2], 2)
+    pipe.commit_batch(batches[1], 1)  # a replayed batch: skipped
+    assert read == []
+    monkeypatch.undo()
+    assert pipe.done_partitions() == {0, 1, 2}
+    assert sum(r["n_rows"] for r in pipe.ledger().collect()) == small_df.count()

@@ -176,6 +176,8 @@ ADVERSARIAL_QUERIES = [
     "*😀 token a1*",
     "?",
     "???????",
+    "*STRASSE ? id ?*",       # '?' in a subquery with no variable
+    "*star ? and \\? marks 1*",  # escaped '?' is a literal
 ]
 
 

@@ -47,7 +47,7 @@ def test_stream_crash_before_commit_resumes_to_the_same_archive(
     """A stream that fails after its first batch's sink writes and before
     that batch's ledger commit resumes, on the same work root and
     checkpoint, to the archive of an uncrashed run: row-identical sinks,
-    one ledger row and ts_index rows per batch, and a search through
+    one ledger row with its spans per batch, and a search through
     IngestPipeline equal to a naive scan of the input."""
     from clp_core_spark.functions.wildcard import wildcard_to_regex
     from clp_core_spark.operators import route
@@ -83,7 +83,10 @@ def test_stream_crash_before_commit_resumes_to_the_same_archive(
         assert want.count() == got.count() == n, kind
         assert got.exceptAll(want).count() == 0, kind
     assert sorted(r["partition_id"] for r in pipe.ledger().collect()) == [0, 1]
-    assert {r["partition_id"] for r in pipe.ts_index().collect()} == {0, 1}
+    assert {
+        r["partition_id"]
+        for r in pipe.ledger().select("partition_id", F.explode("spans")).collect()
+    } == {0, 1}
     hits = {(r["conv_id"], r["turn_idx"]) for r in pipe.search("heartbeat").collect()}
     naive = {
         (r["conv_id"], r["turn_idx"])
