@@ -71,23 +71,22 @@ def _ms(ts: datetime | None) -> int | None:
     return (ts - _UNIX_EPOCH) // timedelta(milliseconds=1)
 
 
-def _read_meta(path: str) -> list[dict]:
-    """The rows of the ledger under ``path`` (none when it does not
-    exist), as dicts keyed by column name. They are read with pyarrow on
-    the driver, so no Spark job runs: the store is local-fs, as for
-    ``_version`` and dictstore, and the ledger holds one row per
-    sub-epoch. Files named ``_*`` or ``.*`` (``_SUCCESS``, checksums, a
-    commit's temp file) are not data, as for Spark's reader.
-    Timestamps, top-level and in ``spans``, come back as ms (``_ms``).
-    ``spans`` and ``tags``, which the ledger files of older archives
-    lack, read as None."""
+def _read_meta(path: str, prefix: str = "") -> list[dict]:
+    """The rows of the ledger files under ``path`` whose names start with
+    ``prefix`` (none when it does not exist), as dicts keyed by column
+    name, read with pyarrow on the driver: no Spark job runs (the store is
+    local-fs, as for ``_version`` and dictstore). Files named ``_*`` or
+    ``.*`` (``_SUCCESS``, checksums, a commit's temp file) are not data,
+    as for Spark's reader. Timestamps, top-level and in ``spans``, come
+    back as ms (``_ms``); ``spans`` and ``tags``, which the ledger files
+    of older archives lack, read as None."""
     import pyarrow.parquet as pq
 
     if not os.path.exists(path):
         return []
     rows: list[dict] = []
     for name in sorted(os.listdir(path)):
-        if name.startswith(("_", ".")):
+        if name.startswith(("_", ".")) or not name.startswith(prefix):
             continue
         t = pq.read_table(os.path.join(path, name), coerce_int96_timestamp_unit="us")
         for r in t.to_pylist():
@@ -116,14 +115,15 @@ class IngestPipeline:
     (operators.dictionaries.driver_copy, kept on those objects) are
     collected and broadcast once and reused across requests.
 
-    Version: the open state belongs to one archive version, the sorted
-    file names under ``{work_root}/ledger``, read without a Spark job.
-    The ledger file is the commit point and comes after the dictionary
+    Version: the open state belongs to one archive version, the files
+    under ``{work_root}/ledger`` by name, inode and mtime (a re-ingest
+    writes commit files of the same names, but each is a new file). The
+    ledger file is the commit point and comes after the dictionary
     swap and the sink writes, so an unchanged version means nothing has
     committed since the state was built; any other version (another
     pipeline committed an epoch, or the root was removed and re-ingested)
     drops all of it. Global dictionaries are swapped before the commit,
-    so their file names are part of the version too: an ingest that
+    so their files are part of the version too: an ingest that
     crashed after the swap must not leave an open dictionary pointing at
     deleted files. Ingest always reads the
     dictionaries it grows afresh.
@@ -240,15 +240,20 @@ class IngestPipeline:
     # -- archive open --------------------------------------------------------
 
     def _version(self) -> tuple:
-        """The archive version: file names of the ledger (and of the
-        global dictionaries), listed without a Spark job."""
+        """The archive version: (name, inode, mtime) of each data file of
+        the ledger (and of the global dictionaries), listed without a
+        Spark job."""
         dirs = [self.ledger_path]
         if self.dict_scope == "global":
             dirs += [f"{self.dicts_path}/logtype", f"{self.dicts_path}/var"]
         out = []
         for d in dirs:
             try:
-                out.append(tuple(sorted(os.listdir(d))))
+                with os.scandir(d) as it:
+                    out.append(tuple(sorted(
+                        (f.name, f.inode(), f.stat().st_mtime_ns)
+                        for f in it if not f.name.startswith(("_", "."))
+                    )))
             except FileNotFoundError:  # nothing committed / mid-swap
                 out.append(())
         return tuple(out)
@@ -325,7 +330,8 @@ class IngestPipeline:
         path = self._commit_file(row["partition_id"], row["sub_epoch"])
         tmp = os.path.join(self.ledger_path, "." + os.path.basename(path))
         os.makedirs(self.ledger_path, exist_ok=True)
-        pq.write_table(arrow_table([row], StructType.fromDDL(LEDGER_SCHEMA)), tmp)
+        table = arrow_table([row], StructType.fromDDL(LEDGER_SCHEMA))
+        pq.write_table(table, tmp, store_schema=False)  # parquet types suffice
         os.replace(tmp, path)
 
     def tagged_epochs(self, tags: list[str]) -> set[int]:
@@ -422,12 +428,18 @@ class IngestPipeline:
         ``partition_id=batch_id, sub_epoch=0``, so its ``epoch_part`` is
         ``batch_id`` (the ``foreachBatch`` handler of
         streaming.stream_pipeline.route_stream, whose pipeline has no
-        ``dict_budget``). A batch whose own commit file exists is skipped:
-        the stream checkpoint replays its last batch when a crash fell
-        between the ledger commit and the checkpoint's own. A batch that
-        crashed before its ledger commit runs again over its idempotent
-        sink overwrite."""
-        if os.path.exists(self._commit_file(batch_id, 0)) or batch_df.isEmpty():
+        ``dict_budget``). A batch whose own commit file exists is skipped
+        (in a stream begun before commit files, one whose row Spark's
+        ``part-*`` ledger files hold: a fixed set, as no commit adds to
+        them): the stream checkpoint replays its last batch when a crash
+        fell between the ledger commit and the checkpoint's own. A batch
+        that crashed before its ledger commit runs again over its
+        idempotent sink overwrite."""
+        legacy = _read_meta(self.ledger_path, "part-")
+        done = os.path.exists(self._commit_file(batch_id, 0)) or any(
+            (r["partition_id"], r["sub_epoch"]) == (batch_id, 0) for r in legacy
+        )
+        if done or batch_df.isEmpty():
             return
         self._run_partition(batch_df, batch_id)
 
@@ -669,13 +681,11 @@ class IngestPipeline:
         if tags:
             tagged = self.tagged_epochs(tags)
             epochs = [e for e in epochs if e in tagged]
-        # global scope: one unit, the dictionary pair over every selected
-        # epoch; epoch scope: one search task per archive, each against
-        # ITS dictionaries (CLP's query scheduler fans a query out per
-        # archive), whose hit sets union without dedup since epochs
-        # partition the rows. Compilation does per-archive dictionary
-        # probes; with max_concurrent > 1 they run through a thread pool
-        # so a 1000-archive search doesn't serialize 1000 probe rounds.
+        # global scope: one unit over every selected epoch; epoch scope:
+        # one per archive against ITS dictionaries (CLP's scheduler fans a
+        # query out per archive), hits unioned without dedup since epochs
+        # partition the rows; max_concurrent > 1 compiles them in threads,
+        # so 1000 archives do not serialize 1000 dictionary-probe rounds.
         units = (
             [(None, epochs)] if self.dict_scope == "global" else [(e, [e]) for e in epochs]
         )

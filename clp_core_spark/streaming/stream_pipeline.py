@@ -14,8 +14,9 @@ equivalent is a file/Kafka stream of turns processed in micro-batches:
   time spans, written as the batch's own commit file. The commit file
   makes a batch exactly-once: the stream checkpoint replays an
   uncommitted batch, and a batch whose commit file exists is skipped,
-  without reading any other batch's. The archive is searchable through
-  ``IngestPipeline(spark, work_root)``.
+  without reading any other batch's (in a stream begun before commit
+  files: whose row Spark's ledger files hold). The archive is
+  searchable through ``IngestPipeline(spark, work_root)``.
 - ``count_by_time_stream``: CLP's count-by-time bucketing
   (clp/clo/OutputHandler.hpp:269-271) as a watermarked tumbling window —
   late turns beyond the watermark are dropped, matching the reducer's

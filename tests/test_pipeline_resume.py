@@ -482,6 +482,45 @@ def test_open_archive_follows_commits_on_the_root(spark, input_df, work_root, tm
     assert "\n".join(back) == "\n".join(r["text"] for r in want)
 
 
+def test_open_epoch_archive_follows_a_reingest_of_the_root(spark, work_root, tmp_path):
+    """With epoch-scope dictionaries the version has no dictionary file
+    names, and a re-ingest of the same partitions writes commit files of
+    the same names: the version must still change, or the open state
+    (ledger rows, sinks over deleted files, the old epochs' dictionaries)
+    outlives the archive it was read from."""
+    import glob
+    import os
+    import shutil
+
+    from clp_core_spark.functions.wildcard import wildcard_to_regex
+
+    first = generate_transcripts(spark, num_turns=600, seed=3)
+    second = generate_transcripts(spark, num_turns=900, seed=11)
+    a = IngestPipeline(spark, work_root, num_partitions=2, dict_scope="epoch")
+    a.run(first)
+    assert a.search("heartbeat").count() > 0
+    a.read_sink("role")  # opens the sink a decompress reads
+
+    shutil.rmtree(work_root)
+    IngestPipeline(spark, work_root, num_partitions=2, dict_scope="epoch").run(second)
+    assert sorted(os.listdir(a.ledger_path)) == ["p0-s0.parquet", "p1-s0.parquet"]
+    assert sum(r["n_rows"] for r in a._ledger_rows()) == second.count()
+    got = {(r["conv_id"], r["turn_idx"]) for r in a.search("heartbeat").collect()}
+    assert got == {
+        (r["conv_id"], r["turn_idx"])
+        for r in second.filter(F.col("text").rlike(wildcard_to_regex("*heartbeat*")))
+        .select("conv_id", "turn_idx").collect()
+    }
+    out = str(tmp_path / "xtext")
+    a.decompress_to_text(out, partitions=2)
+    back: list[str] = []
+    for f in sorted(glob.glob(out + "/part-*")):
+        with open(f) as fh:
+            back.extend(fh.read().splitlines())
+    want = second.orderBy("conv_id", "turn_idx").select("text").collect()
+    assert "\n".join(back) == "\n".join(r["text"] for r in want)
+
+
 def test_search_on_unchanged_archive_reuses_the_open(spark, input_df, work_root):
     """Once a search has opened the archive, building the same search
     again reads no ledger, index, sink schema or dictionary: no Spark job
@@ -825,3 +864,42 @@ def test_commit_batch_reads_only_its_own_commit(spark, small_df, work_root, monk
     monkeypatch.undo()
     assert pipe.done_partitions() == {0, 1, 2}
     assert sum(r["n_rows"] for r in pipe.ledger().collect()) == small_df.count()
+
+
+def test_replay_of_an_older_stream_batch_is_skipped(spark, small_df, work_root, monkeypatch):
+    """A stream begun before commit files holds its ledger rows in
+    Spark-written part files: the checkpoint's replay of its last batch
+    is skipped by that batch's row there, not run again into a second
+    ledger row that metrics would count twice. The check reads those
+    part files only, never a commit file."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    batches = [
+        small_df.filter(F.pmod(F.xxhash64("conv_id"), F.lit(3)) == b) for b in range(3)
+    ]
+    pipe = IngestPipeline(spark, work_root, table_mode="parquet")
+    for b in range(2):
+        pipe.commit_batch(batches[b], b)
+    for b in range(2):
+        _make_legacy(spark, pipe, b)
+    legacy = sorted(n for n in os.listdir(pipe.ledger_path) if n.startswith("part-"))
+    read = []
+    real = pq.read_table
+
+    def spy(source, *a, **kw):
+        if str(source).startswith(pipe.ledger_path):
+            read.append(os.path.basename(str(source)))
+        return real(source, *a, **kw)
+
+    resumed = IngestPipeline(spark, work_root, table_mode="parquet")
+    monkeypatch.setattr(pq, "read_table", spy)
+    resumed.commit_batch(batches[1], 1)  # the replay: skipped
+    resumed.commit_batch(batches[2], 2)
+    resumed.commit_batch(batches[2], 2)  # skipped by its commit file
+    assert read == legacy * 3
+    monkeypatch.undo()
+    assert resumed.ledger().count() == 3
+    assert resumed.done_partitions() == {0, 1, 2}
+    assert resumed.metrics()["rows"] == small_df.count()
