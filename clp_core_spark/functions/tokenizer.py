@@ -35,7 +35,8 @@ PLACEHOLDER_DICT = "\x12"
 PLACEHOLDER_FLOAT = "\x13"
 ESCAPE_CHAR = "\\"
 
-# Variable type codes used in the encoded table's `var_types` arrays.
+# Variable type codes of the parse's `var_types` arrays (encode reads them
+# to assign IDs; the stored row keeps the logtype's placeholder bytes only).
 VT_INT = 0
 VT_FLOAT = 1
 VT_DICT = 2

@@ -1,4 +1,4 @@
-"""Parse -> encode stage: text -> (logtype_id, encoded_vars[], var_types[]).
+"""Parse -> encode stage: text -> (logtype_id, encoded_vars[]).
 
 Spark-first layout of CLP's ``Archive::write_msg`` path
 (clp/streaming_archive/writer/Archive.cpp:299-316 +
@@ -22,7 +22,9 @@ regroup.
 
 The encoded row keeps CLP's exact representation: ``encoded_vars[i]`` is
 the int value, the 64-bit float packing, or the var-dict ID, disambiguated
-by the placeholder sequence in the logtype (equivalently ``var_types``).
+by the placeholder sequence in the logtype, which also fixes how many
+variables the row has (CLP's message record: timestamp, logtype ID,
+variables; clp/streaming_archive/reader/File.cpp:256-267).
 """
 from __future__ import annotations
 
@@ -40,7 +42,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from clp_core_spark.functions.tokenizer import VT_DICT
+from clp_core_spark.functions.tokenizer import PLACEHOLDER_DICT, VT_DICT
 from clp_core_spark.operators import dictionaries
 
 # The parse struct: tokenizer.PARSED_FIELDS as Spark types.
@@ -52,6 +54,10 @@ PARSED_SCHEMA_SLIM = StructType(
         StructField("dict_strs", ArrayType(StringType())),
     ]
 )
+
+# One scan of a logtype: an escape pair (group 1 empty) or an unescaped
+# placeholder byte (group 1), as tokenizer._LOGTYPE_SEG_RE reads it.
+_PLACEHOLDER_RE = r"\\[\x11\x12\x13\\]|([\x11\x12\x13])"
 
 # The JVM lookup join broadcasts the dictionary side up to this many
 # entries (~tens of MB serialized), so the exploded corpus-vars relation
@@ -197,8 +203,9 @@ def encode(
     A dictionary built distributed (above its driver-copy bound) comes
     back persisted (``is_cached``); the caller releases it too.
 
-    ``encoded_df`` columns: key_cols + passthrough + logtype_id,
-    encoded_vars (array<long>), var_types (array<int>), n_vars.
+    ``encoded_df`` columns: key_cols + passthrough + logtype_id and
+    encoded_vars (array<long>), CLP's message record. No per-row type or
+    count column: the logtype's placeholders give both (:func:`decode`).
 
     var_id_mode:
     - ``"hash"`` (default, the 100 TB path): a dict var's ID is
@@ -258,13 +265,29 @@ def encode(
 
     encoded = with_ids.join(F.broadcast(logtype_dict), "logtype")
 
-    drop_cols = ["logtype", "dict_strs", "dict_ids"]
+    drop_cols = ["logtype", "var_types", "dict_strs", "dict_ids"]
     if not keep_text:
         drop_cols.append(text_col)
-    encoded = encoded.withColumn("n_vars", F.size("encoded_vars")).drop(
-        *[c for c in drop_cols if c in with_ids.columns]
-    )
+    encoded = encoded.drop(*[c for c in drop_cols if c in with_ids.columns])
     return encoded, logtype_dict, var_dict
+
+
+def _placeholders(logtype: str) -> Column:
+    """The logtype's unescaped placeholder bytes in order: one per
+    variable, its type (tokenizer.PLACEHOLDER_*)."""
+    return F.filter(
+        F.regexp_extract_all(F.col(logtype), F.lit(_PLACEHOLDER_RE), 1),
+        lambda p: p != "",
+    )
+
+
+def _dict_var_ids(encoded_vars: str, placeholders: str) -> Column:
+    """The row's var-dict IDs in order: the ``encoded_vars`` slots whose
+    placeholder is the dictionary byte."""
+    slots = F.zip_with(
+        encoded_vars, placeholders, lambda v, p: F.when(p == PLACEHOLDER_DICT, v)
+    )
+    return F.filter(slots, lambda v: v.isNotNull())
 
 
 def decode(
@@ -277,7 +300,10 @@ def decode(
 ) -> DataFrame:
     """Inverse of :func:`encode` — reconstruct the original message
     (clp/EncodedVariableInterpreter.cpp:298-367). Used by the roundtrip
-    equality gate and the decompress-to-text sink.
+    equality gate and the decompress-to-text sink. ``encoded`` needs
+    ``logtype_id`` and ``encoded_vars`` only: each variable's type is its
+    unescaped placeholder byte in the logtype, so rows of archives that
+    still carry a ``var_types`` column decode the same.
 
     One rule picks the path: a var dictionary with a driver copy
     (dictionaries.driver_copy) decodes through its broadcast map, fused
@@ -295,11 +321,10 @@ def decode(
     instead of shipping the full dictionary. Leave False for full-corpus
     decodes, where "needed" IS the whole dictionary and the slimming pass
     would just add work."""
-    df = encoded.join(F.broadcast(logtype_dict), "logtype_id")
-    pairs = F.filter(
-        F.arrays_zip("encoded_vars", "var_types"), lambda s: s["var_types"] == VT_DICT
-    )
-    dict_ids = F.transform(pairs, lambda s: s["encoded_vars"])
+    # placeholder bytes scanned once per logtype, on the broadcast side
+    logtypes = logtype_dict.withColumn("_placeholders", _placeholders("logtype"))
+    df = encoded.join(F.broadcast(logtypes), "logtype_id")
+    dict_ids = _dict_var_ids("encoded_vars", "_placeholders")
 
     copy = dictionaries.driver_copy(var_dict)
     if copy is None and slim_to_needed:
@@ -317,10 +342,10 @@ def decode(
 
         return df.withColumn(
             out_col, _decode_map_udf(F.col("logtype"), F.col("encoded_vars"))
-        )
+        ).drop("_placeholders")
 
     df = _lookup_join(
-        df.withColumn("_dict_ids", dict_ids), key_cols, var_dict,
+        df.withColumn("_dict_ids", dict_ids).drop("_placeholders"), key_cols, var_dict,
         "_dict_ids", "dict_strs", on="var_id",
     )
 

@@ -27,6 +27,16 @@ from clp_core_spark.plans.tablestore import TableStore
 SINK_KINDS = ("role", "tool", "logtype_class")
 NULL_KEY = "__null__"  # the partition value of rows whose sink key is null
 ORDER_COLS = ("conv_id", "turn_idx")
+# The sink files' parquet writer settings: v2 data pages, and no
+# dictionary for the sort keys' numeric columns, so ``ts`` and ``turn_idx``
+# take DELTA_BINARY_PACKED over the ORDER_COLS order each file is sorted
+# by (CLP delta-codes its sorted timestamp column the same way). The
+# parquet writer's own options; the Iceberg branch of TableStore ignores them.
+SINK_PARQUET_OPTIONS = {
+    "parquet.writer.version": "v2",
+    "parquet.enable.dictionary#ts": "false",
+    "parquet.enable.dictionary#turn_idx": "false",
+}
 
 
 def with_logtype_class(df: DataFrame, logtype_col: str = "logtype") -> DataFrame:
@@ -88,7 +98,7 @@ def write_sink(
     cols = [*scope, kind]
     out = df.withColumn(kind, F.coalesce(F.col(kind), F.lit(NULL_KEY)))
     out = _rebalanced(out, cols).sortWithinPartitions(*cols, *ORDER_COLS)
-    store.overwrite_partitions(out, f"by_{kind}", cols)
+    store.overwrite_partitions(out, f"by_{kind}", cols, SINK_PARQUET_OPTIONS)
 
 
 def write_sinks(

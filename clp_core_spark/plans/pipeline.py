@@ -52,6 +52,12 @@ LEDGER_SCHEMA = (
     " tags array<string>"
 )
 _UNIX_EPOCH = datetime(1970, 1, 1, tzinfo=timezone.utc)
+# The columns every sink row has: the schema of a sink that has no data
+# file, as after an ingest of no rows.
+_BARE_SINK_SCHEMA = (
+    "conv_id string, turn_idx int, ts timestamp, logtype_id long,"
+    " encoded_vars array<long>"
+)
 
 
 def _utc(micros: int | None) -> datetime | None:
@@ -653,9 +659,16 @@ class IngestPipeline:
         of the archive-open state: the same DataFrame until the version
         changes."""
         pf = {"epoch_part": epochs} if epochs is not None else None
+
+        def build() -> DataFrame:
+            df = self.store.read(f"by_{kind}", partition_filter=pf)
+            if df is None:  # no data file, as after an ingest of no rows
+                schema = f"{_BARE_SINK_SCHEMA}, epoch_part int, {kind} string"
+                return local_table(self.spark, [], schema)
+            return df
+
         return self._opened(
-            ("sink", kind, None if epochs is None else tuple(epochs)),
-            lambda: self.store.read(f"by_{kind}", partition_filter=pf),
+            ("sink", kind, None if epochs is None else tuple(epochs)), build
         )
 
     def search(

@@ -11,6 +11,10 @@ share the same tuning:
   decode kernels are pandas UDFs.
 * Parquet zstd — mirrors CLP's zstd segment compression
   (components/core/src/clp/streaming_compression/zstd/).
+* Parquet timestamps as INT64 microseconds, CLP's int64 message
+  timestamp: Spark's legacy INT96 default takes 12 bytes a value and
+  admits no delta coding. Spark timestamps are microseconds, so nothing
+  is lost; a reader takes either encoding file by file.
 
 :func:`local_table` is the one way product code turns driver-held rows
 into a DataFrame, through :func:`arrow_table`, which also builds the
@@ -69,6 +73,7 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_BROADCAST_THRESHOLD", str(64 * 1024 * 1024)),
         )
         .config("spark.sql.parquet.compression.codec", "zstd")
+        .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))

@@ -57,7 +57,7 @@ def main() -> None:
     # groups by logtype for a further ratio win. Same here: cluster rows
     # before writing so parquet RLE/dict encodings see the locality.
     (
-        enc.select("conv_id", "turn_idx", "logtype_id", "encoded_vars", "var_types")
+        enc.select("conv_id", "turn_idx", "logtype_id", "encoded_vars")
         .repartitionByRange(8, "logtype_id", "conv_id", "turn_idx")
         .sortWithinPartitions("logtype_id", "conv_id", "turn_idx")
         .write.parquet(f"{WORK}/encoded")

@@ -14,7 +14,29 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().optimizedPlan().toString()
 
 
+# Texts whose logtypes escape the placeholder bytes and the backslash,
+# next to variables of every type: a variable's type is read from the
+# logtype's unescaped placeholder bytes, so an escaped byte must not
+# count as one.
+EDGE_TEXTS = [
+    "ctl \x11 next to 42 and \x12x=abc1 \x13 3.5",
+    "path C:\\dir\\file9 val=\\\x12 id=\x1177 k=v2",
+    "backslash\\ 12\\34 \\\x11 user=bob\\ 0.25\\",
+    "\x11\x12\x13 only=control \\\\\x13 9",
+    "tail \\\\ 7 \\",
+]
+
+
+def _with_edge_rows(spark, transcripts):
+    from datetime import datetime, timezone
+
+    ts = datetime(2016, 5, 8, tzinfo=timezone.utc)
+    rows = [("edge", i, "user", t, None, ts) for i, t in enumerate(EDGE_TEXTS)]
+    return transcripts.unionByName(spark.createDataFrame(rows, transcripts.schema))
+
+
 def test_encode_decode_roundtrip(spark, transcripts, monkeypatch):
+    transcripts = _with_edge_rows(spark, transcripts)
     encoded, logtype_dict, var_dict = encode_pipeline.encode(
         transcripts, key_cols=KEYS, keep_text=True
     )
@@ -37,6 +59,18 @@ def test_encode_decode_roundtrip(spark, transcripts, monkeypatch):
     )
     assert diff.limit(5).collect() == []
     assert joined.count() == transcripts.count()
+
+    # a residue decoded with slim_to_needed (search's verify): the var
+    # dictionary slimmed to the residue's dict IDs gets a driver copy
+    residue = encoded.where(F.col("conv_id") == "edge")
+    monkeypatch.setattr(dictionaries, "BROADCAST_VAR_DICT_MAX", 100)
+    assert var_dict.count() > 100
+    slim = encode_pipeline.decode(
+        residue, logtype_dict, var_dict.select("*"), key_cols=KEYS, slim_to_needed=True
+    )
+    assert "posexplode" not in _plan(slim)
+    got = {r["turn_idx"]: r["decoded_text"] for r in slim.collect()}
+    assert got == dict(enumerate(EDGE_TEXTS))
 
 
 def test_decode_opens_a_var_dict_with_one_job(spark, tmp_path):

@@ -5,6 +5,7 @@ several write tasks, and the layout does not follow the session's
 advisory partition size."""
 
 import glob
+import json
 import os
 import re
 from collections import Counter
@@ -63,6 +64,28 @@ def test_stream_sink_files_are_sorted_on_shuffled_input(spark, transcripts, tmp_
         rows = pq.read_table(f, columns=["conv_id", "turn_idx"]).to_pylist()
         keys = [(r["conv_id"], r["turn_idx"]) for r in rows]
         assert keys == sorted(keys), f
+
+
+def test_sink_files_store_the_message_record(shuffled_ingest):
+    """Every sink file holds ``ts`` as INT64 TIMESTAMP(us), delta-codes
+    ``ts`` and ``turn_idx`` along the sort order, and has no per-row type
+    or count column (the logtype's placeholders give both)."""
+    root, _ = shuffled_ingest
+    files = glob.glob(f"{root}/sinks/by_*/**/*.parquet", recursive=True)
+    assert files
+    for f in files:
+        md = pq.read_metadata(f)
+        leaves = {md.schema.column(i).path: md.schema.column(i) for i in range(md.num_columns)}
+        assert not {"var_types.list.element", "n_vars"} & set(leaves), f
+        ts = leaves["ts"]
+        assert ts.physical_type == "INT64", f
+        logical = json.loads(ts.logical_type.to_json())
+        assert (logical["Type"], logical["timeUnit"]) == ("Timestamp", "microseconds"), f
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            enc = {rg.column(i).path_in_schema: rg.column(i).encodings for i in range(rg.num_columns)}
+            assert enc["ts"] == ("DELTA_BINARY_PACKED",), (f, enc["ts"])
+            assert enc["turn_idx"] == ("DELTA_BINARY_PACKED",), (f, enc["turn_idx"])
 
 
 def _write_nodes(plan: str) -> list[tuple[str, str]]:
